@@ -184,11 +184,6 @@ def main(argv: list[str] | None = None) -> int:
         help="rewrite every pid group (default: only groups holding deltas)",
     )
     c.add_argument(
-        "--preserve-patches", action="store_true",
-        help="compatibility alias: compaction now always finalizes "
-        "partial-image generations exactly (per-column _colseq state)",
-    )
-    c.add_argument(
         "--drop-orphan-patches", action="store_true",
         help="discard patches whose key has no full image yet (the only "
         "remaining patch debt after an exact finalize; clears the way for "
@@ -235,12 +230,6 @@ def main(argv: list[str] | None = None) -> int:
     )
     mt.add_argument("--min-age", type=float, default=3600.0,
                     help="orphan-GC age guard in seconds")
-    mt.add_argument(
-        "--preserve-patches", action="store_true",
-        help="compatibility alias: compaction now always finalizes "
-        "partial-image generations exactly (per-column _colseq state), so "
-        "this flag changes nothing",
-    )
     mt.add_argument(
         "--drop-orphan-patches", action="store_true",
         help="discard patches whose key has no full image yet (the only "
@@ -868,7 +857,6 @@ def _dispatch(spark, args) -> int:
         before = len(table.snapshot().files)
         m = table.compact(
             full=args.full,
-            preserve_patches=args.preserve_patches,
             drop_orphan_patches=args.drop_orphan_patches,
             sort_columns=(
                 [c.strip() for c in args.sort_columns.split(",") if c.strip()]
@@ -895,7 +883,6 @@ def _dispatch(spark, args) -> int:
         table = LakeTable(spark, args.table)
         before = len(table.snapshot().files)
         m = table.compact(
-            preserve_patches=args.preserve_patches,
             drop_orphan_patches=args.drop_orphan_patches,
             sort_columns=(
                 [c.strip() for c in args.sort_columns.split(",") if c.strip()]

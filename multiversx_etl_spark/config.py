@@ -71,9 +71,6 @@ class WorkerConfig:
     num_buckets: int = 16
     mode: str = "mor"
     compact_every: int | None = None
-    #: compatibility alias — mid-stream compactions now always finalize
-    #: partial-image generations exactly (per-column _colseq state)
-    compact_preserve_patches: bool = False
     max_files_per_trigger: int = 4
     trigger_interval: str | None = None
     fail_on_counts_mismatch: bool = True
@@ -178,7 +175,7 @@ _REQUIRED = ("table_root", "log_path")
 _KNOWN = {
     "table_root", "log_path", "name", "schema", "normalizer", "stream_id",
     "interval_size", "num_buckets", "mode", "compact_every",
-    "compact_preserve_patches", "max_files_per_trigger", "trigger_interval",
+    "max_files_per_trigger", "trigger_interval",
     "fail_on_counts_mismatch", "counts_checks_errata", "layout", "fold",
     "processing", "schema_folder", "stat_columns", "description",
     "clustering", "promote_to", "log_format",
@@ -618,7 +615,6 @@ def run_from_config(spark, cfg: "WorkerConfig | MultiWorkerConfig",
             max_files_per_trigger=cfg.max_files_per_trigger,
             mode=cfg.mode,
             compact_every=cfg.compact_every,
-            compact_preserve_patches=cfg.compact_preserve_patches,
             trigger_interval=cfg.trigger_interval,
             normalizer=normalizer,
             log_schema=log_schema,
@@ -671,7 +667,6 @@ def run_from_config(spark, cfg: "WorkerConfig | MultiWorkerConfig",
             stream_id=cfg.stream_id,
             mode=cfg.mode,
             compact_every=cfg.compact_every,
-            compact_preserve_patches=cfg.compact_preserve_patches,
             normalizer=normalizer,
             fold=fold,
         )
@@ -844,7 +839,6 @@ def stream_with_config_reload(
             max_files_per_trigger=cfg.max_files_per_trigger,
             mode=cfg.mode,
             compact_every=cfg.compact_every,
-            compact_preserve_patches=cfg.compact_preserve_patches,
             trigger_interval=cfg.trigger_interval,
             normalizer=normalizer,
             log_schema=log_schema,

@@ -434,7 +434,12 @@ class Manifest:
             digest = hashlib.sha256(body.encode()).hexdigest()[:32]
             rel = os.path.join(_MANIFEST_DIR, _GROUP_DIR, f"g-{digest}.json")
             full = os.path.join(root, rel)
-            if not os.path.exists(full):
+            try:
+                # a reused doc gets a fresh mtime: gc_orphan_files deletes
+                # unreferenced docs by age, and the commit about to
+                # reference this one has not landed yet
+                os.utime(full)
+            except FileNotFoundError:
                 if not made:
                     os.makedirs(gdir, exist_ok=True)
                     made = True
@@ -1691,7 +1696,6 @@ class LakeTable:
     def compact(
         self,
         full: bool = False,
-        preserve_patches: bool = False,
         drop_orphan_patches: bool = False,
         sort_columns: list[str] | None = None,
         max_records_per_file: int | None = None,
@@ -1722,9 +1726,7 @@ class LakeTable:
         re-finalized once their base arrives; ``drop_orphan_patches=True``
         discards them instead (e.g. past a known lateness bound — they are
         the only remaining patch debt, and clearing it re-legalizes
-        copy-on-write merges). ``preserve_patches`` is retained for
-        compatibility: the exactness it used to buy is now unconditional,
-        so it is an alias for the default behavior.
+        copy-on-write merges).
 
         ``sort_columns`` declares the table's CLUSTERING (Iceberg analog:
         ``ALTER TABLE ... WRITE ORDERED BY`` + a sorted rewrite). Default is
@@ -1752,7 +1754,6 @@ class LakeTable:
         between maintenance you can cron and maintenance that needs an
         ingest outage: a multi-minute rewrite will essentially always race
         a micro-batch stream."""
-        del preserve_patches  # superseded: finalization is always exact now
         for _attempt in range(3):
             out = self._compact_once(
                 full=full,
@@ -2129,7 +2130,6 @@ class LakeTable:
     def rebucket(
         self,
         new_buckets: int,
-        preserve_patches: bool = False,
         drop_orphan_patches: bool = False,
     ) -> Manifest:
         """Bucket-layout evolution: rewrite the table into a different
@@ -2158,8 +2158,7 @@ class LakeTable:
         per-column ``_colseq`` map under the new layout, orphan patches are
         rewritten as generations (``drop_orphan_patches=True`` discards
         them), and a full image arriving later than the rewrite still folds
-        per-column correctly. ``preserve_patches`` is a compatibility
-        alias: the exactness it used to buy is now unconditional.
+        per-column correctly.
 
         ONLINE like ``compact``, but by full retry, never rebase: a
         concurrent merge's delta files are bucket-aligned under the OLD
@@ -2169,7 +2168,6 @@ class LakeTable:
         the fresh snapshot instead (at most 3 attempts). The abandoned
         attempt's files are crash-orphan-shaped; ``gc_orphan_files``
         reclaims them."""
-        del preserve_patches  # superseded: finalization is always exact now
         if new_buckets < 1:
             raise ValueError(f"new_buckets must be >= 1, got {new_buckets}")
         for _attempt in range(3):

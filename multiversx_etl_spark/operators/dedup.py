@@ -90,32 +90,3 @@ def top_k_per_group(
     w = Window.partitionBy(*group_columns).orderBy(order)
     return df.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
 
-
-def combine_partitions_latest(
-    df: DataFrame, key_columns: list[str], order_column: str = "seq"
-) -> DataFrame:
-    """Partition-LOCAL pre-reduction: keep each input partition's max-seq row
-    per key, with NO shuffle (mapInPandas preserves partitioning) — a manual
-    map-side combine for the merge aggregate, which otherwise performs no
-    partial aggregation before the explicit bucket exchange (max-over-struct
-    plans a SortAggregate whose partial phase sits above our repartition).
-
-    Use when batches are heavily duplicated or a single key is pathologically
-    hot: post-combine, each shuffle partition receives at most one row per
-    (input partition x key). Arrow-batched pandas (sort_values +
-    drop_duplicates — C-speed), never per-row Python. Opt-in: for low-dup
-    batches the Arrow round-trip costs more than it saves.
-    """
-    schema = df.schema
-
-    def reduce_part(batches):
-        import pandas as pd
-
-        parts = list(batches)
-        if not parts:
-            return
-        pdf = pd.concat(parts, ignore_index=True) if len(parts) > 1 else parts[0]
-        pdf = pdf.sort_values(order_column, kind="stable")
-        yield pdf.drop_duplicates(subset=key_columns, keep="last")
-
-    return df.mapInPandas(reduce_part, schema)

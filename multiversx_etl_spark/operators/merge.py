@@ -34,11 +34,17 @@ Shared physical plan:
    the key and appears in the grouping keys, the explicit
    HashPartitioning(_bucket) satisfies the aggregate's required distribution
    — no second exchange — and the bucket-aligned file write consumes the
-   same partitioning (zero further shuffles).
+   same partitioning (zero further shuffles). Partial-image (op='patch')
+   change rows ride the same aggregate without competing for the winner:
+   each key collects its patches, deduplicated per seq, in a list column.
 3. **merge stats in the same pass**: the per-key target winner (max-seq
    target struct) rides along, classifying each output row as
    insert/update/delete/carry for the lineage ledger (A17/A24 analogs)
    without a second scan.
+4. **one write**: the winner row (unless it is a carry) and the key's
+   patch generations leave through one ``inline`` into the same
+   bucket-aligned write, so an epoch — patches or not — costs one
+   Exchange, one scan of the batch and one ``write_data_files`` job.
 
 Idempotence: re-applying the same batch yields seq ties, resolved as 'carry'
 (no-op) — a replayed MERGE changes nothing (the epoch marker normally
@@ -215,7 +221,6 @@ def merge_batch(
     mode: str = "mor",
     in_counts: dict[int, int] | None = None,
     patch_count: int | None = None,
-    map_side_combine: bool = False,
     pre_commit: "Callable[[MergeStats], None] | None" = None,
     marker_mode: str = "contiguous",
     tag_suffix: str = "",
@@ -236,8 +241,9 @@ def merge_batch(
     ``fold`` picks the fold's physical shape:
 
     - ``'union'`` (default): union target+changes, ONE shuffle, ONE hash
-      aggregate (module docstring step 2). Works with every layout and
-      mode, handles patches.
+      aggregate, ONE write (module docstring steps 2 and 4). Works with
+      every layout and mode; partial-image patch generations leave
+      through the same aggregate and write as the per-key winners.
     - ``'join'``: the ZERO-EXCHANGE fold for ``layout='spark'`` MOR tables
       fed from a Spark catalog BUCKETED log table: dedup the change side
       with a partition-local aggregate, fold the (narrow, catalog-staged)
@@ -264,7 +270,7 @@ def merge_batch(
 
     # -- 1. rows_in per bucket + touched-bucket set (one tiny agg job,
     #    unless the caller precounted; the same agg counts partial-image
-    #    'patch' rows, which take the pass-through path below).
+    #    'patch' rows, which the fold below writes as generations).
     may_patch = "op" in changes.columns
     if in_counts is None:
         with _phase("in_counts"):
@@ -298,14 +304,15 @@ def merge_batch(
     ]
 
     # Partial-image events (op='patch', Debezium-style: NULL payload =
-    # keep the stored value) take a PASS-THROUGH path: they are appended
-    # as their own generations — never folded into the per-key winner,
-    # which would null out the columns they meant to keep — and the
-    # read-time fold resolves them per COLUMN (lake/table.py). Exact
-    # column-level LWW under arbitrary reordering requires keeping each
-    # patch's own writer seq: merge-on-read generations carry it
-    # naturally, and compact() collapses it losslessly into the hidden
-    # _colseq map (lake/table.py _finalize_fold). Copy-on-write has no
+    # keep the stored value) are appended as their own generations —
+    # never folded into the per-key winner, which would null out the
+    # columns they meant to keep (the union fold's aggregate carries them
+    # beside it) — and the read-time fold resolves them per COLUMN
+    # (lake/table.py). Exact column-level LWW under arbitrary reordering
+    # requires keeping each patch's own writer seq: merge-on-read
+    # generations carry it naturally, and compact() collapses it
+    # losslessly into the hidden _colseq map (lake/table.py
+    # _finalize_fold). Copy-on-write has no
     # generation storage for ORPHAN patches (a patch to a key with no
     # full image cannot become a row), so cow + incoming patches is
     # refused rather than silently dropped.
@@ -315,16 +322,13 @@ def merge_batch(
     # generations the read fold resolves per column, and COW takes the
     # per-column-aware fold below — both stay exact.
     cow_colseq = mode == "cow" and int(parent.properties.get("colseq", 0)) > 0
-    patches = None
-    if patch_count:
-        if mode != "mor":
-            raise ValueError(
-                "partial-image (op='patch') events require mode='mor': "
-                "copy-on-write has no generation storage for orphan patches"
-            )
-        patches = changes.where(F.col("op") == "patch")
-        changes = changes.where(F.col("op") != "patch")
-    elif patch_outstanding and mode != "mor":
+    has_patches = bool(patch_count)
+    if has_patches and mode != "mor":
+        raise ValueError(
+            "partial-image (op='patch') events require mode='mor': "
+            "copy-on-write has no generation storage for orphan patches"
+        )
+    if patch_outstanding and mode != "mor":
         raise ValueError(
             "table has outstanding patch generations (patch_deltas > 0): "
             "run compact() to finalize them (drop_orphan_patches=True if "
@@ -344,9 +348,11 @@ def merge_batch(
                 cols.append(F.col(p).cast(typ).alias(p))
             else:
                 cols.append(F.lit(None).cast(typ).alias(p))
-        # target patch GENERATIONS must not win the full-image fold (they
-        # are partial) — change-side patches were already split out above
-        if not is_change and "_action" in df.columns:
+        # patches (target generations and change-side events alike) must
+        # not win the full-image fold: they are partial
+        if is_change and has_patches:
+            cols.append((F.col("op") == "patch").alias("_is_patch"))
+        elif not is_change and "_action" in df.columns:
             cols.append(
                 F.coalesce(F.col("_action") == "patch", F.lit(False)).alias("_is_patch")
             )
@@ -369,7 +375,7 @@ def merge_batch(
     # rows under a plain equi-join would mis-ledger (table state would stay
     # exact — the MOR read fold resolves per key regardless — but A17
     # reconciliation must be exact too). Both are detected, never assumed.
-    if fold == "join" and (patches is not None or patch_outstanding):
+    if fold == "join" and (has_patches or patch_outstanding):
         fold = "union"
     if fold == "join":
         if null_key_count is None:
@@ -417,14 +423,6 @@ def merge_batch(
                 keep = [*key, "seq", "deleted"] + (["_action"] if patch_outstanding else [])
                 target = target.select(*keep)
             target = target.withColumn("_bucket", parent.bucket_expr())
-            if map_side_combine:
-                # partition-local pre-reduction of the change side (hot keys
-                # / heavy duplication): each shuffle partition then receives
-                # at most one row per (input partition x key). Opt-in —
-                # costs an Arrow round-trip.
-                from multiversx_etl_spark.operators.dedup import combine_partitions_latest
-
-                changes = combine_partitions_latest(changes, key)
             both = aligned(target, False).unionByName(aligned(changes, True))
 
             if cow_colseq:
@@ -496,25 +494,60 @@ def merge_batch(
                 #    generation was live") decides prior liveness, which
                 #    matters when several MOR generations of a key are
                 #    present.
+                #    Change-side patches ride the same aggregate as the
+                #    key's ``_pl`` list: one partial generation per
+                #    distinct (key, seq), so each keeps its own per-column
+                #    writer seq for the read fold (lake/table.py).
                 wstruct = F.struct("seq", "_is_change", "deleted", *payload, "_bucket")
-                not_patch = ~F.col("_is_patch")
+                is_change, is_patch = F.col("_is_change"), F.col("_is_patch")
+                aggs = [
+                    F.max(F.when(~is_patch, wstruct)).alias("_w"),
+                    F.max(
+                        F.when(~is_change & ~is_patch, F.struct("seq", "deleted"))
+                    ).alias("_tw"),
+                    F.count(F.when(is_change & ~is_patch, 1)).alias("_cn"),
+                ]
+                # a key whose only generations are (orphan) patch partials
+                # has no full-image winner: nothing to classify — the read
+                # fold likewise hides such keys — but its new patches are
+                # still written
+                keep = F.col("_w").isNotNull()
+                if has_patches:
+                    # an all-NULL patch is a no-op: drop it (and with NO
+                    # payload columns at all, every patch is one)
+                    some_payload = F.lit(False)
+                    for p in payload:
+                        some_payload = some_payload | F.col(p).isNotNull()
+                    aggs.append(
+                        F.array_sort(
+                            F.collect_list(
+                                F.when(
+                                    is_change & is_patch & some_payload,
+                                    F.struct("seq", *payload),
+                                )
+                            )
+                        ).alias("_pl")
+                    )
+                    keep = keep | (F.size("_pl") > 0)
                 merged = (
                     repartition_for_write(both, parent.num_buckets, key, parent.layout)
                     .groupBy(*key, "_bucket")
-                    .agg(
-                        F.max(F.when(not_patch, wstruct)).alias("_w"),
-                        F.max(
-                            F.when(~F.col("_is_change") & not_patch, F.struct("seq", "deleted"))
-                        ).alias("_tw"),
-                        F.count(F.when(F.col("_is_change"), 1)).alias("_cn"),
-                    )
-                    # a key whose only generations are (orphan) patch
-                    # partials has no full-image winner: nothing to
-                    # classify or write — the read fold likewise drops
-                    # such keys
-                    .where(F.col("_w").isNotNull())
+                    .agg(*aggs)
+                    .where(keep)
                 )
-            won_change = F.col("_w._is_change")
+                if has_patches:
+                    # exact redeliveries collapse per (key, seq): the list is
+                    # sorted, so the LAST entry of each seq run is its max
+                    # struct
+                    pl = F.col("_pl")
+
+                    def last_of_seq(e, i):
+                        nxt = F.when(i + 1 < F.size(pl), F.element_at(pl, i + 2)["seq"])
+                        return F.coalesce(e["seq"] != nxt, F.lit(True))
+
+                    merged = merged.withColumn("_pl", F.filter(pl, last_of_seq))
+            # NULL winner = patch-only key: classified 'carry' (not written)
+            won_change = F.coalesce(F.col("_w._is_change"), F.lit(False))
         was_live = F.col("_tw").isNotNull() & ~F.col("_tw.deleted")
         action = (
             F.when(~won_change, F.lit("carry"))
@@ -534,6 +567,7 @@ def merge_batch(
             F.col("_bucket"),
             action.alias("_action"),
             F.col("_cn"),
+            *([F.col("_pl")] if has_patches else []),
         )
 
         # -- 4. write. ``_action``/``_cn``/``_bucket`` are written INTO the
@@ -545,7 +579,8 @@ def merge_batch(
         #    ledger stats are then a narrow read-back of ONLY the
         #    just-written files — no second pass over the inputs, no cache,
         #    and the ledger is derived from the durable output itself
-        #    (self-auditing).
+        #    (self-auditing). Patch generations are written in the same
+        #    files as the winners (module docstring step 4).
         out_cols = [*key, *payload, "seq", "deleted", "_action", "_cn", "_bucket"]
         if cow_colseq:
             # rewritten groups keep per-column writer seqs (carries keep
@@ -561,8 +596,25 @@ def merge_batch(
             # change-side distinct keys (carries included — the pre-filter
             # node sees every merged row, fixing the MOR undercount)
             F.sum(F.when(F.col("_cn") >= 1, 1).otherwise(0)).alias("dedup"),
+            *([F.sum(F.size("_pl")).alias("pat")] if has_patches else []),
         )
         if mode == "mor":
+            if has_patches:
+                # one row per key (its winner) plus one PARTIAL generation
+                # per deduplicated patch; Generate is a narrow operator, so
+                # the rows stay in the aggregate's bucket partition. Patch
+                # rows carry _cn = 0: the ledger's per-bucket deduped count
+                # is of full-image keys.
+                def patch_row(e):
+                    val = {c: F.col(c) for c in (*key, "_bucket")}
+                    val.update({c: e[c] for c in (*payload, "seq")})
+                    val.update(deleted=F.lit(False), _action=F.lit("patch"),
+                               _cn=F.lit(0).cast("long"))
+                    return F.struct(*[val[c].alias(c) for c in out_cols])
+
+                merged = merged.select(F.inline(F.concat(
+                    F.array(F.struct(*out_cols)), F.transform("_pl", patch_row)
+                )))
             # Only the delta rows are written; 'carry' (target won / seq
             # tie) rewrites nothing. Appended files join the fold at read
             # time.
@@ -588,50 +640,12 @@ def merge_batch(
         for f in new_files:
             f["base"] = mode == "cow"
 
-        # Patch pass-through write: one PARTIAL generation per original
-        # patch event (per-column seqs preserved exactly — see the split
-        # above), exact redeliveries within the batch collapsed by (key,
-        # seq). Same bucket-aligned plain-file write as the main path,
-        # separate tag, one atomic commit for both.
-        patch_files: list[dict] = []
-        if patches is not None:
-            ap = aligned(patches, True)
-            # an all-NULL patch is a no-op: drop it (and with NO payload
-            # columns at all, every patch is one — F.lit(False), not a None
-            # condition)
-            some_payload = F.lit(False)
-            for p in payload:
-                some_payload = some_payload | F.col(p).isNotNull()
-            deduped = (
-                repartition_for_write(
-                    ap.where(some_payload), parent.num_buckets, key, parent.layout
-                )
-                .groupBy(*key, "seq", "_bucket")
-                .agg(F.max(F.struct(*payload)).alias("_pw"), F.count("*").alias("_cn"))
-                .select(
-                    *key,
-                    *[F.col(f"_pw.{p}").alias(p) for p in payload],
-                    "seq",
-                    F.lit(False).alias("deleted"),
-                    F.lit("patch").alias("_action"),
-                    F.col("_cn"),
-                    F.col("_bucket"),
-                )
-            )
-            with _phase("patch_write"):
-                patch_files = table.write_data_files(
-                    deduped.select(*out_cols), f"{tag}-p",
-                    bucket_aligned=True, keep_bucket=True,
-                )
-            for f in patch_files:
-                f["base"] = False
-            stats.rows_patched = sum(f["rows"] for f in patch_files)
-
     metrics = obs.get
     stats.rows_inserted = int(metrics["ins"] or 0)
     stats.rows_updated = int(metrics["upd"] or 0)
     stats.rows_deleted = int(metrics["del"] or 0)
     stats.rows_deduped = int(metrics["dedup"] or 0)
+    stats.rows_patched = int(metrics.get("pat") or 0)
     # (fold-arming properties are computed inside the commit loop below —
     # their arithmetic is relative to whichever parent the commit lands on)
 
@@ -699,21 +713,21 @@ def merge_batch(
         # an all-carry MOR batch adds no delta files: don't arm the
         # read-time fold for nothing (and COW never sets the counter)
         props = None
-        if mode == "mor" and (new_files or patch_files):
+        if mode == "mor" and new_files:
             props = {
                 "mor_appends": int(
                     commit_parent.properties.get("mor_appends", 0)
                 )
                 + 1
             }
-            if patch_files:
+            if stats.rows_patched:
                 props["patch_deltas"] = (
                     int(commit_parent.properties.get("patch_deltas", 0))
                     + stats.rows_patched
                 )
         try:
             table.commit(
-                new_files + patch_files,
+                new_files,
                 replaced_pids,
                 f"merge-{mode}",
                 stream_id,

@@ -218,7 +218,6 @@ def replay(
     on_epoch: Callable[[int, MergeStats], None] | None = None,
     mode: str = "mor",
     compact_every: int | None = None,
-    compact_preserve_patches: bool = False,
     normalizer: Callable[[DataFrame], DataFrame] | None = None,
     fold: str = "union",
 ) -> ReplaySummary:
@@ -236,9 +235,7 @@ def replay(
     Mid-stream compactions finalize partial-image generations EXACTLY
     (contested patch columns collapse into the per-column ``_colseq`` map —
     lake/table.py ``_finalize_fold`` — so full images arriving later than
-    the compaction cadence still fold per-column correctly);
-    ``compact_preserve_patches`` is a compatibility alias, the exactness it
-    used to buy is now unconditional.
+    the compaction cadence still fold per-column correctly).
     ``normalizer`` overrides the per-table transformer (normalize.REGISTRY
     dispatch — the reference's per-index transformers); default is the
     ``change_events`` normalization.
@@ -311,7 +308,7 @@ def replay(
         summary.epochs_run += 1
         if compact_every and summary.epochs_run % compact_every == 0:
             with _phase("compact"):
-                table.compact(preserve_patches=compact_preserve_patches)
+                table.compact()
         summary.rows_in += stats.rows_in
         summary.rows_inserted += stats.rows_inserted
         summary.rows_updated += stats.rows_updated
@@ -331,7 +328,6 @@ def stream_ingest(
     max_files_per_trigger: int = 4,
     mode: str = "mor",
     compact_every: int | None = None,
-    compact_preserve_patches: bool = False,
     trigger_interval: str | None = None,
     normalizer: Callable[[DataFrame], DataFrame] | None = None,
     log_schema=None,
@@ -514,7 +510,7 @@ def stream_ingest(
             if staged is not None:
                 staged.__exit__(None, None, None)
         if compact_every and (epoch_id + 1) % compact_every == 0:
-            table.compact(preserve_patches=compact_preserve_patches)
+            table.compact()
 
     writer = src.writeStream.foreachBatch(handle).option(
         "checkpointLocation", checkpoint_dir

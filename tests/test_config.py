@@ -195,7 +195,7 @@ def test_run_from_config_end_to_end(spark, tmp_path):
 def test_patching_table_through_config(spark, tmp_path):
     """VERDICT r03 #6: the worker-config surface exercises column-level LWW
     — a multi-table config where one table's log carries partial-image
-    'patch' events, with preserve-mode mid-stream compaction, reconciles
+    'patch' events, with finalizing mid-stream compaction, reconciles
     green (the oracle folds patches per column)."""
     from multiversx_etl_spark.sources.changelog import (
         generate_change_log,
@@ -216,8 +216,7 @@ def test_patching_table_through_config(spark, tmp_path):
         "num_buckets": 4,
         "tables": [
             {"name": "repos", "table_root": str(tmp_path / "tr"),
-             "log_path": repos_log, "compact_every": 2,
-             "compact_preserve_patches": True},
+             "log_path": repos_log, "compact_every": 2},
             {"name": "commits", "table_root": str(tmp_path / "tc"),
              "log_path": commits_log, "schema": "commits",
              "normalizer": "commit_events", "stream_id": "commits"},

@@ -236,6 +236,24 @@ def test_gc_orphan_files_sweeps_stale_group_docs(spark, tmp_path):
     assert table.read().count() == 1
 
 
+def test_reused_group_doc_mtime_refreshed(spark, tmp_path):
+    """A commit that seals to an EXISTING content-addressed group doc must
+    refresh its mtime: between the seal and the root swap the doc is
+    referenced by no manifest, so an age-based gc_orphan_files would
+    otherwise delete it from under the in-flight commit."""
+    table = _mk(spark, tmp_path / "t")
+    fs = _write_rows(spark, table, [(1, 0, False, "x")], "seed")
+    table.commit(fs, replaced_pids=set(), operation="merge-seed")
+    (ref,) = _root_doc(table)["groups"]
+    doc = os.path.join(table.root, ref["path"])
+    old = time.time() - 7200
+    os.utime(doc, (old, old))
+    # the same files again: the pid's group seals to the same content hash
+    table.commit(fs, replaced_pids={ref["pid"]}, operation="merge-redo")
+    assert _root_doc(table)["groups"][0]["path"] == ref["path"]
+    assert os.path.getmtime(doc) > old + 3600
+
+
 def test_added_files_skips_identical_refs(spark, tmp_path):
     table = _mk(spark, tmp_path / "t")
     f1 = _write_rows(

@@ -94,20 +94,6 @@ def test_merge_after_compaction_continues(spark, mor_log, tmp_path):
     assert _state(t_a) == _state(t_b)
 
 
-def test_map_side_combine_equivalent(spark, mor_log, tmp_path):
-    log = spark.read.parquet(mor_log)
-    from multiversx_etl_spark.operators.merge import merge_batch
-    import pyspark.sql.functions as FF
-
-    t_a = ensure_table(spark, str(tmp_path / "a"), num_buckets=8)
-    t_b = ensure_table(spark, str(tmp_path / "b"), num_buckets=8)
-    for e, lo in enumerate(range(0, 2100, 700)):
-        batch = log.where((FF.col("offset") >= lo) & (FF.col("offset") < lo + 700))
-        merge_batch(t_a, batch, "m", e, lo, lo + 700, map_side_combine=True)
-        merge_batch(t_b, batch, "m", e, lo, lo + 700)
-    assert _state(t_a) == _state(t_b)
-
-
 def test_staging_to_main_promotion(spark, tmp_path):
     """Load into a staging table, promote over main atomically (the
     reference's <table>_staging copy flow, bq_client.py:103-116): main's

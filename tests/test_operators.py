@@ -384,28 +384,6 @@ def test_top_k_per_group(spark):
     assert len([r for r in out if r["repo"] == "r2"]) == 1
 
 
-def test_combine_partitions_latest(spark):
-    from multiversx_etl_spark.operators.dedup import (
-        combine_partitions_latest,
-        dedup_latest,
-    )
-
-    df = _dup_log(spark).repartition(3)
-    combined = combine_partitions_latest(df, ["repo", "path"])
-    # partition-local only: may keep >1 row per key overall, but never loses
-    # the global winner, and a follow-up global dedup gives the exact answer
-    assert combined.count() <= df.count()
-    a = {
-        (r["repo"], r["path"], r["seq"])
-        for r in dedup_latest(combined, ["repo", "path"]).collect()
-    }
-    b = {
-        (r["repo"], r["path"], r["seq"])
-        for r in dedup_latest(df, ["repo", "path"]).collect()
-    }
-    assert a == b
-
-
 def test_canonicalize_expr_matches_arrow_udf(spark):
     """The JVM hot-path canonicalization must stay byte-equal to the Arrow
     pandas UDF template on line-ending and trailing-whitespace edge cases."""

@@ -180,8 +180,7 @@ def test_finalizing_compaction_exact_under_lateness(spark, tmp_path):
     r2 = table.read(raw=True).collect()[0]
     assert r2["seq"] == 3 and r2["_colseq"] == {"lang": 5}
     assert (r2["lang"], r2["content"], r2["commit"]) == ("go", "body3", "c3")
-    # preserve_patches is accepted as a compatibility alias (same behavior)
-    table.compact(preserve_patches=True)
+    table.compact()
     r3 = table.read().collect()[0]
     assert (r3["lang"], r3["content"], r3["seq"]) == ("go", "body3", 5)
 
@@ -395,8 +394,7 @@ def test_compaction_keeps_orphans(spark, tmp_path):
 
 def test_patch_rebucket_exact_under_lateness(spark, tmp_path):
     """rebucket finalizes contested patches into _colseq under the NEW
-    layout, and a late full image still folds per-column exactly
-    (preserve_patches accepted as a compatibility alias)."""
+    layout, and a late full image still folds per-column exactly."""
     from multiversx_etl_spark.schemas import CHANGE_EVENTS
     from multiversx_etl_spark.streaming.ingest import apply_epoch
 
@@ -406,7 +404,7 @@ def test_patch_rebucket_exact_under_lateness(spark, tmp_path):
         (1, 5, "patch", "r1", "p1", None, "go", None, None),
     ]
     apply_epoch(table, spark.createDataFrame(e0, CHANGE_EVENTS), "main", 0, 0, 2)
-    m = table.rebucket(16, preserve_patches=True)
+    m = table.rebucket(16)
     assert m.num_buckets == 16
     assert int(m.properties["patch_deltas"]) == 0  # contested patch absorbed
     assert int(m.properties["colseq"]) == 1
@@ -543,3 +541,82 @@ def test_colseq_schema_evolution_after_finalize(spark, tmp_path):
     assert r2["_colseq"] == {"lang": 7, "stars": 3} and r2["seq"] == 0
     r3 = table.read().collect()[0]
     assert (r3["lang"], r3["stars"], r3["seq"]) == ("go", "42", 7)
+
+
+def test_patch_heavy_epoch_one_exchange_one_write(spark, tmp_path, monkeypatch):
+    """A patch-bearing epoch costs ONE Exchange and ONE write job: patch
+    generations leave through the fold's aggregate beside the per-key
+    winners. The batch holds a hot key (60 patch rows, 10 of them exact
+    (key, seq) redeliveries), an orphan-only key, an all-NULL patch and a
+    patch tying a full image's seq; state, the rows_patched count and the
+    per-bucket ledger rows are all checked."""
+    import re
+
+    from multiversx_etl_spark.lake.table import LakeTable
+    from multiversx_etl_spark.operators import merge as merge_mod
+    from multiversx_etl_spark.schemas import CHANGE_EVENTS
+    from multiversx_etl_spark.streaming.ingest import apply_epoch
+
+    ev = []
+
+    def add(seq, op, repo, path, commit=None, lang=None, content=None):
+        ev.append((len(ev), seq, op, repo, path, commit, lang, content, None))
+
+    for i in range(12):
+        add(i, "insert", "r1", f"p{i}", f"c{i}", "python", f"body{i}")
+    add(0, "insert", "hot", "h", "c0", "python", "b0")
+    hot = [(s, None if s % 2 == 0 else f"l{s}", f"b{s}" if s % 2 == 0 else None)
+           for s in range(1, 51)]
+    for s, lang, content in hot + hot[4::5]:  # 50 patches + 10 redeliveries
+        add(s, "patch", "hot", "h", lang=lang, content=content)
+    add(3, "patch", "orph", "o", lang="go")  # a key with no full image
+    add(4, "patch", "orph", "o", content="ob")
+    add(99, "patch", "r1", "p1")  # all-NULL: a no-op
+    add(2, "patch", "r1", "p2", lang="zig")  # ties p2's full image (seq 2)
+    log_path = str(tmp_path / "log")
+    spark.createDataFrame(ev, CHANGE_EVENTS).coalesce(1).write.parquet(log_path)
+    batch = spark.read.parquet(log_path)
+
+    table = ensure_table(spark, str(tmp_path / "t"), num_buckets=4)
+    plans = []
+    write = LakeTable.write_data_files
+
+    def recording_write(self, df, *a, **k):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return write(self, df, *a, **k)
+
+    monkeypatch.setattr(LakeTable, "write_data_files", recording_write)
+    monkeypatch.setenv("MXETL_CAPTURE_PLAN", "1")
+    stats = apply_epoch(table, batch, "main", 0, 0, len(ev))
+
+    def exchanges(plan):
+        return len(re.findall(r"\bExchange\b", plan))
+
+    assert len(plans) == 1
+    assert exchanges(plans[0]) == 1
+    assert exchanges(merge_mod.LAST_WRITE_PLAN) == 1
+    # distinct (key, seq) patches with a payload: 50 hot + 2 orphan + 1 tie
+    assert stats.rows_patched == 53
+    assert int(table.snapshot().properties["patch_deltas"]) == 53
+    assert table_state(table) == oracle_state(log_path)
+    assert table_state(table)[("hot", "h")] == (50, "c0", "l49", "b50")
+    assert table_state(table)[("r1", "p2")][2] == "zig"
+
+    assert (stats.rows_in, stats.rows_inserted, stats.rows_deduped) == (len(ev), 13, 13)
+    want: dict[int, list[int]] = {}
+    full_keys = set()
+    for r in batch.select(
+        "repo", "path", "op", table.snapshot().bucket_expr().alias("b")
+    ).collect():
+        want.setdefault(r["b"], [0, 0])[0] += 1
+        if r["op"] != "patch":
+            full_keys.add((r["repo"], r["path"], r["b"]))
+    for _, _, b in full_keys:
+        want[b][1] += 1
+    got = {
+        d["bucket"]: (d["rows_in"], d["rows_inserted"], d["rows_deduped"],
+                      d["rows_updated"], d["rows_deleted"])
+        for d in stats.per_bucket
+    }
+    # patch generations count in rows_patched, never as deduped keys
+    assert got == {b: (n, k, k, 0, 0) for b, (n, k) in want.items()}
