@@ -417,11 +417,15 @@ def _stream_cycle(base: str, log_path: str, c: int, rng: random.Random) -> dict:
     rec["epochs_through_after_crash"] = et
 
     versions = []
-    for _ in range(2):  # resume, then a pure-idempotence rerun
+    for run in ("resume", "rerun"):  # then a pure-idempotence rerun
         r = subprocess.run(cmd, capture_output=True, text=True)
         line = next((l for l in r.stdout.splitlines()
                      if l.startswith("VERSION")), None)
         versions.append(int(line.split()[1]) if line else None)
+        rec[f"{run}_rc"] = r.returncode
+        if line is None:
+            # a run that landed no version says why
+            rec[f"{run}_stderr_tail"] = r.stderr.splitlines()[-20:]
     rec["version_after_resume"] = versions[0]
     rec["version_after_rerun"] = versions[1]
     rec["rerun_noop"] = versions[0] is not None and versions[0] == versions[1]

@@ -115,7 +115,6 @@ def main(argv: list[str] | None = None) -> int:
         "replay over a bucketed log gets a join-fold-capable table)",
     )
     r.add_argument("--max-epochs", type=int, default=None)
-    r.add_argument("--mode", choices=["mor", "cow"], default="mor")
     r.add_argument("--compact-every", type=int, default=None)
     r.add_argument(
         "--fold", choices=["auto", "union", "join"], default="auto",
@@ -153,7 +152,6 @@ def main(argv: list[str] | None = None) -> int:
         "reference's wire topology); non-parquet formats stream with the "
         "union fold",
     )
-    s.add_argument("--mode", choices=["mor", "cow"], default="mor")
     s.add_argument(
         "--trigger-interval", default=None, metavar="DURATION",
         help="run CONTINUOUSLY with a processingTime trigger (e.g. '3600 seconds', "
@@ -186,8 +184,7 @@ def main(argv: list[str] | None = None) -> int:
     c.add_argument(
         "--drop-orphan-patches", action="store_true",
         help="discard patches whose key has no full image yet (the only "
-        "remaining patch debt after an exact finalize; clears the way for "
-        "copy-on-write merges)",
+        "remaining patch debt after an exact finalize)",
     )
     c.add_argument(
         "--sort-columns", default=None,
@@ -337,7 +334,6 @@ def main(argv: list[str] | None = None) -> int:
     rs.add_argument("--interval-size", type=int, default=1_000_000)
     rs.add_argument("--buckets", type=int, default=16)
     rs.add_argument("--repos", type=int, default=100)
-    rs.add_argument("--mode", choices=["mor", "cow"], default="mor")
 
     st = sub.add_parser("status", help="epoch/lineage summary")
     st.add_argument("table")
@@ -712,7 +708,7 @@ def _dispatch(spark, args) -> int:
         fold = args.fold
         if fold == "auto":
             fold, downgraded = resolve_fold_auto(
-                args.log, layout=m.layout, mode=args.mode,
+                args.log, layout=m.layout,
                 num_buckets=m.num_buckets, key_columns=m.key_columns,
                 spec=spec,
             )
@@ -736,7 +732,6 @@ def _dispatch(spark, args) -> int:
             table,
             interval_size=args.interval_size,
             max_epochs=args.max_epochs,
-            mode=args.mode,
             compact_every=args.compact_every,
             fold=fold,
         )
@@ -784,9 +779,7 @@ def _dispatch(spark, args) -> int:
                 batch = slice_change_log(
                     spark, args.num_events, off, end, num_repos=args.repos
                 )
-                stats = apply_epoch(
-                    table, batch, "slice", epoch_id, off, end, mode=args.mode
-                )
+                stats = apply_epoch(table, batch, "slice", epoch_id, off, end)
                 applied += 1
                 rows_in += stats.rows_in
             off = end
@@ -823,7 +816,7 @@ def _dispatch(spark, args) -> int:
 
             m = table.snapshot()
             fold, downgraded = resolve_fold_auto(
-                args.log_dir, layout=m.layout, mode=args.mode,
+                args.log_dir, layout=m.layout,
                 num_buckets=m.num_buckets, key_columns=m.key_columns,
                 spec=spec,
             )
@@ -838,7 +831,6 @@ def _dispatch(spark, args) -> int:
             table,
             args.checkpoint,
             max_files_per_trigger=args.max_files_per_trigger,
-            mode=args.mode,
             trigger_interval=args.trigger_interval,
             fold=fold,
             log_format=args.log_format,

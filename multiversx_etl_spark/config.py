@@ -16,7 +16,6 @@ onto replay/stream parameters and the reconciliation errata:
       "stream_id": "mainnet",
       "interval_size": 8000000,          # events per epoch (planner knob)
       "num_buckets": 64,                 # bucket(B, repo, path) layout
-      "mode": "mor",                     # merge-on-read | cow
       "compact_every": 16,               # epochs between delta folds
       "max_files_per_trigger": 4,        # streaming micro-batch knob
       "trigger_interval": "3600 seconds",# continuous cadence (null = drain)
@@ -69,7 +68,6 @@ class WorkerConfig:
     stream_id: str = "main"
     interval_size: int = 1_000_000
     num_buckets: int = 16
-    mode: str = "mor"
     compact_every: int | None = None
     max_files_per_trigger: int = 4
     trigger_interval: str | None = None
@@ -174,7 +172,7 @@ class MultiWorkerConfig:
 _REQUIRED = ("table_root", "log_path")
 _KNOWN = {
     "table_root", "log_path", "name", "schema", "normalizer", "stream_id",
-    "interval_size", "num_buckets", "mode", "compact_every",
+    "interval_size", "num_buckets", "compact_every",
     "max_files_per_trigger", "trigger_interval",
     "fail_on_counts_mismatch", "counts_checks_errata", "layout", "fold",
     "processing", "schema_folder", "stat_columns", "description",
@@ -243,8 +241,6 @@ def worker_config_from_dict(data: dict[str, Any]) -> WorkerConfig | MultiWorkerC
     if missing:
         raise ConfigError(f"missing required config keys: {missing}")
     cfg = WorkerConfig(**data)
-    if cfg.mode not in ("mor", "cow"):
-        raise ConfigError(f"mode must be 'mor' or 'cow', got {cfg.mode!r}")
     if cfg.layout not in ("auto", "xxhash", "spark"):
         raise ConfigError(
             f"layout must be 'auto', 'xxhash' or 'spark', got {cfg.layout!r}"
@@ -253,8 +249,8 @@ def worker_config_from_dict(data: dict[str, Any]) -> WorkerConfig | MultiWorkerC
         raise ConfigError(
             f"fold must be 'auto', 'union' or 'join', got {cfg.fold!r}"
         )
-    if cfg.fold == "join" and (cfg.layout == "xxhash" or cfg.mode != "mor"):
-        raise ConfigError("fold='join' requires layout='spark' and mode='mor'")
+    if cfg.fold == "join" and cfg.layout == "xxhash":
+        raise ConfigError("fold='join' requires layout='spark'")
     if cfg.log_format not in ("parquet", "ndjson", "orc", "csv"):
         raise ConfigError(
             "log_format must be 'parquet', 'ndjson', 'orc' or 'csv', "
@@ -412,7 +408,7 @@ def _resolved_layout(cfg: WorkerConfig, key_columns) -> str:
     from multiversx_etl_spark.sources.changelog import resolve_fold_auto
 
     want, _ = resolve_fold_auto(
-        cfg.log_path, layout="spark", mode=cfg.mode,
+        cfg.log_path, layout="spark",
         num_buckets=cfg.num_buckets, key_columns=key_columns,
     )
     return "spark" if want == "join" else "xxhash"
@@ -613,7 +609,6 @@ def run_from_config(spark, cfg: "WorkerConfig | MultiWorkerConfig",
             spark, cfg.log_path, table, checkpoint_dir,
             stream_id=cfg.stream_id,
             max_files_per_trigger=cfg.max_files_per_trigger,
-            mode=cfg.mode,
             compact_every=cfg.compact_every,
             trigger_interval=cfg.trigger_interval,
             normalizer=normalizer,
@@ -637,7 +632,7 @@ def run_from_config(spark, cfg: "WorkerConfig | MultiWorkerConfig",
             from multiversx_etl_spark.sources.changelog import resolve_fold_auto
 
             fold, downgraded = resolve_fold_auto(
-                cfg.log_path, layout=m.layout, mode=cfg.mode,
+                cfg.log_path, layout=m.layout,
                 num_buckets=m.num_buckets, key_columns=m.key_columns,
             )
             if downgraded:
@@ -665,7 +660,6 @@ def run_from_config(spark, cfg: "WorkerConfig | MultiWorkerConfig",
             log, table,
             interval_size=cfg.interval_size,
             stream_id=cfg.stream_id,
-            mode=cfg.mode,
             compact_every=cfg.compact_every,
             normalizer=normalizer,
             fold=fold,
@@ -837,7 +831,6 @@ def stream_with_config_reload(
             spark, cfg.log_path, table, checkpoint_dir,
             stream_id=cfg.stream_id,
             max_files_per_trigger=cfg.max_files_per_trigger,
-            mode=cfg.mode,
             compact_every=cfg.compact_every,
             trigger_interval=cfg.trigger_interval,
             normalizer=normalizer,

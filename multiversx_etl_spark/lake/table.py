@@ -108,24 +108,18 @@ def bucket_expr(
     return F.pmod(F.xxhash64(*key_columns), F.lit(num_buckets)).cast("int")
 
 
-def per_column_writer_seq(
-    p: str, *, is_patch: Column | None, has_colseq: bool
-) -> Column:
+def per_column_writer_seq(p: str, *, is_patch: Column, has_colseq: bool) -> Column:
     """Writer seq of payload column ``p`` for ONE generation row — the
     single definition of the per-column LWW clock, shared by the armed
-    read fold, ``_finalize_fold``, and the cow merge fold (operators/
-    merge.py): a patch generation's own seq; else the row's ``_colseq``
-    entry for the column (finalized rows record columns whose last writer
-    was a patch newer than the row's full-image seq); else the row seq.
-    ``is_patch=None`` declares the caller's input has no patch generations
-    (the cow fold, which is refused while patch debt is outstanding)."""
+    read fold and ``_finalize_fold``: a patch generation's own seq; else
+    the row's ``_colseq`` entry for the column (finalized rows record
+    columns whose last writer was a patch newer than the row's full-image
+    seq); else the row seq."""
     base = (
         F.coalesce(F.element_at(F.col("_colseq"), F.lit(p)), F.col("seq"))
         if has_colseq
         else F.col("seq")
     )
-    if is_patch is None:
-        return base
     return F.when(is_patch, F.col("seq")).otherwise(base)
 
 
@@ -133,8 +127,7 @@ def colseq_map_expr(payload: list[str], winner_seq: Column) -> Column:
     """``_colseq`` map from per-column winner structs ``_c_<p>`` (fields
     ``s`` = writer seq, ``v`` = value): one entry per column whose winner
     seq exceeds the FULL-image winner's — i.e. exactly the columns a
-    single row seq cannot represent; NULL when none. Shared by
-    ``_finalize_fold`` and the cow merge fold."""
+    single row seq cannot represent; NULL when none (``_finalize_fold``)."""
     if not payload:
         return F.lit(None).cast("map<string,bigint>")
     entries = F.filter(
@@ -170,6 +163,9 @@ def bucket_to_pid(
     ``spark`` layout: identity (partition index == bucket by construction).
     ``xxhash``: derived by running B rows through the actual partitioner
     (not by reimplementing Murmur3), exact by construction; cached per B.
+    The xxhash map is many-to-one (B=16 occupies 10 pids), so an epoch
+    writes fewer files — the reason new tables default to xxhash (see
+    ``streaming/ingest.py`` ``ensure_table`` for the measurement).
     """
     if layout == "spark":
         return list(range(num_buckets))
@@ -190,7 +186,7 @@ def bucket_to_pid(
 class Manifest:
     """One immutable snapshot of the table.
 
-    Physically SHARDED since format 2 (the Iceberg manifest-list analog):
+    Physically SHARDED (format 2, the Iceberg manifest-list analog):
     the root document carries everything O(1)-or-O(recent) — schema, stream
     epoch markers, properties — plus one small *group ref* per occupied pid
     (path, file count, row count, outstanding-delta count). The per-file
@@ -200,11 +196,8 @@ class Manifest:
     the parent's ref — same content hash, doc already on disk) and a
     bucket-pruned read parses only the groups for its pids, so commit cost
     and plan-time manifest bytes are O(touched buckets), not O(total files).
-    At 10^6 files over B buckets the root doc stays a few KB where the
-    format-1 inline list was a multi-hundred-MB rewrite per commit.
-
-    Format 1 (inline ``files`` list) manifests remain fully readable: the
-    constructor materializes them eagerly, exactly as before.
+    At 10^6 files over B buckets the root doc stays a few KB where an
+    inline file list would be a multi-hundred-MB rewrite per commit.
 
     In memory each pid maps to a *slot*: either ``{"files": [...]}``
     (materialized — freshly committed or lazily loaded) or ``{"ref": {...}}``
@@ -220,7 +213,6 @@ class Manifest:
         schema_json: str,
         num_buckets: int,
         key_columns: list[str],
-        files: list[dict[str, Any]] | None = None,
         streams: dict[str, dict[str, Any]] | None = None,
         parent: int | None = None,
         operation: str = "create",
@@ -231,7 +223,6 @@ class Manifest:
         #: Keyword default keeps pre-layout manifests readable.
         layout: str = "xxhash",
         groups: list[dict[str, Any]] | None = None,
-        format: int | None = None,  # noqa: A002 — serialized field name
         root: str | None = None,
         slots: dict[int, dict[str, Any]] | None = None,
     ):
@@ -251,17 +242,8 @@ class Manifest:
             # internal: carry a parent/target's slots verbatim (rollback,
             # commit) — refs stay refs, O(1) regardless of table size
             self._slots = slots
-        elif groups is not None:
-            self._slots = {int(g["pid"]): {"ref": g} for g in groups}
         else:
-            self._slots = {}
-            if files:
-                for f in files:
-                    self._slots.setdefault(int(f["pid"]), {"files": []})[
-                        "files"
-                    ].append(f)
-                # preserve the inline (format-1) list order for `.files`
-                self._files_cache = list(files)
+            self._slots = {int(g["pid"]): {"ref": g} for g in groups or ()}
 
     @property
     def schema(self) -> StructType:
@@ -305,8 +287,8 @@ class Manifest:
         return out
 
     def group_paths(self) -> set[str]:
-        """Relative paths of the group docs this snapshot references
-        (empty for format-1 inline manifests) — the GC reference set."""
+        """Relative paths of the group docs this snapshot references — the
+        GC reference set."""
         return {
             s["ref"]["path"] for s in self._slots.values() if "ref" in s
         }
@@ -410,18 +392,33 @@ class Manifest:
         """Highest W such that ALL epochs 0..W have committed (-1 if none)."""
         return self.streams.get(stream_id, {}).get("epochs_through", -1)
 
-    def _seal(self, root: str) -> None:
+    def _group_doc(self, pid: int) -> tuple[str, str]:
+        """(relative path, body) of the pid's content-addressed group doc."""
+        body = json.dumps({"pid": pid, "files": self._slots[pid]["files"]}, sort_keys=True)
+        digest = hashlib.sha256(body.encode()).hexdigest()[:32]
+        return os.path.join(_MANIFEST_DIR, _GROUP_DIR, f"g-{digest}.json"), body
+
+    @staticmethod
+    def _put_group_doc(root: str, rel: str, body: str) -> None:
+        gdir = os.path.join(root, _MANIFEST_DIR, _GROUP_DIR)
+        os.makedirs(gdir, exist_ok=True)
+        tmp = os.path.join(gdir, f".g.{uuid.uuid4().hex}")
+        with open(tmp, "w") as fh:
+            fh.write(body)
+        os.replace(tmp, os.path.join(root, rel))
+
+    def _seal(self, root: str) -> list[int]:
         """Write every materialized slot's file-group doc (content-addressed
         — an existing doc with the same hash is reused byte-for-byte, which
         is both the cross-version structural sharing and the idempotent
         crash-recovery story: a doc left by a crashed commit is either
         reused by an identical retry or swept by gc_orphan_files) and
-        convert the slot to a ref. After sealing, ``to_json`` emits the
-        O(buckets) format-2 root document. Group docs are immutable and
-        written tmp+rename, so concurrent writers producing the same
-        content race harmlessly."""
-        gdir = os.path.join(root, _MANIFEST_DIR, _GROUP_DIR)
-        made = False
+        convert the slot to a ref, keeping its in-memory ``files``. After
+        sealing, ``to_json`` emits the O(buckets) format-2 root document.
+        Group docs are immutable and written tmp+rename, so concurrent
+        writers producing the same content race harmlessly. Returns the
+        sealed pids (``restore_sealed`` re-checks their docs)."""
+        sealed = []
         for pid in sorted(self._slots):
             slot = self._slots[pid]
             if "ref" in slot:
@@ -430,23 +427,15 @@ class Manifest:
             if not files:
                 del self._slots[pid]
                 continue
-            body = json.dumps({"pid": pid, "files": files}, sort_keys=True)
-            digest = hashlib.sha256(body.encode()).hexdigest()[:32]
-            rel = os.path.join(_MANIFEST_DIR, _GROUP_DIR, f"g-{digest}.json")
-            full = os.path.join(root, rel)
+            rel, body = self._group_doc(pid)
             try:
                 # a reused doc gets a fresh mtime: gc_orphan_files deletes
                 # unreferenced docs by age, and the commit about to
                 # reference this one has not landed yet
-                os.utime(full)
+                os.utime(os.path.join(root, rel))
             except FileNotFoundError:
-                if not made:
-                    os.makedirs(gdir, exist_ok=True)
-                    made = True
-                tmp = os.path.join(gdir, f".g.{uuid.uuid4().hex}")
-                with open(tmp, "w") as fh:
-                    fh.write(body)
-                os.replace(tmp, full)
+                self._put_group_doc(root, rel, body)
+            sealed.append(pid)
             slot["ref"] = {
                 "pid": pid,
                 "path": rel,
@@ -456,6 +445,18 @@ class Manifest:
             }
         self._root = root
         self._files_cache = None  # re-materialize in canonical pid order
+        return sealed
+
+    def restore_sealed(self, root: str, pids: list[int]) -> None:
+        """Rewrite any of the sealed pids' group docs that vanished since
+        ``_seal``. A reused doc is unreferenced until the root swap, so
+        ``gc_orphan_files`` or ``expire_snapshots`` (both under the commit
+        lock) may delete it despite the refreshed mtime; called under that
+        lock, this closes the window."""
+        for pid in pids:
+            rel = self._slots[pid]["ref"]["path"]
+            if not os.path.exists(os.path.join(root, rel)):
+                self._put_group_doc(root, *self._group_doc(pid))
 
     def to_json(self) -> str:
         unsealed = [p for p, s in self._slots.items() if "ref" not in s]
@@ -484,6 +485,12 @@ class Manifest:
     @staticmethod
     def from_json(text: str, root: str | None = None) -> "Manifest":
         d = json.loads(text)
+        fmt = d.pop("format", None)
+        if fmt != 2:
+            raise ValueError(
+                f"unsupported manifest format {fmt!r}: only format 2 "
+                "(sharded group docs) is readable"
+            )
         return Manifest(**d, root=root)
 
 
@@ -574,11 +581,13 @@ class LakeTable:
         # seal OUTSIDE the lock: group docs are immutable + content-
         # addressed, so writing them early never conflicts with a rival
         # writer, and the lock hold time stays O(root doc), not O(groups)
-        manifest._seal(self.root)
+        sealed = manifest._seal(self.root)
         lock_path = os.path.join(self.root, _MANIFEST_DIR, "_commit.lock")
         lock_fd = os.open(lock_path, os.O_CREAT | os.O_WRONLY)
         try:
             fcntl.flock(lock_fd, fcntl.LOCK_EX)
+            # GC under this lock may have taken a reused doc since the seal
+            manifest.restore_sealed(self.root, sealed)
             path = self._manifest_path(manifest.version)
             try:
                 fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
@@ -718,8 +727,7 @@ class LakeTable:
         if buckets is not None:
             # bucket->pid is Murmur3 mod B (not injective): the pid file
             # groups may contain sibling buckets — post-filter for an exact
-            # bucket-scoped result. raw=True callers (the MERGE) skip this:
-            # copy-on-write must rewrite whole pid groups.
+            # bucket-scoped result.
             df = df.where(m.bucket_expr().isin(*[int(b) for b in buckets]))
         mor_outstanding = int(m.properties.get("mor_appends", 0)) > 0
         if patch_outstanding or (colseq_out and mor_outstanding):
@@ -918,7 +926,6 @@ class LakeTable:
         self,
         from_version: int,
         to_version: int | None = None,
-        with_colseq: bool = False,
     ) -> DataFrame:
         """Change feed (Iceberg analog: changelog scan / CDC read): the
         logical row changes committed in ``(from_version, to_version]``,
@@ -927,19 +934,13 @@ class LakeTable:
         a downstream consumer tails the table incrementally instead of
         re-reading it.
 
-        ``with_colseq=True`` additionally exposes the hidden ``_colseq``
-        map on rows rewritten by copy-on-write merges over finalized
-        per-column state: such a row's payload mixes writer seqs (the row
-        seq is the full-image winner's; patched columns are newer), which
-        a row-image consumer CANNOT apply exactly without it — replication
-        decomposes these rows into a full image plus synthetic patch
-        events (streaming/replicate.py). Rows without per-column state
-        read the column as NULL.
-
         Zero extra bookkeeping: MERGE already writes each delta row's
         ``_action`` into the data files (invisible to normal reads), so the
-        feed is just the files added by merge commits in the range, with
-        carries filtered (cow rewrites carry untouched rows). ``compact``/
+        feed is just the files added by merge commits in the range. A merge
+        appends only its winners and patch generations, each carrying one
+        writer seq, so every feed row is an exact row image (or partial
+        image, ``change_type='patch'``); per-column ``_colseq`` state is
+        written only by the commits skipped below. ``compact``/
         ``rebucket`` commits reorganize bytes and ``update-schema``/
         ``set-clustering`` commits change only metadata — nothing logical
         either way, so all four are skipped (the feed projects
@@ -1002,15 +1003,9 @@ class LakeTable:
                 for f in m.added_files(prev_m)
             ]
             prev_m = m
-        schema = to_m.schema
-        extra = [StructField("_action", StringType(), True)]
-        if with_colseq:
-            from pyspark.sql.types import LongType, MapType
-
-            extra.append(
-                StructField("_colseq", MapType(StringType(), LongType()), True)
-            )
-        read_schema = StructType(list(schema.fields) + extra)
+        read_schema = StructType(
+            list(to_m.schema.fields) + [StructField("_action", StringType(), True)]
+        )
         if not paths:
             return self.spark.createDataFrame([], read_schema).withColumnRenamed(
                 "_action", "change_type"
@@ -1018,6 +1013,7 @@ class LakeTable:
         return (
             self.spark.read.schema(read_schema)
             .parquet(*paths)
+            # older copy-on-write merge files hold untouched 'carry' rows
             .where(F.col("_action") != "carry")
             .withColumnRenamed("_action", "change_type")
         )
@@ -1322,7 +1318,8 @@ class LakeTable:
         replaced_paths: set[str] | None = None,
     ) -> Manifest:
         """Commit new files, replacing ``replaced_pids`` file groups
-        (copy-on-write) — or none (``set()``): a merge-on-read delta append.
+        (compact, rebucket, reseed) — or none (``set()``): a merge-on-read
+        delta append.
 
         Data files + epoch marker + schema change land in ONE atomic snapshot
         (Iceberg analog: MERGE commit + snapshot summary properties).
@@ -1615,8 +1612,8 @@ class LakeTable:
         compact/rebucket/bootstrap/promote, and never a rollback, which
         repoints ``_current`` off the chain entirely, so the ancestor walk
         refuses it structurally), (b) every file the rewrite replaces is
-        still live in ``parent`` (a cow merge that consumed one would make
-        the rewrite stale — it no longer folds those rows' latest state),
+        still live in ``parent`` (a commit that consumed one would make the
+        rewrite stale — it no longer folds those rows' latest state),
         and (c) the physical layout is unchanged (the rewrite's files are
         bucket-aligned under ``base``'s layout). Under those rules the
         rebased state is file-for-file identical to the sequential order
@@ -1725,8 +1722,7 @@ class LakeTable:
         Orphan patches (no full image yet) are rewritten as generations and
         re-finalized once their base arrives; ``drop_orphan_patches=True``
         discards them instead (e.g. past a known lateness bound — they are
-        the only remaining patch debt, and clearing it re-legalizes
-        copy-on-write merges).
+        the only remaining patch debt).
 
         ``sort_columns`` declares the table's CLUSTERING (Iceberg analog:
         ``ALTER TABLE ... WRITE ORDERED BY`` + a sorted rewrite). Default is
@@ -1748,7 +1744,7 @@ class LakeTable:
         exactly the files the fold consumed and keeping the concurrent
         delta appends on top of the new base (the MOR fold resolves them
         by seq as always). When rebase is impossible (a rival compaction,
-        a cow merge over the same groups, a rollback), the whole rewrite
+        a rollback), the whole rewrite
         is redone from the fresh snapshot — at most 3 attempts, then the
         caller is told to stand down. At 100 TB this is the difference
         between maintenance you can cron and maintenance that needs an
@@ -1904,16 +1900,7 @@ class LakeTable:
                 - folded_patch_debt
                 + n_preserved,
                 # the base-snapshot flag stays exact under rebase:
-                # concurrent MOR appends never write _colseq. A concurrent
-                # cow-over-finalized merge CAN pass _rebase_sound for an
-                # INCREMENTAL rewrite (check (b) covers only this
-                # compaction's replaced files, not the cow's) and its
-                # rewritten files may carry _colseq — which is exactly why
-                # colseq_flag is sticky: it is 1 whenever colseq_out and
-                # not rewrote_all, and when rewrote_all every file was
-                # replaced so a cow race necessarily consumed a replaced
-                # file and fails check (b). Hence a live _colseq file
-                # always implies colseq_flag == 1 on the commit below.
+                # concurrent merges never write _colseq
                 "colseq": colseq_flag,
             }
             if extra_stats:

@@ -7,20 +7,16 @@ AND s.op != 'delete' THEN INSERT *`` — plus tombstone retention: deletes keep
 a ``deleted=true`` row carrying the delete's seq, so a late lower-seq update
 arriving in a later batch cannot resurrect the key (SURVEY.md §7 hard parts).
 
-Two physical modes, both scale-first:
+Merge-on-read: the batch's per-key winners are APPENDED as delta files —
+write cost is O(batch), never O(table). Reads fold generations per key
+(lake/table.py read); ``compact()`` folds deltas back into base files, which
+is the one way to a fold-free, read-optimal table. This is Iceberg v2 MOR,
+and the only shape that survives a small micro-batch MERGE into a 100 TB
+table. The target is still consulted — but only its narrow (key, seq,
+deleted) projection, for merge-stat classification and the seq guard;
+content bytes of the target never move.
 
-- ``mor`` (merge-on-read, the default): the batch's per-key winners are
-  APPENDED as delta files — write cost is O(batch), never O(table). Reads
-  fold generations per key (lake/table.py read); ``compact()`` folds deltas
-  back into base files. This is Iceberg v2 MOR, and the only shape that
-  survives a small micro-batch MERGE into a 100 TB table. The target is
-  still consulted — but only its narrow (key, seq, deleted) projection, for
-  merge-stat classification and the seq guard; content bytes of the target
-  never move.
-- ``cow`` (copy-on-write): touched partition file-groups are rewritten in
-  full — read-optimal (no fold), the right trade for low-churn tables.
-
-Shared physical plan:
+Physical plan:
 
 1. **partition pruning**: the change-set's distinct buckets are computed
    first (a tiny agg); only those partitions' files are read. A micro-batch
@@ -218,7 +214,6 @@ def merge_batch(
     offset_lo: int = 0,
     offset_hi: int = 0,
     collect_per_bucket_stats: bool = True,
-    mode: str = "mor",
     in_counts: dict[int, int] | None = None,
     patch_count: int | None = None,
     pre_commit: "Callable[[MergeStats], None] | None" = None,
@@ -242,9 +237,9 @@ def merge_batch(
 
     - ``'union'`` (default): union target+changes, ONE shuffle, ONE hash
       aggregate, ONE write (module docstring steps 2 and 4). Works with
-      every layout and mode; partial-image patch generations leave
+      every layout; partial-image patch generations leave
       through the same aggregate and write as the per-key winners.
-    - ``'join'``: the ZERO-EXCHANGE fold for ``layout='spark'`` MOR tables
+    - ``'join'``: the ZERO-EXCHANGE fold for ``layout='spark'`` tables
       fed from a Spark catalog BUCKETED log table: dedup the change side
       with a partition-local aggregate, fold the (narrow, catalog-staged)
       target side likewise, left-outer-join the winners — every stage
@@ -258,13 +253,12 @@ def merge_batch(
       caller whose log was NOT actually bucket-scanned still gets a correct
       (merely shuffled) merge or a loud error, never silent pid corruption.
     """
-    assert mode in ("mor", "cow"), mode
     assert fold in ("union", "join"), fold
     parent = table.snapshot()
     key = parent.key_columns
     stats = MergeStats()
-    if fold == "join" and (parent.layout != "spark" or mode != "mor"):
-        raise ValueError("fold='join' requires layout='spark' and mode='mor'")
+    if fold == "join" and parent.layout != "spark":
+        raise ValueError("fold='join' requires layout='spark'")
 
     changes = changes.withColumn("_bucket", parent.bucket_expr())
 
@@ -312,28 +306,11 @@ def merge_batch(
     # requires keeping each patch's own writer seq: merge-on-read
     # generations carry it naturally, and compact() collapses it
     # losslessly into the hidden _colseq map (lake/table.py
-    # _finalize_fold). Copy-on-write has no
-    # generation storage for ORPHAN patches (a patch to a key with no
-    # full image cannot become a row), so cow + incoming patches is
-    # refused rather than silently dropped.
+    # _finalize_fold). Finalized per-column state (compact's _colseq rows)
+    # is NOT patch debt: row-level decisions still compare full-image seqs
+    # and the read fold resolves the appended generations per column.
     patch_outstanding = int(parent.properties.get("patch_deltas", 0)) > 0
-    # Finalized per-column state (compact's _colseq rows) is NOT patch debt:
-    # row-level decisions still compare full-image seqs, MOR appends new
-    # generations the read fold resolves per column, and COW takes the
-    # per-column-aware fold below — both stay exact.
-    cow_colseq = mode == "cow" and int(parent.properties.get("colseq", 0)) > 0
     has_patches = bool(patch_count)
-    if has_patches and mode != "mor":
-        raise ValueError(
-            "partial-image (op='patch') events require mode='mor': "
-            "copy-on-write has no generation storage for orphan patches"
-        )
-    if patch_outstanding and mode != "mor":
-        raise ValueError(
-            "table has outstanding patch generations (patch_deltas > 0): "
-            "run compact() to finalize them (drop_orphan_patches=True if "
-            "orphans remain) before a copy-on-write merge"
-        )
 
     def aligned(df: DataFrame, is_change: bool) -> DataFrame:
         cols = [F.col(c) for c in key]
@@ -358,15 +335,6 @@ def merge_batch(
             )
         else:
             cols.append(F.lit(False).alias("_is_patch"))
-        if cow_colseq:
-            # the cow fold needs each target row's per-column writer seqs;
-            # change images carry none (their seq covers every column)
-            if not is_change and "_colseq" in df.columns:
-                cols.append(F.col("_colseq"))
-            else:
-                cols.append(
-                    F.lit(None).cast("map<string,bigint>").alias("_colseq")
-                )
         cols.append(F.lit(is_change).alias("_is_change"))
         cols.append(F.col("_bucket"))
         return df.select(*cols)
@@ -396,7 +364,7 @@ def merge_batch(
             #    partition-local, the left-outer join needs no exchange,
             #    and the write below consumes the scan partitioning
             #    (partition index == bucket == pid). Only change-touched
-            #    keys can produce output (MOR writes no carries), hence
+            #    keys can produce output (carries are never written), hence
             #    LEFT outer with the deduped change side driving.
             cha = aligned(changes, True)
             ch_w = cha.groupBy(*key).agg(
@@ -412,140 +380,76 @@ def merge_batch(
             ).withColumn("_bucket", parent.bucket_expr())
             won_change = F.col("_tw").isNull() | (F.col("_w.seq") > F.col("_tw.seq"))
         else:
-            # MOR consults only the target's narrow (key, seq, deleted)
-            # projection — target content never moves. COW reads full rows
-            # (it must rewrite them). raw=True returns every physical
-            # generation; the union-agg folds them. With patch generations
-            # outstanding the projection also carries _action, so the fold
-            # can exclude them (still narrow).
+            # Only the target's narrow (key, seq, deleted) projection is
+            # consulted — target content never moves. raw=True returns
+            # every physical generation; the union-agg folds them. With
+            # patch generations outstanding the projection also carries
+            # _action, so the fold can exclude them (still narrow).
             target = table.read(buckets=touched, raw=True, with_action=patch_outstanding)
-            if mode == "mor":
-                keep = [*key, "seq", "deleted"] + (["_action"] if patch_outstanding else [])
-                target = target.select(*keep)
-            target = target.withColumn("_bucket", parent.bucket_expr())
+            narrow = [*key, "seq", "deleted"] + (["_action"] if patch_outstanding else [])
+            target = target.select(*narrow).withColumn("_bucket", parent.bucket_expr())
             both = aligned(target, False).unionByName(aligned(changes, True))
 
-            if cow_colseq:
-                # -- 3''. Per-column COW fold: the target's finalized rows
-                #    may carry _colseq entries (columns last written by a
-                #    patch NEWER than the row's full-image seq). Row-level
-                #    winner and classification still compare full-image
-                #    seqs; each column independently takes its newest
-                #    writer, so a change image with seq between the
-                #    target's base seq and a patched column's seq updates
-                #    every OTHER column while the rewritten row keeps that
-                #    column's value and _colseq entry. No patch generations
-                #    can be present here (cow is refused while
-                #    patch_deltas > 0 and change-side patches require mor),
-                #    so every input row is a full image.
-                from multiversx_etl_spark.lake.table import (
-                    colseq_map_expr,
-                    per_column_writer_seq,
-                )
-
-                def _gseq(p: str):
-                    return per_column_writer_seq(p, is_patch=None, has_colseq=True)
-
-                agg = (
-                    repartition_for_write(
-                        both, parent.num_buckets, key, parent.layout
-                    )
-                    .groupBy(*key, "_bucket")
-                    .agg(
-                        F.max(F.struct("seq", "_is_change", "deleted")).alias("_bw"),
-                        F.max(
+            # -- 3. ONE shuffle, ONE aggregate (module docstring step
+            #    2). Winner struct compares (seq, _is_change, ...): on
+            #    a seq tie the change row wins, carrying identical data
+            #    (idempotent replay). The separate _tw struct is the
+            #    TARGET-side winner — its deleted flag (not "any
+            #    generation was live") decides prior liveness, which
+            #    matters when several MOR generations of a key are
+            #    present.
+            #    Change-side patches ride the same aggregate as the
+            #    key's ``_pl`` list: one partial generation per
+            #    distinct (key, seq), so each keeps its own per-column
+            #    writer seq for the read fold (lake/table.py).
+            wstruct = F.struct("seq", "_is_change", "deleted", *payload, "_bucket")
+            is_change, is_patch = F.col("_is_change"), F.col("_is_patch")
+            aggs = [
+                F.max(F.when(~is_patch, wstruct)).alias("_w"),
+                F.max(
+                    F.when(~is_change & ~is_patch, F.struct("seq", "deleted"))
+                ).alias("_tw"),
+                F.count(F.when(is_change & ~is_patch, 1)).alias("_cn"),
+            ]
+            # a key whose only generations are (orphan) patch partials
+            # has no full-image winner: nothing to classify — the read
+            # fold likewise hides such keys — but its new patches are
+            # still written
+            keep = F.col("_w").isNotNull()
+            if has_patches:
+                # an all-NULL patch is a no-op: drop it (and with NO
+                # payload columns at all, every patch is one)
+                some_payload = F.lit(False)
+                for p in payload:
+                    some_payload = some_payload | F.col(p).isNotNull()
+                aggs.append(
+                    F.array_sort(
+                        F.collect_list(
                             F.when(
-                                ~F.col("_is_change"), F.struct("seq", "deleted")
+                                is_change & is_patch & some_payload,
+                                F.struct("seq", *payload),
                             )
-                        ).alias("_tw"),
-                        F.count(F.when(F.col("_is_change"), 1)).alias("_cn"),
-                        *[
-                            F.max(
-                                F.struct(
-                                    _gseq(p).alias("s"),
-                                    F.col("_is_change").alias("c"),
-                                    F.col(p).alias("v"),
-                                )
-                            ).alias(f"_c_{p}")
-                            for p in payload
-                        ],
-                    )
+                        )
+                    ).alias("_pl")
                 )
-                colseq = colseq_map_expr(payload, F.col("_bw.seq"))
-                merged = agg.select(
-                    *key,
-                    F.struct(
-                        F.col("_bw.seq").alias("seq"),
-                        F.col("_bw._is_change").alias("_is_change"),
-                        F.col("_bw.deleted").alias("deleted"),
-                        *[F.col(f"_c_{p}.v").alias(p) for p in payload],
-                    ).alias("_w"),
-                    F.col("_tw"),
-                    F.col("_cn"),
-                    colseq.alias("_colseq"),
-                    F.col("_bucket"),
-                )
-            else:
-                # -- 3. ONE shuffle, ONE aggregate (module docstring step
-                #    2). Winner struct compares (seq, _is_change, ...): on
-                #    a seq tie the change row wins, carrying identical data
-                #    (idempotent replay). The separate _tw struct is the
-                #    TARGET-side winner — its deleted flag (not "any
-                #    generation was live") decides prior liveness, which
-                #    matters when several MOR generations of a key are
-                #    present.
-                #    Change-side patches ride the same aggregate as the
-                #    key's ``_pl`` list: one partial generation per
-                #    distinct (key, seq), so each keeps its own per-column
-                #    writer seq for the read fold (lake/table.py).
-                wstruct = F.struct("seq", "_is_change", "deleted", *payload, "_bucket")
-                is_change, is_patch = F.col("_is_change"), F.col("_is_patch")
-                aggs = [
-                    F.max(F.when(~is_patch, wstruct)).alias("_w"),
-                    F.max(
-                        F.when(~is_change & ~is_patch, F.struct("seq", "deleted"))
-                    ).alias("_tw"),
-                    F.count(F.when(is_change & ~is_patch, 1)).alias("_cn"),
-                ]
-                # a key whose only generations are (orphan) patch partials
-                # has no full-image winner: nothing to classify — the read
-                # fold likewise hides such keys — but its new patches are
-                # still written
-                keep = F.col("_w").isNotNull()
-                if has_patches:
-                    # an all-NULL patch is a no-op: drop it (and with NO
-                    # payload columns at all, every patch is one)
-                    some_payload = F.lit(False)
-                    for p in payload:
-                        some_payload = some_payload | F.col(p).isNotNull()
-                    aggs.append(
-                        F.array_sort(
-                            F.collect_list(
-                                F.when(
-                                    is_change & is_patch & some_payload,
-                                    F.struct("seq", *payload),
-                                )
-                            )
-                        ).alias("_pl")
-                    )
-                    keep = keep | (F.size("_pl") > 0)
-                merged = (
-                    repartition_for_write(both, parent.num_buckets, key, parent.layout)
-                    .groupBy(*key, "_bucket")
-                    .agg(*aggs)
-                    .where(keep)
-                )
-                if has_patches:
-                    # exact redeliveries collapse per (key, seq): the list is
-                    # sorted, so the LAST entry of each seq run is its max
-                    # struct
-                    pl = F.col("_pl")
+                keep = keep | (F.size("_pl") > 0)
+            merged = (
+                repartition_for_write(both, parent.num_buckets, key, parent.layout)
+                .groupBy(*key, "_bucket")
+                .agg(*aggs)
+                .where(keep)
+            )
+            if has_patches:
+                # exact redeliveries collapse per (key, seq): the list is
+                # sorted, so the LAST entry of each seq run is its max
+                # struct
+                pl = F.col("_pl")
 
-                    def last_of_seq(e, i):
-                        nxt = F.when(i + 1 < F.size(pl), F.element_at(pl, i + 2)["seq"])
-                        return F.coalesce(e["seq"] != nxt, F.lit(True))
+                def last_of_seq(e, i):
+                    nxt = F.when(i + 1 < F.size(pl), F.element_at(pl, i + 2)["seq"])
+                    return F.coalesce(e["seq"] != nxt, F.lit(True))
 
-                    merged = merged.withColumn("_pl", F.filter(pl, last_of_seq))
+                merged = merged.withColumn("_pl", F.filter(pl, last_of_seq))
             # NULL winner = patch-only key: classified 'carry' (not written)
             won_change = F.coalesce(F.col("_w._is_change"), F.lit(False))
         was_live = F.col("_tw").isNotNull() & ~F.col("_tw.deleted")
@@ -563,7 +467,6 @@ def merge_batch(
             F.col("_w.seq").alias("seq"),
             F.col("_w.deleted").alias("deleted"),
             *[F.col(f"_w.{p}").alias(p) for p in payload],
-            *([F.col("_colseq")] if cow_colseq else []),
             F.col("_bucket"),
             action.alias("_action"),
             F.col("_cn"),
@@ -575,18 +478,13 @@ def merge_batch(
         #    schema, so parquet column pruning skips them entirely). GLOBAL
         #    merge stats are collected by an Observation on the write job
         #    itself (CollectMetrics sits below the carry filter, so carries
-        #    ARE counted — exact in both modes, zero extra jobs); per-bucket
+        #    ARE counted — exact, zero extra jobs); per-bucket
         #    ledger stats are then a narrow read-back of ONLY the
         #    just-written files — no second pass over the inputs, no cache,
         #    and the ledger is derived from the durable output itself
         #    (self-auditing). Patch generations are written in the same
         #    files as the winners (module docstring step 4).
         out_cols = [*key, *payload, "seq", "deleted", "_action", "_cn", "_bucket"]
-        if cow_colseq:
-            # rewritten groups keep per-column writer seqs (carries keep
-            # their entries verbatim; change winners keep only entries
-            # still newer than the new full-image seq)
-            out_cols.insert(out_cols.index("_action"), "_colseq")
         obs = Observation(f"merge-{stream_id}-{epoch_id}")
         merged = merged.observe(
             obs,
@@ -598,31 +496,26 @@ def merge_batch(
             F.sum(F.when(F.col("_cn") >= 1, 1).otherwise(0)).alias("dedup"),
             *([F.sum(F.size("_pl")).alias("pat")] if has_patches else []),
         )
-        if mode == "mor":
-            if has_patches:
-                # one row per key (its winner) plus one PARTIAL generation
-                # per deduplicated patch; Generate is a narrow operator, so
-                # the rows stay in the aggregate's bucket partition. Patch
-                # rows carry _cn = 0: the ledger's per-bucket deduped count
-                # is of full-image keys.
-                def patch_row(e):
-                    val = {c: F.col(c) for c in (*key, "_bucket")}
-                    val.update({c: e[c] for c in (*payload, "seq")})
-                    val.update(deleted=F.lit(False), _action=F.lit("patch"),
-                               _cn=F.lit(0).cast("long"))
-                    return F.struct(*[val[c].alias(c) for c in out_cols])
+        if has_patches:
+            # one row per key (its winner) plus one PARTIAL generation
+            # per deduplicated patch; Generate is a narrow operator, so
+            # the rows stay in the aggregate's bucket partition. Patch
+            # rows carry _cn = 0: the ledger's per-bucket deduped count
+            # is of full-image keys.
+            def patch_row(e):
+                val = {c: F.col(c) for c in (*key, "_bucket")}
+                val.update({c: e[c] for c in (*payload, "seq")})
+                val.update(deleted=F.lit(False), _action=F.lit("patch"),
+                           _cn=F.lit(0).cast("long"))
+                return F.struct(*[val[c].alias(c) for c in out_cols])
 
-                merged = merged.select(F.inline(F.concat(
-                    F.array(F.struct(*out_cols)), F.transform("_pl", patch_row)
-                )))
-            # Only the delta rows are written; 'carry' (target won / seq
-            # tie) rewrites nothing. Appended files join the fold at read
-            # time.
-            to_write = merged.where(F.col("_action") != "carry").select(*out_cols)
-            replaced_pids: set[int] = set()
-        else:
-            to_write = merged.select(*out_cols)
-            replaced_pids = table.pids_for_buckets(touched, parent)
+            merged = merged.select(F.inline(F.concat(
+                F.array(F.struct(*out_cols)), F.transform("_pl", patch_row)
+            )))
+        # Only the delta rows are written; 'carry' (target won / seq
+        # tie) rewrites nothing. Appended files join the fold at read
+        # time.
+        to_write = merged.where(F.col("_action") != "carry").select(*out_cols)
 
         if os.environ.get("MXETL_CAPTURE_PLAN"):
             # test/triage hook: stash the write plan so plan-shape tests can
@@ -635,10 +528,10 @@ def merge_batch(
             new_files = table.write_data_files(
                 to_write, tag, bucket_aligned=True, keep_bucket=True
             )
-        # cow rewrites whole pid groups (base files); mor appends deltas,
-        # which incremental compact() finds via this flag
+        # merges append deltas, which incremental compact() finds via this
+        # flag
         for f in new_files:
-            f["base"] = mode == "cow"
+            f["base"] = False
 
     metrics = obs.get
     stats.rows_inserted = int(metrics["ins"] or 0)
@@ -651,11 +544,10 @@ def merge_batch(
 
     # Per-bucket ledger rows. NOTE on MOR semantics (ledger contract, see
     # schemas.LINEAGE): per-bucket counts are derived from WRITTEN delta
-    # rows, so in mor mode 'carry' outcomes contribute nothing per bucket
-    # (a bucket touched only by carries gets an all-zero stat row, and
-    # rows_deduped per bucket counts only written keys). The GLOBAL
-    # MergeStats fields above are exact in both modes (carries observed
-    # pre-filter). In cow mode every row is written, so per-bucket == exact.
+    # rows, so 'carry' outcomes contribute nothing per bucket (a bucket
+    # touched only by carries gets an all-zero stat row, and rows_deduped
+    # per bucket counts only written keys). The GLOBAL MergeStats fields
+    # above are exact (carries observed pre-filter).
     per_bucket = []
     if collect_per_bucket_stats:
         with _phase("bucket_stats"):
@@ -710,10 +602,10 @@ def merge_batch(
     )
     commit_parent = parent
     for _rebase_attempt in range(20):  # each retry needs a NEW rival commit
-        # an all-carry MOR batch adds no delta files: don't arm the
-        # read-time fold for nothing (and COW never sets the counter)
+        # an all-carry batch adds no delta files: don't arm the read-time
+        # fold for nothing
         props = None
-        if mode == "mor" and new_files:
+        if new_files:
             props = {
                 "mor_appends": int(
                     commit_parent.properties.get("mor_appends", 0)
@@ -728,8 +620,8 @@ def merge_batch(
         try:
             table.commit(
                 new_files,
-                replaced_pids,
-                f"merge-{mode}",
+                set(),
+                "merge-mor",
                 stream_id,
                 epoch_id,
                 {

@@ -707,7 +707,6 @@ def resolve_fold_auto(
     path: str,
     *,
     layout: str,
-    mode: str,
     num_buckets: int,
     key_columns,
     spec: dict | None = None,
@@ -715,7 +714,7 @@ def resolve_fold_auto(
     """Resolve ``fold='auto'`` for a log directory against a target table:
     the zero-exchange join fold becomes the DEFAULT whenever the engine can
     PROVE it applies — the log carries a ``_bucket_spec.json`` sidecar that
-    matches the table's (layout='spark', mode='mor', num_buckets, key) —
+    matches the table's (layout='spark', num_buckets, key) —
     and quietly stays on the always-correct union fold otherwise.
 
     Returns ``(fold, downgrade_reason)``. ``downgrade_reason`` is non-None
@@ -733,8 +732,6 @@ def resolve_fold_auto(
     problems = []
     if layout != "spark":
         problems.append(f"table layout={layout!r} (join fold needs 'spark')")
-    if mode != "mor":
-        problems.append(f"mode={mode!r} (join fold needs 'mor')")
     problems.extend(_spec_mismatch(spec, num_buckets, key_columns))
     if problems:
         return "union", "; ".join(problems)

@@ -75,6 +75,14 @@ def ensure_table(
     knobs (``num_buckets``/``layout``/``stat_columns``) apply to NEW
     tables only — an existing table keeps its own.
 
+    ``layout`` defaults to ``'xxhash'`` because its bucket→pid map is
+    many-to-one (``lake/table.py`` ``bucket_to_pid``): at B=16 only 10 pids
+    are occupied, so an epoch writes 10 files where ``'spark'`` (pid ==
+    bucket) writes 16, and write cost grows with file count. Measured on
+    the perfbench ``tail`` workload (6 interleaved pairs, 4 vCPU), the
+    spark layout lost every pair: median CPU per epoch 2.07 s → 2.54 s
+    (+23%). ``'spark'`` stays for the zero-exchange join fold.
+
     Concurrent-safe: two workers racing the FIRST creation both succeed —
     the loser of the v0 commit CAS (exists() probe raced create()) opens
     the winner's table instead of dying on the conflict, exactly like an
@@ -158,7 +166,6 @@ def apply_epoch(
     offset_lo: int,
     offset_hi: int,
     normalize: bool = True,
-    mode: str = "mor",
     in_counts: dict[int, int] | None = None,
     patch_count: int | None = None,
     conflict_retries: int = 2,
@@ -190,7 +197,7 @@ def apply_epoch(
         try:
             return merge_batch(
                 table, batch, stream_id, epoch_id, offset_lo, offset_hi,
-                mode=mode, in_counts=in_counts, patch_count=patch_count,
+                in_counts=in_counts, patch_count=patch_count,
                 fold=fold, null_key_count=null_key_count,
                 pre_commit=write_ledger,
                 # each attempt writes its own tag dir: a retry must NEVER
@@ -216,7 +223,6 @@ def replay(
     stream_id: str = DEFAULT_STREAM_ID,
     max_epochs: int | None = None,
     on_epoch: Callable[[int, MergeStats], None] | None = None,
-    mode: str = "mor",
     compact_every: int | None = None,
     normalizer: Callable[[DataFrame], DataFrame] | None = None,
     fold: str = "union",
@@ -229,8 +235,8 @@ def replay(
     register_log_bucketed); epochs carrying partial-image or NULL-keyed
     rows self-downgrade to the union fold (operators/merge.py).
 
-    ``mode='mor'`` (default) appends delta files per epoch — O(batch) write
-    cost; ``compact_every=K`` folds deltas into base files after every K run
+    Each epoch appends delta files — O(batch) write cost;
+    ``compact_every=K`` folds deltas into base files after every K run
     epochs (read-amplification bound, like Iceberg maintenance cadence).
     Mid-stream compactions finalize partial-image generations EXACTLY
     (contested patch columns collapse into the per-column ``_colseq`` map —
@@ -300,7 +306,7 @@ def replay(
         batch = read_offset_range(log, plan.offset_lo, plan.offset_hi)
         stats = apply_epoch(
             table, batch, stream_id, plan.epoch_id, plan.offset_lo, plan.offset_hi,
-            mode=mode, in_counts=counts.get(plan.epoch_id, {}) if precounted else None,
+            in_counts=counts.get(plan.epoch_id, {}) if precounted else None,
             patch_count=patch_counts.get(plan.epoch_id, 0) if precounted else None,
             normalizer=normalizer, fold=fold,
             null_key_count=null_key_counts.get(plan.epoch_id, 0) if precounted else None,
@@ -326,7 +332,6 @@ def stream_ingest(
     checkpoint_dir: str,
     stream_id: str = "stream",
     max_files_per_trigger: int = 4,
-    mode: str = "mor",
     compact_every: int | None = None,
     trigger_interval: str | None = None,
     normalizer: Callable[[DataFrame], DataFrame] | None = None,
@@ -387,7 +392,7 @@ def stream_ingest(
         from multiversx_etl_spark.sources.changelog import resolve_fold_auto
 
         fold, downgraded = resolve_fold_auto(
-            log_dir, layout=m0.layout, mode=mode,
+            log_dir, layout=m0.layout,
             num_buckets=m0.num_buckets, key_columns=m0.key_columns,
         )
         if downgraded:
@@ -410,8 +415,8 @@ def stream_ingest(
             read_bucket_spec,
         )
 
-        if m0.layout != "spark" or mode != "mor":
-            raise ValueError("fold='join' requires layout='spark' and mode='mor'")
+        if m0.layout != "spark":
+            raise ValueError("fold='join' requires layout='spark'")
         spec = read_bucket_spec(log_dir)
         if spec is None:
             raise ValueError(
@@ -502,7 +507,7 @@ def stream_ingest(
                 sum(r["p"] for r in rows) if "op" in batch.columns else 0
             )
             apply_epoch(
-                table, batch, stream_id, epoch_id, lo, hi, mode=mode,
+                table, batch, stream_id, epoch_id, lo, hi,
                 in_counts=in_counts, patch_count=patch_count,
                 normalizer=normalizer, fold=batch_fold,
             )

@@ -132,7 +132,7 @@ def replicate_changes(
     if start >= cur:
         return None
     try:
-        feed = src.changes(start, cur, with_colseq=True)
+        feed = src.changes(start, cur)
     except ValueError:
         if not auto_reseed:
             raise
@@ -146,37 +146,6 @@ def replicate_changes(
         .when(F.col("change_type") == "patch", F.lit("patch"))
         .otherwise(F.lit("update")),
     ).drop("change_type", "deleted")
-    # Rows rewritten by a copy-on-write merge over finalized per-column
-    # state mix writer seqs: the row seq is the full-image winner's while
-    # _colseq-listed columns were written at HIGHER seqs. Applying such a
-    # row as one full image at the row seq would let a later event with a
-    # seq between the two overwrite a column the source keeps — so
-    # DECOMPOSE it into the full image plus one synthetic patch event per
-    # DISTINCT writer seq, carrying every column mapped to that seq (one
-    # event per entry would put two same-seq columns into separate rows at
-    # the same (key, seq), and the merge's redelivery dedup keeps only one
-    # of them): the replica's own per-column fold then reproduces the
-    # source algebra exactly.
-    key = list(dst.snapshot().key_columns)
-    payload = [c for c in batch.columns if c not in key and c not in ("seq", "op", "_colseq")]
-    contested = batch.where(F.col("_colseq").isNotNull())
-    synth = contested.select(
-        *key,
-        F.explode(F.array_distinct(F.map_values(F.col("_colseq")))).alias("_ps"),
-        F.col("_colseq"),
-        *payload,
-    ).select(
-        *key,
-        F.col("_ps").alias("seq"),
-        F.lit("patch").alias("op"),
-        *[
-            F.when(
-                F.element_at(F.col("_colseq"), F.lit(p)) == F.col("_ps"), F.col(p)
-            ).alias(p)
-            for p in payload
-        ],
-    )
-    batch = batch.drop("_colseq").unionByName(synth)
     return merge_batch(
         dst,
         batch,

@@ -18,7 +18,7 @@ from multiversx_etl_spark.config import (
 
 def test_defaults_and_required():
     cfg = worker_config_from_dict({"table_root": "/t", "log_path": "/l"})
-    assert cfg.stream_id == "main" and cfg.mode == "mor"
+    assert cfg.stream_id == "main" and not hasattr(cfg, "mode")
     assert cfg.interval_size == 1_000_000 and cfg.num_buckets == 16
     assert cfg.trigger_interval is None and cfg.fail_on_counts_mismatch
     with pytest.raises(ConfigError, match="missing required"):
@@ -28,8 +28,11 @@ def test_defaults_and_required():
 def test_rejects_unknown_keys_and_bad_values():
     with pytest.raises(ConfigError, match="unknown config keys"):
         worker_config_from_dict({"table_root": "/t", "log_path": "/l", "threds": 4})
-    with pytest.raises(ConfigError, match="mode"):
-        worker_config_from_dict({"table_root": "/t", "log_path": "/l", "mode": "wal"})
+    # MOR is the only merge mode: the old "mode" key is unknown, whatever
+    # its value
+    for mode in ("mor", "cow"):
+        with pytest.raises(ConfigError, match=r"unknown config keys: \['mode'\]"):
+            worker_config_from_dict({"table_root": "/t", "log_path": "/l", "mode": mode})
     with pytest.raises(ConfigError, match="interval_size"):
         worker_config_from_dict(
             {"table_root": "/t", "log_path": "/l", "interval_size": 0}
@@ -340,7 +343,7 @@ def test_resolve_fold_auto_unit(tmp_path):
     that can't be used reports WHY (surfaced as a note by the callers)."""
     from multiversx_etl_spark.sources.changelog import resolve_fold_auto
 
-    kw = dict(layout="spark", mode="mor", num_buckets=4,
+    kw = dict(layout="spark", num_buckets=4,
               key_columns=["repo", "path"])
     # plain log (no sidecar): silent union
     assert resolve_fold_auto(str(tmp_path), **kw) == ("union", None)
@@ -350,7 +353,6 @@ def test_resolve_fold_auto_unit(tmp_path):
     assert resolve_fold_auto(str(tmp_path), **kw) == ("join", None)
     for bad, frag in (
         (dict(kw, layout="xxhash"), "layout"),
-        (dict(kw, mode="cow"), "mode"),
         (dict(kw, num_buckets=8), "buckets"),
         (dict(kw, key_columns=["id"]), "key"),
     ):

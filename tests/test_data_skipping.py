@@ -76,7 +76,7 @@ def test_clustered_compact_prunes_range_scans(spark, skip_log, tmp_path):
     most files at PLAN time and still matches the unpruned result."""
     log = spark.read.parquet(skip_log)
     table = _mktable(spark, tmp_path / "t")
-    replay(log, table, interval_size=500, mode="mor")
+    replay(log, table, interval_size=500)
     table.compact(full=True, sort_columns=["seq"], max_records_per_file=40)
     m = table.snapshot()
     assert "seq" in (m.properties.get("stat_columns") or [])
@@ -96,7 +96,7 @@ def test_seq_lower_bound_prunes_under_mor_debt(spark, skip_log, tmp_path):
     only shadowed or filtered-out rows); the upper bound never prunes."""
     log = spark.read.parquet(skip_log)
     table = _mktable(spark, tmp_path / "t", stat_columns=["repo", "path", "seq"])
-    replay(log, table, interval_size=250, mode="mor")
+    replay(log, table, interval_size=250)
     m = table.snapshot()
     assert int(m.properties["mor_appends"]) > 0
     live = len(m.files)
@@ -121,7 +121,7 @@ def test_patch_debt_disables_nonkey_pruning(spark, skip_log, tmp_path):
         spark, 2000, num_repos=20, paths_per_repo=25, patch_fraction=0.3
     )
     table = _mktable(spark, tmp_path / "t", stat_columns=["repo", "path", "seq"])
-    replay(log, table, interval_size=500, mode="mor")
+    replay(log, table, interval_size=500)
     m = table.snapshot()
     assert int(m.properties["patch_deltas"]) > 0
     live = len(m.files)
@@ -171,7 +171,7 @@ def test_compact_cli_clustering_flags(spark, skip_log, tmp_path):
     per-file` re-clusters the table and persists the stat columns."""
     log = spark.read.parquet(skip_log)
     table = _mktable(spark, tmp_path / "t")
-    replay(log, table, interval_size=1000, mode="mor")
+    replay(log, table, interval_size=1000)
     run = subprocess.run(
         [
             sys.executable, "-m", "multiversx_etl_spark", "--master", "local[2]",
@@ -215,7 +215,7 @@ def test_rebucket_rerecords_zone_maps(spark, skip_log, tmp_path):
     layout."""
     log = spark.read.parquet(skip_log)
     table = _mktable(spark, tmp_path / "t")
-    replay(log, table, interval_size=500, mode="mor")
+    replay(log, table, interval_size=500)
     table.compact(full=True, sort_columns=["seq"], max_records_per_file=40)
     table.rebucket(16)
     m = table.snapshot()

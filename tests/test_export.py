@@ -43,7 +43,7 @@ def test_export_is_engine_free_and_exact(spark, tmp_path):
         log_path, files=2,
     )
     table = ensure_table(spark, str(tmp_path / "t"), num_buckets=4)
-    replay(spark.read.parquet(log_path), table, interval_size=200, mode="mor")
+    replay(spark.read.parquet(log_path), table, interval_size=200)
     v1 = table.current_version()
 
     out1 = tmp_path / "out1"
@@ -100,7 +100,7 @@ def test_export_formats_ndjson_and_csv(spark, tmp_path):
         log_path, files=2,
     )
     table = ensure_table(spark, str(tmp_path / "t"), num_buckets=4)
-    replay(spark.read.parquet(log_path), table, interval_size=200, mode="mor")
+    replay(spark.read.parquet(log_path), table, interval_size=200)
     want = {
         (r["repo"], r["path"], r["seq"], r["content"])
         for r in table.read().select("repo", "path", "seq", "content").collect()

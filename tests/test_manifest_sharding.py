@@ -9,8 +9,9 @@ changed (Iceberg analog: manifest files + manifest list with partition-range
 pruning), and bucket-pruned reads parse only their pids' groups.
 
 These tests pin the contract: root-doc shape, ref reuse across commits
-(O(touched) commits), lazy group loading (O(touched) plans), format-1
-back-compat, O(1) rollback, and group-doc lifecycle under expire/GC.
+(O(touched) commits), lazy group loading (O(touched) plans), refusal of
+any other root-doc format, O(1) rollback, and group-doc lifecycle under
+expire/GC.
 """
 
 from __future__ import annotations
@@ -145,34 +146,27 @@ def test_bucket_pruned_read_loads_only_its_groups(spark, tmp_path):
     assert len(got) == 1 and got[0]["v"] == "v3"
 
 
-def test_format1_inline_manifest_still_readable(spark, tmp_path):
-    """A pre-sharding (format-1) manifest — inline ``files`` list — reads,
-    serves queries, and the NEXT commit converts the table to format 2."""
+def test_format1_inline_manifest_refused(spark, tmp_path):
+    """A root doc without ``"format": 2`` (e.g. a pre-sharding inline
+    ``files`` list) is input the engine cannot read: it is refused with an
+    error naming the format, never half-read as an empty table."""
     table = _mk(spark, tmp_path / "t")
     files = _write_rows(
         spark, table, [(i, 0, False, f"v{i}") for i in range(16)], "seed"
     )
     m = table.commit(files, replaced_pids=set(), operation="merge-seed")
-    # rewrite the live manifest in the OLD inline format
     doc = _root_doc(table)
     inline = {k: v for k, v in doc.items() if k not in ("format", "groups")}
     inline["files"] = m.files
     with open(table._manifest_path(m.version), "w") as fh:
         json.dump(inline, fh)
-
-    m1 = table.snapshot()
-    assert {f["path"] for f in m1.files} == {f["path"] for f in m.files}
-    assert m1.delta_pids() == set(m1.slot_pids())  # all MOR deltas, no refs
-    assert table.read().count() == 16
-    assert table.lookup(id=5).first()["v"] == "v5"
-
-    delta = _write_rows(spark, table, [(5, 1, False, "v5b")], "delta")
-    table.commit(
-        delta, replaced_pids=set(), operation="merge-delta",
-        properties={"mor_appends": 1},
+    with pytest.raises(ValueError, match="unsupported manifest format None"):
+        table.snapshot()
+    with pytest.raises(ValueError, match="unsupported manifest format 1"):
+        Manifest.from_json(json.dumps({**inline, "format": 1}))
+    assert Manifest.from_json(json.dumps(doc)).slot_pids() == sorted(
+        g["pid"] for g in doc["groups"]
     )
-    assert _root_doc(table)["format"] == 2
-    assert table.read().where(F.col("id") == 5).first()["v"] == "v5b"
 
 
 def test_rollback_carries_refs_without_new_group_docs(spark, tmp_path):
@@ -252,6 +246,35 @@ def test_reused_group_doc_mtime_refreshed(spark, tmp_path):
     table.commit(fs, replaced_pids={ref["pid"]}, operation="merge-redo")
     assert _root_doc(table)["groups"][0]["path"] == ref["path"]
     assert os.path.getmtime(doc) > old + 3600
+
+
+def test_reused_group_doc_restored_when_deleted_before_swap(
+    spark, tmp_path, monkeypatch
+):
+    """``_seal`` runs outside the commit lock, so a GC holding the lock can
+    delete a reused (still unreferenced) group doc before the root swap:
+    the commit re-checks its sealed docs under the lock and rewrites a
+    missing one, so the committed version reads back."""
+    table = _mk(spark, tmp_path / "t")
+    fs = _write_rows(spark, table, [(1, 0, False, "x")], "seed")
+    table.commit(fs, replaced_pids=set(), operation="merge-seed")
+    (ref,) = _root_doc(table)["groups"]
+    doc = os.path.join(table.root, ref["path"])
+    seal = Manifest._seal
+
+    def seal_then_gc(self, root):
+        sealed = seal(self, root)
+        os.remove(doc)  # what a racing gc_orphan_files(0) would do
+        return sealed
+
+    monkeypatch.setattr(Manifest, "_seal", seal_then_gc)
+    m = table.commit(fs, replaced_pids={ref["pid"]}, operation="merge-redo")
+    monkeypatch.undo()
+    assert _root_doc(table)["groups"][0]["path"] == ref["path"]
+    assert os.path.exists(doc)
+    fresh = LakeTable(spark, table.root)
+    assert [f["path"] for f in fresh.snapshot(m.version).files] == [f["path"] for f in fs]
+    assert [r["v"] for r in fresh.read().collect()] == ["x"]
 
 
 def test_added_files_skips_identical_refs(spark, tmp_path):

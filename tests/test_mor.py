@@ -1,5 +1,4 @@
-"""Merge-on-read mode: delta appends, read-time fold, compaction, and
-cow/mor equivalence (both modes must produce identical final state)."""
+"""Merge-on-read: delta appends, read-time fold and compaction."""
 
 from __future__ import annotations
 
@@ -27,26 +26,13 @@ def _state(table):
     }
 
 
-def test_mor_equals_cow(spark, mor_log, tmp_path):
-    log = spark.read.parquet(mor_log)
-    t_mor = ensure_table(spark, str(tmp_path / "mor"), num_buckets=8)
-    t_cow = ensure_table(spark, str(tmp_path / "cow"), num_buckets=8)
-    s_mor = replay(log, t_mor, interval_size=400, mode="mor")
-    s_cow = replay(log, t_cow, interval_size=400, mode="cow")
-    assert _state(t_mor) == _state(t_cow)
-    # merge stats agree too (same classification, different physical plan)
-    assert (s_mor.rows_inserted, s_mor.rows_updated, s_mor.rows_deleted) == (
-        s_cow.rows_inserted, s_cow.rows_updated, s_cow.rows_deleted
-    )
-
-
 def test_mor_appends_only(spark, mor_log, tmp_path):
     """MOR epochs never remove files (append-only); file count grows, and
     the mor_appends counter tracks outstanding deltas."""
     log = spark.read.parquet(mor_log)
     table = ensure_table(spark, str(tmp_path / "t"), num_buckets=8)
     seen = []
-    replay(log, table, interval_size=400, mode="mor",
+    replay(log, table, interval_size=400,
            on_epoch=lambda e, s: seen.append(len(table.snapshot().files)))
     assert seen == sorted(seen)  # monotone non-decreasing
     # the counter tracks epochs that actually ADDED delta files (an
@@ -58,7 +44,7 @@ def test_mor_appends_only(spark, mor_log, tmp_path):
 def test_compaction_preserves_state_and_resets_fold(spark, mor_log, tmp_path):
     log = spark.read.parquet(mor_log)
     table = ensure_table(spark, str(tmp_path / "t"), num_buckets=8)
-    replay(log, table, interval_size=400, mode="mor")
+    replay(log, table, interval_size=400)
     before = _state(table)
     files_before = len(table.snapshot().files)
     table.compact()
@@ -75,8 +61,8 @@ def test_periodic_compaction_during_replay(spark, mor_log, tmp_path):
     log = spark.read.parquet(mor_log)
     t_a = ensure_table(spark, str(tmp_path / "a"), num_buckets=8)
     t_b = ensure_table(spark, str(tmp_path / "b"), num_buckets=8)
-    replay(log, t_a, interval_size=400, mode="mor", compact_every=2)
-    replay(log, t_b, interval_size=400, mode="mor")
+    replay(log, t_a, interval_size=400, compact_every=2)
+    replay(log, t_b, interval_size=400)
     assert _state(t_a) == _state(t_b)
     assert len(t_a.snapshot().files) <= len(t_b.snapshot().files)
 
@@ -86,11 +72,11 @@ def test_merge_after_compaction_continues(spark, mor_log, tmp_path):
     compact, replay the rest — state identical to uninterrupted replay."""
     log = spark.read.parquet(mor_log)
     t_a = ensure_table(spark, str(tmp_path / "a"), num_buckets=8)
-    replay(log, t_a, interval_size=400, mode="mor", max_epochs=3)
+    replay(log, t_a, interval_size=400, max_epochs=3)
     t_a.compact()
-    replay(log, t_a, interval_size=400, mode="mor")
+    replay(log, t_a, interval_size=400)
     t_b = ensure_table(spark, str(tmp_path / "b"), num_buckets=8)
-    replay(log, t_b, interval_size=400, mode="mor")
+    replay(log, t_b, interval_size=400)
     assert _state(t_a) == _state(t_b)
 
 
@@ -275,7 +261,7 @@ def test_compacted_base_files_are_key_sorted(spark, mor_log, tmp_path):
 
     log = spark.read.parquet(mor_log)
     table = ensure_table(spark, str(tmp_path / "t"), num_buckets=8)
-    replay(log, table, interval_size=400, mode="mor")
+    replay(log, table, interval_size=400)
     table.compact()
     checked = 0
     for f in table.snapshot().files:

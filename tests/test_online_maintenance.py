@@ -170,27 +170,23 @@ def test_compact_full_retry_when_rival_compacts(spark, tmp_path):
     assert _state(table) == {("rA", "a.py"): (2, "c2", "py", "v2")}
 
 
-def test_compact_full_retry_when_rival_cow_merge_consumes_files(spark, tmp_path):
-    """A copy-on-write merge replaces whole pid groups — the compaction's
-    folded files are no longer live, rebase refuses, and the retry folds
-    the cow output instead."""
+def test_rebase_unsound_when_replaced_file_not_live(spark, tmp_path):
+    """Liveness check (b) of _rebase_sound on its own: over a sound chain of
+    merges, a rewrite whose replaced files include one no longer live in
+    the parent must not rebase."""
     table = _mk_table(spark, tmp_path)
     merge_batch(table, _batch(spark, [
         (0, 1, "insert", "rA", "a.py", "c1", "py", "v1"),
     ]), "main", 0, 0, 1)
+    base = table.snapshot()
     merge_batch(table, _batch(spark, [
         (1, 2, "update", "rA", "a.py", "c2", "py", "v2"),
     ]), "main", 1, 1, 2)
-
-    rival = LakeTable(spark, table.root)
-    _inject_on_commit(table, "compact", lambda: merge_batch(
-        rival,
-        _batch(spark, [(2, 3, "update", "rA", "a.py", "c3", "py", "v3")]),
-        "main", 2, 2, 3, mode="cow",
-    ))
-    m = table.compact(full=True)
-    assert m.operation == "compact"
-    assert _state(table) == {("rA", "a.py"): (3, "c3", "py", "v3")}
+    parent = table.snapshot()
+    live = {f["path"] for f in base.files}
+    assert table._rebase_sound(base, parent, live)
+    gone = live | {"data/consumed-by-a-rival.parquet"}
+    assert not table._rebase_sound(base, parent, gone)
 
 
 def test_rebucket_retries_over_concurrent_merge(spark, tmp_path):

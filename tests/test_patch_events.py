@@ -90,7 +90,7 @@ def orphan_patch_stats(log_path: str):
 def test_patch_replay_matches_per_column_oracle(spark, patch_log, tmp_path):
     log = spark.read.parquet(patch_log)
     table = ensure_table(spark, str(tmp_path / "t"), num_buckets=8)
-    s = replay(log, table, interval_size=600, mode="mor")
+    s = replay(log, table, interval_size=600)
     assert sum(st.rows_patched for st in s.stats) > 0
     assert int(table.snapshot().properties["patch_deltas"]) > 0
     assert table_state(table) == oracle_state(patch_log)
@@ -107,12 +107,12 @@ def test_patch_epoching_invariance_and_idempotence(spark, patch_log, tmp_path):
     log = spark.read.parquet(patch_log)
     t_many = ensure_table(spark, str(tmp_path / "m"), num_buckets=8)
     t_one = ensure_table(spark, str(tmp_path / "o"), num_buckets=8)
-    replay(log, t_many, interval_size=300, mode="mor")
-    replay(log, t_one, interval_size=10**9, mode="mor")
+    replay(log, t_many, interval_size=300)
+    replay(log, t_one, interval_size=10**9)
     assert table_state(t_many) == table_state(t_one) == oracle_state(patch_log)
     # full re-replay: every epoch short-circuits on its marker, state fixed
     before = t_many.current_version()
-    s = replay(log, t_many, interval_size=300, mode="mor")
+    s = replay(log, t_many, interval_size=300)
     assert s.epochs_run == 0 and s.epochs_skipped > 0
     assert t_many.current_version() == before
 
@@ -124,7 +124,7 @@ def test_patch_compact_finalizes(spark, patch_log, tmp_path):
     remaining patch debt."""
     log = spark.read.parquet(patch_log)
     table = ensure_table(spark, str(tmp_path / "t"), num_buckets=8)
-    replay(log, table, interval_size=600, mode="mor")
+    replay(log, table, interval_size=600)
     want = oracle_state(patch_log)
     table.compact()
     m = table.snapshot()
@@ -137,7 +137,7 @@ def test_patch_compact_finalizes(spark, patch_log, tmp_path):
     # the per-column state really lives in the map: contested rows exist
     raw = table.read(raw=True, with_action=True)
     assert raw.where(F.col("_colseq").isNotNull()).count() > 0
-    # dropping the orphans clears ALL patch debt (cow becomes legal again)
+    # dropping the orphans clears ALL patch debt
     table.compact(drop_orphan_patches=True)
     m2 = table.snapshot()
     assert int(m2.properties["patch_deltas"]) == 0
@@ -146,7 +146,7 @@ def test_patch_compact_finalizes(spark, patch_log, tmp_path):
     # periodic compaction mid-replay agrees too — and is now exact even
     # when pairs straddle lateness (no bounded-lateness contract)
     t2 = ensure_table(spark, str(tmp_path / "t2"), num_buckets=8)
-    replay(log, t2, interval_size=600, mode="mor", compact_every=2)
+    replay(log, t2, interval_size=600, compact_every=2)
     assert table_state(t2) == want
 
 
@@ -192,7 +192,7 @@ def test_patch_finalize_roundtrip(spark, patch_log, tmp_path):
     and re-compacting is stable."""
     log = spark.read.parquet(patch_log)
     table = ensure_table(spark, str(tmp_path / "t"), num_buckets=8)
-    replay(log, table, interval_size=600, mode="mor")
+    replay(log, table, interval_size=600)
     want = oracle_state(patch_log)
     before = int(table.snapshot().properties["patch_deltas"])
     m = table.compact()
@@ -205,28 +205,6 @@ def test_patch_finalize_roundtrip(spark, patch_log, tmp_path):
     m2 = table.compact()
     assert int(m2.properties["patch_deltas"]) == orphan_rows
     assert table_state(table) == want
-
-
-def test_patch_requires_mor(spark, patch_log, tmp_path):
-    log = spark.read.parquet(patch_log)
-    table = ensure_table(spark, str(tmp_path / "t"), num_buckets=8)
-    with pytest.raises(ValueError, match="mor"):
-        replay(log, table, interval_size=600, mode="cow")
-    # and a cow merge over OUTSTANDING patch generations is refused too
-    replay(log, table, interval_size=600, mode="mor", max_epochs=2)
-    full_only = log.where(F.col("op") != "patch")
-    with pytest.raises(ValueError, match="compact"):
-        replay(full_only, table, interval_size=600, mode="cow")
-    table.compact()  # finalization absorbs contested patches into _colseq…
-    # …but orphans (no full image yet) remain generations and still block
-    # cow; the fixture log is guaranteed to contain some
-    assert orphan_patch_stats(patch_log)[0] > 0
-    assert int(table.snapshot().properties["patch_deltas"]) > 0
-    with pytest.raises(ValueError, match="compact"):
-        replay(full_only, table, interval_size=600, mode="cow")
-    table.compact(drop_orphan_patches=True)  # the explicit escape hatch
-    # cow is legal again — and stays per-column exact over _colseq rows
-    replay(full_only, table, interval_size=600, mode="cow")
 
 
 def test_patch_streaming_face(spark, patch_log, tmp_path):
@@ -243,7 +221,7 @@ def test_patch_replication_chain(spark, patch_log, tmp_path):
     src = ensure_table(spark, str(tmp_path / "src"), num_buckets=8)
     dst = ensure_table(spark, str(tmp_path / "dst"), num_buckets=8)
     for k in range(3):
-        replay(log, src, interval_size=1000, mode="mor",
+        replay(log, src, interval_size=1000,
                max_epochs=1 + k)  # advance one epoch per round
         replicate_changes(src, dst)
     assert table_state(dst) == table_state(src) == oracle_state(patch_log)
@@ -255,7 +233,7 @@ def test_patch_rebucket_finalizes(spark, patch_log, tmp_path):
     orphans rewritten as generations)."""
     log = spark.read.parquet(patch_log)
     table = ensure_table(spark, str(tmp_path / "t"), num_buckets=4)
-    replay(log, table, interval_size=600, mode="mor")
+    replay(log, table, interval_size=600)
     want = oracle_state(patch_log)
     assert int(table.snapshot().properties["patch_deltas"]) > 0
     m = table.rebucket(16)
@@ -280,7 +258,7 @@ def test_patch_orphan_is_noop(spark, tmp_path):
     ]
     log = spark.createDataFrame(rows, CHANGE_EVENTS)
     table = ensure_table(spark, str(tmp_path / "t"), num_buckets=4)
-    replay(log, table, interval_size=10, total_offsets=3, mode="mor")
+    replay(log, table, interval_size=10, total_offsets=3)
     got = {
         (r["repo"], r["path"]): (r["lang"], r["content"], r["seq"])
         for r in table.read().collect()
@@ -318,7 +296,7 @@ def test_patch_with_schema_evolution(spark, tmp_path):
     ]
     log1 = spark.createDataFrame(base_rows, CHANGE_EVENTS)
     table = ensure_table(spark, str(tmp_path / "t"), num_buckets=4)
-    replay(log1, table, interval_size=10, total_offsets=2, mode="mor")
+    replay(log1, table, interval_size=10, total_offsets=2)
 
     evolved = StructType(list(CHANGE_EVENTS.fields) + [StructField("stars", StringType(), True)])
     rows2 = [
@@ -360,7 +338,7 @@ def test_patch_delete_interplay(spark, tmp_path):
     ]
     log = spark.createDataFrame(rows, CHANGE_EVENTS)
     table = ensure_table(spark, str(tmp_path / "t"), num_buckets=4)
-    replay(log, table, interval_size=100, total_offsets=6, mode="mor")
+    replay(log, table, interval_size=100, total_offsets=6)
     got = table.read().collect()
     assert len(got) == 1
     r = got[0]
@@ -440,60 +418,6 @@ def test_colseq_read_is_projection_only(spark, tmp_path):
     assert "_colseq" not in df.columns
 
 
-def test_colseq_cow_merge_exact(spark, tmp_path):
-    """Copy-on-write over finalized _colseq rows: the per-column COW fold
-    keeps a patched-newer column through a later full image, rewrites
-    carries verbatim (entries included), and classification/ledger stats
-    stay exact."""
-    from multiversx_etl_spark.schemas import CHANGE_EVENTS
-    from multiversx_etl_spark.streaming.ingest import apply_epoch
-
-    table = ensure_table(spark, str(tmp_path / "t"), num_buckets=4)
-    e0 = [
-        (0, 0, "insert", "r1", "p1", "c0", "python", "body0", None),
-        (1, 9, "patch", "r1", "p1", None, "go", None, None),
-        (2, 0, "insert", "r1", "p2", "c0", "java", "jbody", None),
-    ]
-    apply_epoch(table, spark.createDataFrame(e0, CHANGE_EVENTS), "main", 0, 0, 3)
-    table.compact()
-    # cow update BETWEEN p1's base(0) and its patched lang(9); p2 plain
-    e1 = [
-        (3, 4, "update", "r1", "p1", "c4", "haskell", "body4", None),
-        (4, 6, "update", "r1", "p2", "c6", "kotlin", "kbody6", None),
-    ]
-    s = apply_epoch(
-        table, spark.createDataFrame(e1, CHANGE_EVENTS), "main", 1, 3, 5, mode="cow"
-    )
-    assert s.rows_updated == 2
-    got = {
-        r["path"]: (r["seq"], r["lang"], r["content"], r["commit"])
-        for r in table.read().collect()
-    }
-    assert got["p1"] == (9, "go", "body4", "c4")      # patched lang survives
-    assert got["p2"] == (6, "kotlin", "kbody6", "c6")
-    raw = {r["path"]: r["_colseq"] for r in table.read(raw=True).collect()}
-    assert raw["p1"] == {"lang": 9} and raw["p2"] is None
-    # a second cow batch where p1 CARRIES (lower seq): entry kept verbatim
-    e2 = [(5, 2, "update", "r1", "p1", "c2", "perl", "body2", None)]
-    s2 = apply_epoch(
-        table, spark.createDataFrame(e2, CHANGE_EVENTS), "main", 2, 5, 6, mode="cow"
-    )
-    assert s2.rows_updated == 0
-    raw2 = {r["path"]: r["_colseq"] for r in table.read(raw=True).collect()}
-    assert raw2["p1"] == {"lang": 9}
-    got2 = {r["path"]: (r["seq"], r["lang"], r["content"]) for r in table.read().collect()}
-    assert got2["p1"] == (9, "go", "body4")
-    # a cow full image NEWER than the patched column clears the entry
-    e3 = [(6, 11, "update", "r1", "p1", "c11", "zig", "body11", None)]
-    apply_epoch(
-        table, spark.createDataFrame(e3, CHANGE_EVENTS), "main", 3, 6, 7, mode="cow"
-    )
-    raw3 = {r["path"]: r["_colseq"] for r in table.read(raw=True).collect()}
-    assert raw3["p1"] is None
-    got3 = {r["path"]: (r["seq"], r["lang"]) for r in table.read().collect()}
-    assert got3["p1"] == (11, "zig")
-
-
 def test_colseq_replication_with_midchain_finalize(spark, patch_log, tmp_path):
     """changes() skips compact commits, so finalizing the SOURCE mid-chain
     never leaks _colseq rows into the feed — the replica converges on the
@@ -504,7 +428,7 @@ def test_colseq_replication_with_midchain_finalize(spark, patch_log, tmp_path):
     src = ensure_table(spark, str(tmp_path / "src"), num_buckets=8)
     dst = ensure_table(spark, str(tmp_path / "dst"), num_buckets=8)
     for k in range(3):
-        replay(log, src, interval_size=1000, mode="mor", max_epochs=1 + k)
+        replay(log, src, interval_size=1000, max_epochs=1 + k)
         if k == 1:
             src.compact()  # finalize mid-chain (colseq rows on src only)
         replicate_changes(src, dst)

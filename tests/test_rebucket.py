@@ -37,7 +37,7 @@ def test_rebucket_preserves_state_and_folds(spark, rb_log, tmp_path):
     layout, and every file group lands in a valid new-layout pid."""
     log = spark.read.parquet(rb_log)
     table = ensure_table(spark, str(tmp_path / "t"), num_buckets=4)
-    replay(log, table, interval_size=400, mode="mor")
+    replay(log, table, interval_size=400)
     before = _state(table)
     assert int(table.snapshot().properties["mor_appends"]) > 0
     m = table.rebucket(16)

@@ -169,19 +169,18 @@ def test_reseed_preserves_colseq_state(spark, tmp_path):
     assert got_src == got_dst == want
 
 
-def test_replicate_cow_colseq_rows_decomposed(spark, tmp_path):
-    """Feed rows rewritten by a copy-on-write merge over finalized
-    per-column state mix writer seqs; replication must decompose them
-    (full image + synthetic patches) or the replica diverges on the next
-    in-between event."""
+def test_replicate_merge_over_colseq_rows(spark, tmp_path):
+    """A merge over finalized per-column state appends a plain row image
+    (the source's _colseq row stays in its compacted base, which the feed
+    skips): the replica must still agree on the next in-between event."""
     src = _mk(spark, tmp_path, "src")
     dst = _mk(spark, tmp_path, "dst")
     merge_batch(src, _batch(spark, [(0, 0, "insert", "r", "a.py", "c0", "py", "v0")]), "m", 0, 0, 1)
     merge_batch(src, _batch(spark, [(1, 9, "patch", "r", "a.py", None, "go", None)]), "m", 1, 1, 2)
     replicate_changes(src, dst)
     src.compact()  # colseq row on src (compact commits don't enter the feed)
-    # cow rewrite at seq 4: the written row has seq 4 but lang written @9
-    merge_batch(src, _batch(spark, [(2, 4, "update", "r", "a.py", "c4", "hs", "v4")]), "m", 2, 2, 3, mode="cow")
+    # full image at seq 4, below the finalized lang written @9
+    merge_batch(src, _batch(spark, [(2, 4, "update", "r", "a.py", "c4", "hs", "v4")]), "m", 2, 2, 3)
     replicate_changes(src, dst)
     # the divergence trigger: a full image between 4 and 9
     merge_batch(src, _batch(spark, [(3, 6, "update", "r", "a.py", "c6", "rust", "v6")]), "m", 3, 3, 4)
@@ -191,34 +190,6 @@ def test_replicate_cow_colseq_rows_decomposed(spark, tmp_path):
     got_dst = {(r["repo"], r["path"], r["seq"], r["lang"], r["content"], r["commit"])
                for r in dst.read().collect()}
     assert got_src == got_dst == {("r", "a.py", 9, "go", "v6", "c6")}
-
-
-def test_replicate_decomposition_same_seq_columns(spark, tmp_path):
-    """Two columns last written by the SAME patch seq ride ONE synthetic
-    patch event: one event per _colseq entry would put them into separate
-    rows at the same (key, seq), which the merge's redelivery dedup
-    collapses to one. Internally that drop is masked by history redundancy
-    (the feed also delivers the original patch, or a reseed clone carries
-    _colseq), so this test pins the end-to-end scenario rather than
-    distinguishing the shapes — the single-event form is what makes the
-    decomposed feed a STANDALONE-exact contract for external consumers."""
-    src = _mk(spark, tmp_path, "src")
-    dst = _mk(spark, tmp_path, "dst")
-    merge_batch(src, _batch(spark, [(0, 0, "insert", "r", "a.py", "c0", "py", "v0")]), "m", 0, 0, 1)
-    # ONE patch @9 writing BOTH lang and content
-    merge_batch(src, _batch(spark, [(1, 9, "patch", "r", "a.py", None, "go", "v9")]), "m", 1, 1, 2)
-    replicate_changes(src, dst)
-    src.compact()  # colseq {lang: 9, content: 9}
-    merge_batch(src, _batch(spark, [(2, 4, "update", "r", "a.py", "c4", "hs", "v4")]), "m", 2, 2, 3, mode="cow")
-    replicate_changes(src, dst)
-    # divergence trigger for EITHER column: a full image between 4 and 9
-    merge_batch(src, _batch(spark, [(3, 6, "update", "r", "a.py", "c6", "rust", "v6")]), "m", 3, 3, 4)
-    replicate_changes(src, dst)
-    got_src = {(r["repo"], r["path"], r["seq"], r["lang"], r["content"], r["commit"])
-               for r in src.read().collect()}
-    got_dst = {(r["repo"], r["path"], r["seq"], r["lang"], r["content"], r["commit"])
-               for r in dst.read().collect()}
-    assert got_src == got_dst == {("r", "a.py", 9, "go", "v9", "c6")}
 
 
 def test_reseed_casts_to_replica_declared_types(spark, tmp_path):

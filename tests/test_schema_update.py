@@ -132,7 +132,7 @@ def _build_repos_table(spark, tmp_path, n=400):
         files=2,
     )
     table = ensure_table(spark, str(tmp_path / "t"), num_buckets=4)
-    replay(spark.read.parquet(log_path), table, interval_size=200, mode="mor")
+    replay(spark.read.parquet(log_path), table, interval_size=200)
     return table
 
 
