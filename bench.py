@@ -31,6 +31,7 @@ import shutil
 import sys
 import tempfile
 import time
+from collections import Counter
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -86,13 +87,23 @@ def run_query_suite(spark, sf_dir: str) -> dict[str, float]:
     return timings, construct, samples
 
 
+def _require_join(face: str, stats) -> None:
+    """The merge derives its fold, so a join face whose epoch took the
+    union fold (its bucketed input stopped matching the table) would
+    publish a union number under the join name: fail the face instead,
+    with the merge's reason."""
+    union = [(i, st.fold_reason) for i, st in enumerate(stats) if st.fold == "union"]
+    if not stats or union:
+        raise RuntimeError(f"{face}: epochs ran the union fold: {union}")
+
+
 def run_cdc_replay(
     spark,
     workdir: str,
     n_events: int = 0,
     patch_fraction: float = 0.0,
     tag: str = "",
-    fold: str = "union",
+    bucketed: bool = False,
 ) -> dict[str, float]:
     """Headline: materialize a synthetic change log to parquet, then replay
     it through the exactly-once MERGE pipeline in NUM_EPOCHS micro-batches.
@@ -105,8 +116,9 @@ def run_cdc_replay(
     (VERDICT r02 item #5). All samples are reported alongside.
 
     ``patch_fraction``/``n_events``/``tag`` parameterize the PARTIAL-IMAGE
-    face, ``fold='join'`` the ZERO-EXCHANGE face (bucketed catalog log +
-    layout='spark' table) — all over the same measurement protocol (one
+    face, ``bucketed=True`` the ZERO-EXCHANGE face (bucketed catalog log +
+    layout='spark' table, from which the merge derives the join fold;
+    every epoch must run it) — all over the same measurement protocol (one
     protocol, one function — a one-sided edit to the warm/repeat/best
     logic must be impossible)."""
     from multiversx_etl_spark.lake.table import LakeTable
@@ -128,7 +140,7 @@ def run_cdc_replay(
         partitions=max(CPUS * 2, 8), patch_fraction=patch_fraction,
     )
     t0 = time.perf_counter()
-    if fold == "join":
+    if bucketed:
         # compact_files: one file per bucket — the per-window landing-zone
         # shape; the stream face derives maxFilesPerTrigger from the file
         # count so the batch count stays equal across faces regardless
@@ -141,7 +153,7 @@ def run_cdc_replay(
 
     import pyspark.sql.functions as F
 
-    log_df = spark.table(log_table) if fold == "join" else spark.read.parquet(log_path)
+    log_df = spark.table(log_table) if bucketed else spark.read.parquet(log_path)
     # Warm the page cache by touching actual data pages (a bare count() reads
     # only parquet footers): the metric is SUSTAINED replay throughput.
     log_df.agg(F.sum(F.length("content")), F.sum("seq")).collect()
@@ -153,13 +165,13 @@ def run_cdc_replay(
         table = LakeTable.create(
             spark, os.path.join(workdir, f"table{tag}-r{rep}"), REPOS,
             key_columns=["repo", "path"], num_buckets=NUM_BUCKETS,
-            layout="spark" if fold == "join" else "xxhash",
+            layout="spark" if bucketed else "xxhash",
         )
         t0 = time.perf_counter()
-        summary = replay(
-            log_df, table, interval_size=interval, total_offsets=total, fold=fold
-        )
+        summary = replay(log_df, table, interval_size=interval, total_offsets=total)
         replay_sec = time.perf_counter() - t0
+        if bucketed:
+            _require_join(f"cdc_join_replay rep {rep}", summary.stats)
         samples.append(round(replay_sec, 3))
         if best is None or replay_sec < best[0]:
             best = (replay_sec, summary, table)
@@ -177,10 +189,11 @@ def run_cdc_replay(
         "rows_updated": summary.rows_updated,
         "rows_deleted": summary.rows_deleted,
         "rows_patched": sum(st.rows_patched for st in summary.stats),
+        "folds": dict(Counter(st.fold for st in summary.stats if st.fold)),
     }
 
 
-def run_cdc_stream(spark, workdir: str, tag: str = "", fold: str = "union") -> dict[str, float]:
+def run_cdc_stream(spark, workdir: str, tag: str = "", bucketed: bool = False) -> dict[str, float]:
     """The Structured Streaming face of the same ingest (readStream →
     foreachBatch MERGE, availableNow drain) over the log run_cdc_replay
     already wrote — the north star's primary surface, measured separately
@@ -188,9 +201,10 @@ def run_cdc_stream(spark, workdir: str, tag: str = "", fold: str = "union") -> d
     batch replay doesn't pay. Same repeat-and-take-best protocol as the
     replay (fresh table + checkpoint dirs per run).
 
-    ``fold='join'`` streams over the BUCKETED log dir the join replay face
-    wrote: each micro-batch re-stages its own whole files as a catalog
-    bucketed table and merges with zero exchanges (streaming/ingest.py)."""
+    ``bucketed=True`` streams over the BUCKETED log dir the join replay
+    face wrote into a spark-layout table: each micro-batch re-stages its
+    own whole files as a catalog bucketed table and merges with zero
+    exchanges (streaming/ingest.py); every epoch must run the join fold."""
     from multiversx_etl_spark.streaming.ingest import ensure_table, stream_ingest
 
     log_path = os.path.join(workdir, f"log{tag}")
@@ -211,25 +225,30 @@ def run_cdc_stream(spark, workdir: str, tag: str = "", fold: str = "union") -> d
         table = ensure_table(
             spark, os.path.join(workdir, f"stream_table{tag}-r{rep}"),
             num_buckets=NUM_BUCKETS,
-            layout="spark" if fold == "join" else "xxhash",
+            layout="spark" if bucketed else "xxhash",
         )
+        stats = []
         t0 = time.perf_counter()
         stream_ingest(
             spark, log_path, table, os.path.join(workdir, f"ckpt{tag}-r{rep}"),
             max_files_per_trigger=mfpt,
-            fold=fold,
+            on_epoch=lambda _e, st: stats.append(st),
         )
         wall = time.perf_counter() - t0
+        folds = dict(Counter(st.fold for st in stats if st.fold))
+        if bucketed:
+            _require_join(f"cdc_join_stream rep {rep}", stats)
         samples.append(round(wall, 3))
         if best is None or wall < best[0]:
-            best = (wall, table)
-    wall, table = best
+            best = (wall, table, folds)
+    wall, table, folds = best
     return {
         "events": n,
         "stream_sec": round(wall, 3),
         "stream_samples": samples,
         "events_per_sec": round(n / wall, 1),
         "final_rows": table.read().count(),
+        "folds": folds,
     }
 
 
@@ -302,13 +321,14 @@ def main() -> None:
         )
         timings["cdc_patch_replay"] = patch["replay_sec"]
         # zero-exchange face: bucketed catalog log into a layout='spark'
-        # table, fold='join' — same protocol, full headline event count
-        join = run_cdc_replay(spark, workdir, tag="j", fold="join")
+        # table, the join fold derived on every epoch — same protocol,
+        # full headline event count
+        join = run_cdc_replay(spark, workdir, tag="j", bucketed=True)
         timings["cdc_join_replay"] = join["replay_sec"]
         # zero-exchange STREAMING face: same bucketed log, each micro-batch
         # re-staged as a catalog bucketed table (whole-file scheduling) —
         # the join fold's streaming twin
-        jstream = run_cdc_stream(spark, workdir, tag="j", fold="join")
+        jstream = run_cdc_stream(spark, workdir, tag="j", bucketed=True)
         timings["cdc_join_stream"] = jstream["stream_sec"]
         canary.update(run_canary(spark, workdir, "end"))
         harness = round(time.perf_counter() - t_total, 3)
@@ -356,10 +376,12 @@ def main() -> None:
             "cdc_join_replay_sec": join["replay_sec"],
             "cdc_join_replay_samples": join["replay_samples"],
             "cdc_join_final_rows": join["final_rows"],
+            "cdc_join_folds": join["folds"],
             "cdc_join_stream_events_per_sec": jstream["events_per_sec"],
             "cdc_join_stream_sec": jstream["stream_sec"],
             "cdc_join_stream_samples": jstream["stream_samples"],
             "cdc_join_stream_final_rows": jstream["final_rows"],
+            "cdc_join_stream_folds": jstream["folds"],
         }
         line = json.dumps(out)
         # Sidecar copy survives even if something else pollutes stdout.

@@ -39,6 +39,7 @@ from __future__ import annotations
 import argparse
 import json
 import sys
+from collections import Counter
 
 import pyspark.sql.functions as F
 
@@ -79,8 +80,8 @@ def main(argv: list[str] | None = None) -> int:
     g.add_argument(
         "--bucketed", type=int, default=None, metavar="B",
         help="write a CATALOG-BUCKETED log (bucketBy(B, key) files) instead "
-        "of offset-ranged plain parquet — the input shape the zero-exchange "
-        "replay (--fold join) consumes",
+        "of offset-ranged plain parquet — the input shape a replay or stream "
+        "into a spark-layout table of B buckets merges with zero exchanges",
     )
     g.add_argument(
         "--table", default=None, metavar="INDEX",
@@ -100,8 +101,8 @@ def main(argv: list[str] | None = None) -> int:
     i.add_argument(
         "--layout", choices=["xxhash", "spark"], default="xxhash",
         help="'spark' = Spark-native bucket hash (pid == bucket): the "
-        "table's files double as catalog bucket files, enabling the "
-        "zero-exchange merge fold (replay --fold join)",
+        "table's files double as catalog bucket files, so a matching "
+        "bucketed log merges with zero exchanges",
     )
 
     r = sub.add_parser("replay", help="exactly-once replay of a parquet log")
@@ -112,22 +113,11 @@ def main(argv: list[str] | None = None) -> int:
         "--buckets", type=int, default=None,
         help="bucket count when the table does not exist yet (default: the "
         "log's _bucket_spec.json count if bucketed, else 16 — so a bare "
-        "replay over a bucketed log gets a join-fold-capable table)",
+        "replay over a bucketed log gets a join-fold-capable table; a new "
+        "table is spark-layout exactly when the sidecar matches)",
     )
     r.add_argument("--max-epochs", type=int, default=None)
     r.add_argument("--compact-every", type=int, default=None)
-    r.add_argument(
-        "--fold", choices=["auto", "union", "join"], default="auto",
-        help="'join' = zero-exchange fold over a --bucketed log into a "
-        "--layout spark table (self-downgrades per batch on patches/NULL "
-        "keys); 'auto' (default) picks join whenever the log's "
-        "_bucket_spec.json sidecar matches the table, union otherwise",
-    )
-    r.add_argument(
-        "--layout", choices=["xxhash", "spark"], default=None,
-        help="layout when the table does not exist yet (default: spark "
-        "for --fold join or an auto-detected bucketed log, xxhash otherwise)",
-    )
     r.add_argument(
         "--log-format", choices=["parquet", "ndjson", "orc", "csv"],
         default="parquet",
@@ -142,7 +132,8 @@ def main(argv: list[str] | None = None) -> int:
     s.add_argument(
         "--buckets", type=int, default=None,
         help="bucket count when the table does not exist yet (default: the "
-        "log's _bucket_spec.json count if bucketed, else 16)",
+        "log's _bucket_spec.json count if bucketed, else 16; a new table is "
+        "spark-layout exactly when the sidecar matches)",
     )
     s.add_argument("--max-files-per-trigger", type=int, default=4)
     s.add_argument(
@@ -156,18 +147,6 @@ def main(argv: list[str] | None = None) -> int:
         "--trigger-interval", default=None, metavar="DURATION",
         help="run CONTINUOUSLY with a processingTime trigger (e.g. '3600 seconds', "
         "the reference's loop cadence) until interrupted; default drains once",
-    )
-    s.add_argument(
-        "--fold", choices=["auto", "union", "join"], default="auto",
-        help="'join' = zero-exchange fold per micro-batch (each batch's "
-        "whole files re-staged as a catalog bucketed table); 'auto' "
-        "(default) engages it when the log's _bucket_spec.json sidecar "
-        "matches the table",
-    )
-    s.add_argument(
-        "--layout", choices=["xxhash", "spark"], default=None,
-        help="layout when the table does not exist yet (default: spark "
-        "for --fold join or an auto-detected bucketed log, xxhash otherwise)",
     )
 
     c = sub.add_parser(
@@ -628,6 +607,33 @@ def _package(out: str) -> int:
     return 0
 
 
+def _table_for_log(spark, root: str, log_path: str, buckets: int | None,
+                   log_format: str):
+    """Open-or-create the table ``replay``/``stream`` feed from the log at
+    ``log_path``. A NEW table takes ``--buckets``, else the log sidecar's
+    count, else 16, and is spark-layout exactly when the sidecar matches
+    (sources/changelog.py ``new_table_layout``)."""
+    from multiversx_etl_spark.sources.changelog import (
+        log_dir_spec,
+        new_table_layout,
+    )
+    from multiversx_etl_spark.streaming.ingest import ensure_table
+
+    buckets = buckets or (
+        log_dir_spec(log_path, log_format) or {}
+    ).get("num_buckets") or 16
+    layout = new_table_layout(
+        log_path, num_buckets=buckets, key_columns=["repo", "path"],
+        log_format=log_format,
+    )
+    return ensure_table(spark, root, num_buckets=buckets, layout=layout)
+
+
+def _fold_counts(stats) -> dict:
+    """fold -> epochs that ran it (epochs where no fold ran are left out)."""
+    return dict(Counter(st.fold for st in stats if st.fold))
+
+
 def _dispatch(spark, args) -> int:
     from multiversx_etl_spark.lake.table import LakeTable
     from multiversx_etl_spark.schemas import REPOS
@@ -685,55 +691,21 @@ def _dispatch(spark, args) -> int:
         return 0
 
     if args.cmd == "replay":
-        from multiversx_etl_spark.sources.changelog import (
-            read_bucket_spec,
-            resolve_fold_auto,
+        from multiversx_etl_spark.sources.changelog import open_log_for_table
+        from multiversx_etl_spark.streaming.ingest import replay
+
+        table = _table_for_log(spark, args.table, args.log, args.buckets,
+                               args.log_format)
+        log = open_log_for_table(
+            spark, args.log, table.snapshot(), args.log_format,
+            table_name="mxetl_log_cli",
         )
-        from multiversx_etl_spark.streaming.ingest import ensure_table, replay
-
-        # a NEW table defaults to what the fold wants: spark layout (and the
-        # sidecar's bucket count) when the join fold is requested or the log
-        # is detectably bucketed — a bare `replay` over a bucketed log must
-        # not bake in a mismatched count that locks the join fold out forever
-        spec = read_bucket_spec(args.log)
-        wants_join = args.fold == "join" or (args.fold == "auto" and spec)
-        layout = args.layout or ("spark" if wants_join else "xxhash")
-        buckets = args.buckets or (
-            spec.get("num_buckets") if wants_join and spec else None
-        ) or 16
-        table = ensure_table(
-            spark, args.table, num_buckets=buckets, layout=layout
-        )
-        m = table.snapshot()
-        fold = args.fold
-        if fold == "auto":
-            fold, downgraded = resolve_fold_auto(
-                args.log, layout=m.layout,
-                num_buckets=m.num_buckets, key_columns=m.key_columns,
-                spec=spec,
-            )
-            if downgraded:
-                print(
-                    f"note: bucketed log but union fold: {downgraded}",
-                    file=sys.stderr,
-                )
-        if fold == "join":
-            from multiversx_etl_spark.sources.changelog import register_log_bucketed
-
-            log = register_log_bucketed(
-                spark, args.log, m.num_buckets, table_name="mxetl_log_cli",
-            )
-        else:
-            from multiversx_etl_spark.sources.changelog import read_log
-
-            log = read_log(spark, args.log, args.log_format)
         summary = replay(
             log,
             table,
             interval_size=args.interval_size,
             max_epochs=args.max_epochs,
             compact_every=args.compact_every,
-            fold=fold,
         )
         print(
             json.dumps(
@@ -745,7 +717,7 @@ def _dispatch(spark, args) -> int:
                     "updated": summary.rows_updated,
                     "deleted": summary.rows_deleted,
                     "final_rows": table.read().count(),
-                    "fold": fold,
+                    "folds": _fold_counts(summary.stats),
                 }
             )
         )
@@ -796,35 +768,11 @@ def _dispatch(spark, args) -> int:
         return 0
 
     if args.cmd == "stream":
-        from multiversx_etl_spark.sources.changelog import read_bucket_spec
-        from multiversx_etl_spark.streaming.ingest import ensure_table, stream_ingest
+        from multiversx_etl_spark.streaming.ingest import stream_ingest
 
-        # same new-table defaults as `replay`: a detectably-bucketed log
-        # seeds a join-fold-capable table (spark layout, sidecar's count)
-        spec = read_bucket_spec(args.log_dir)
-        wants_join = args.fold == "join" or (args.fold == "auto" and spec)
-        layout = args.layout or ("spark" if wants_join else "xxhash")
-        buckets = args.buckets or (
-            spec.get("num_buckets") if wants_join and spec else None
-        ) or 16
-        table = ensure_table(
-            spark, args.table, num_buckets=buckets, layout=layout
-        )
-        fold = args.fold
-        if fold == "auto":
-            from multiversx_etl_spark.sources.changelog import resolve_fold_auto
-
-            m = table.snapshot()
-            fold, downgraded = resolve_fold_auto(
-                args.log_dir, layout=m.layout,
-                num_buckets=m.num_buckets, key_columns=m.key_columns,
-                spec=spec,
-            )
-            if downgraded:
-                print(
-                    f"note: bucketed log but union fold: {downgraded}",
-                    file=sys.stderr,
-                )
+        table = _table_for_log(spark, args.table, args.log_dir, args.buckets,
+                               args.log_format)
+        stats: list = []
         q = stream_ingest(
             spark,
             args.log_dir,
@@ -832,8 +780,8 @@ def _dispatch(spark, args) -> int:
             args.checkpoint,
             max_files_per_trigger=args.max_files_per_trigger,
             trigger_interval=args.trigger_interval,
-            fold=fold,
             log_format=args.log_format,
+            on_epoch=lambda _e, st: stats.append(st),
         )
         if q is not None:  # continuous: block until Ctrl-C / external stop
             try:
@@ -841,7 +789,8 @@ def _dispatch(spark, args) -> int:
             except KeyboardInterrupt:
                 q.stop()
         print(json.dumps({"version": table.current_version(),
-                          "rows": table.read().count(), "fold": fold}))
+                          "rows": table.read().count(),
+                          "folds": _fold_counts(stats)}))
         return 0
 
     if args.cmd == "compact":

@@ -50,6 +50,7 @@ from __future__ import annotations
 
 import json
 import os
+from collections import Counter
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -73,18 +74,6 @@ class WorkerConfig:
     trigger_interval: str | None = None
     fail_on_counts_mismatch: bool = True
     counts_checks_errata: dict[str, int] = field(default_factory=dict)
-    #: bucket-hash layout for NEW tables: "auto" | "xxhash" | "spark"
-    #: ("spark" unlocks fold="join" — lake/table.py bucket_expr; "auto",
-    #: the default, picks "spark" when the log's _bucket_spec.json sidecar
-    #: matches this config so a default config over a bucketed log creates
-    #: a join-fold-capable table, "xxhash" otherwise)
-    layout: str = "auto"
-    #: merge fold shape: "auto" | "union" | "join". "join" is the
-    #: zero-exchange fold (requires layout="spark" and a bucketed log
-    #: directory — the config loader registers it as a catalog bucketed
-    #: table at run time); "auto" (default) picks "join" whenever the log's
-    #: _bucket_spec.json sidecar matches the table and "union" otherwise
-    fold: str = "auto"
     #: the reference's two index-processing modes
     #: (app_controller.py:55-102): "append_only" (default) replays the log
     #: incrementally with exactly-once epochs; "mutable" TRUNCATES and
@@ -105,9 +94,9 @@ class WorkerConfig:
     #: zone-map stat columns for NEW tables (lake/table.py
     #: write_data_files): per-file min/max recorded in the manifest for
     #: these columns on every write, driving read(prune_stats=...) file
-    #: skipping. None = the key columns; [] disables. Like num_buckets /
-    #: layout, a physical knob fixed at CREATE — an existing table keeps
-    #: its own policy (extend it via `compact --sort-columns`).
+    #: skipping. None = the key columns; [] disables. Like num_buckets, a
+    #: physical knob fixed at CREATE — an existing table keeps its own
+    #: policy (extend it via `compact --sort-columns`).
     stat_columns: list[str] | None = None
     #: table description, applied each run as an idempotent metadata-only
     #: schema push (LakeTable.update_schema — the reference's ``bq update
@@ -174,8 +163,8 @@ _KNOWN = {
     "table_root", "log_path", "name", "schema", "normalizer", "stream_id",
     "interval_size", "num_buckets", "compact_every",
     "max_files_per_trigger", "trigger_interval",
-    "fail_on_counts_mismatch", "counts_checks_errata", "layout", "fold",
-    "processing", "schema_folder", "stat_columns", "description",
+    "fail_on_counts_mismatch", "counts_checks_errata", "processing",
+    "schema_folder", "stat_columns", "description",
     "clustering", "promote_to", "log_format",
 }
 
@@ -241,25 +230,10 @@ def worker_config_from_dict(data: dict[str, Any]) -> WorkerConfig | MultiWorkerC
     if missing:
         raise ConfigError(f"missing required config keys: {missing}")
     cfg = WorkerConfig(**data)
-    if cfg.layout not in ("auto", "xxhash", "spark"):
-        raise ConfigError(
-            f"layout must be 'auto', 'xxhash' or 'spark', got {cfg.layout!r}"
-        )
-    if cfg.fold not in ("auto", "union", "join"):
-        raise ConfigError(
-            f"fold must be 'auto', 'union' or 'join', got {cfg.fold!r}"
-        )
-    if cfg.fold == "join" and cfg.layout == "xxhash":
-        raise ConfigError("fold='join' requires layout='spark'")
     if cfg.log_format not in ("parquet", "ndjson", "orc", "csv"):
         raise ConfigError(
             "log_format must be 'parquet', 'ndjson', 'orc' or 'csv', "
             f"got {cfg.log_format!r}"
-        )
-    if cfg.fold == "join" and cfg.log_format != "parquet":
-        raise ConfigError(
-            "fold='join' requires a parquet bucketed log; "
-            f"log_format={cfg.log_format!r} runs with fold='union'/'auto'"
         )
     if cfg.processing not in ("append_only", "mutable"):
         raise ConfigError(
@@ -396,24 +370,6 @@ def _apply_table_metadata(table, cfg: WorkerConfig, target_schema) -> None:
         )
 
 
-def _resolved_layout(cfg: WorkerConfig, key_columns) -> str:
-    """``layout='auto'`` → 'spark' when the log's bucket sidecar matches
-    this config (a NEW table over a provably-bucketed log must be
-    join-fold-capable; baking in xxhash would lock the zero-exchange fold
-    out forever), 'xxhash' otherwise. Explicit layouts pass through;
-    EXISTING tables keep their layout regardless (ensure_table opens them
-    as-is)."""
-    if cfg.layout != "auto":
-        return cfg.layout
-    from multiversx_etl_spark.sources.changelog import resolve_fold_auto
-
-    want, _ = resolve_fold_auto(
-        cfg.log_path, layout="spark",
-        num_buckets=cfg.num_buckets, key_columns=key_columns,
-    )
-    return "spark" if want == "join" else "xxhash"
-
-
 def run_from_config(spark, cfg: "WorkerConfig | MultiWorkerConfig",
                     streaming: bool = False,
                     checkpoint_dir: str | None = None) -> dict[str, Any]:
@@ -531,7 +487,11 @@ def run_from_config(spark, cfg: "WorkerConfig | MultiWorkerConfig",
 
     from multiversx_etl_spark.operators.checks import reconcile
     from multiversx_etl_spark.oracle import expected_state
-    from multiversx_etl_spark.sources.changelog import read_log
+    from multiversx_etl_spark.sources.changelog import (
+        new_table_layout,
+        open_log_for_table,
+        read_log,
+    )
     from multiversx_etl_spark.streaming.ingest import (
         ensure_table,
         replay,
@@ -546,7 +506,10 @@ def run_from_config(spark, cfg: "WorkerConfig | MultiWorkerConfig",
     table = ensure_table(
         spark, cfg.table_root, num_buckets=cfg.num_buckets,
         schema=target_schema, key_columns=key_columns,
-        layout=_resolved_layout(cfg, key_columns),
+        layout=new_table_layout(
+            cfg.log_path, num_buckets=cfg.num_buckets,
+            key_columns=key_columns, log_format=cfg.log_format,
+        ),
         stat_columns=cfg.stat_columns,
     )
     _apply_table_metadata(table, cfg, target_schema)
@@ -613,7 +576,6 @@ def run_from_config(spark, cfg: "WorkerConfig | MultiWorkerConfig",
             trigger_interval=cfg.trigger_interval,
             normalizer=normalizer,
             log_schema=log_schema,
-            fold=cfg.fold,
             log_format=cfg.log_format,
         )
         if q is not None:
@@ -624,48 +586,21 @@ def run_from_config(spark, cfg: "WorkerConfig | MultiWorkerConfig",
             return {"streaming_query": q, "reconcile_skipped": True}
         summary: dict[str, Any] = {}
     else:
-        fold = cfg.fold
-        m = table.snapshot()
-        if fold == "auto":
-            # join fold becomes the default the moment the engine can PROVE
-            # it applies (sidecar matches this table); union otherwise
-            from multiversx_etl_spark.sources.changelog import resolve_fold_auto
-
-            fold, downgraded = resolve_fold_auto(
-                cfg.log_path, layout=m.layout,
-                num_buckets=m.num_buckets, key_columns=m.key_columns,
-            )
-            if downgraded:
-                import sys
-
-                print(
-                    f"note: table {cfg.name!r}: bucketed log but union "
-                    f"fold: {downgraded}",
-                    file=sys.stderr,
-                )
-        if fold == "join":
-            # zero-exchange path: the log directory must hold bucketed files
-            # (sources/changelog.py write_log_bucketed); declare it to THIS
-            # session's catalog so the scan reports its partitioning
-            from multiversx_etl_spark.sources.changelog import register_log_bucketed
-
-            log = register_log_bucketed(
-                spark, cfg.log_path, m.num_buckets,
-                table_name=f"mxetl_log_{cfg.name}",
-                key_columns=tuple(key_columns), schema=log_schema,
-            )
-        else:
-            log = read_log(spark, cfg.log_path, cfg.log_format, schema=log_schema)
+        log = open_log_for_table(
+            spark, cfg.log_path, table.snapshot(), cfg.log_format,
+            schema=log_schema, table_name=f"mxetl_log_{cfg.name}",
+            label=f"table {cfg.name!r}: ",
+        )
         s = replay(
             log, table,
             interval_size=cfg.interval_size,
             stream_id=cfg.stream_id,
             compact_every=cfg.compact_every,
             normalizer=normalizer,
-            fold=fold,
         )
         summary = {"epochs_run": s.epochs_run, "epochs_skipped": s.epochs_skipped,
-                   "rows_in": s.rows_in, "fold": fold}
+                   "rows_in": s.rows_in,
+                   "folds": dict(Counter(st.fold for st in s.stats if st.fold))}
     # expected side runs through the SAME per-table transformer before the
     # LWW fold — the invariant compares normalized rows on both sides
     report = reconcile(
@@ -799,6 +734,7 @@ def stream_with_config_reload(
     group."""
     import time as _time
 
+    from multiversx_etl_spark.sources.changelog import new_table_layout
     from multiversx_etl_spark.streaming.ingest import ensure_table, stream_ingest
 
     applied: list[dict[str, Any]] = []
@@ -816,7 +752,10 @@ def stream_with_config_reload(
         table = ensure_table(
             spark, cfg.table_root, num_buckets=cfg.num_buckets,
             schema=target_schema, key_columns=key_columns,
-            layout=_resolved_layout(cfg, key_columns),
+            layout=new_table_layout(
+                cfg.log_path, num_buckets=cfg.num_buckets,
+                key_columns=key_columns, log_format=cfg.log_format,
+            ),
         )
         _apply_table_metadata(table, cfg, target_schema)
         applied.append(
@@ -835,7 +774,6 @@ def stream_with_config_reload(
             trigger_interval=cfg.trigger_interval,
             normalizer=normalizer,
             log_schema=log_schema,
-            fold=cfg.fold,
             log_format=cfg.log_format,
         )
         try:

@@ -99,7 +99,7 @@ def bucket_expr(
       AND to ``bucketBy(B, key)``'s bucket assignment, so pid == bucket and
       a table's bucket-aligned files can be registered as a Spark catalog
       BUCKETED table: scans then report HashPartitioning(key, B) and the
-      MERGE fold runs with ZERO exchanges (operators/merge.py fold='join').
+      MERGE fold runs with ZERO exchanges (the join fold, operators/merge.py).
       This is the manifest-reader emulation of Iceberg's storage-partitioned
       join reporting (SPARK-37375).
     """
@@ -882,7 +882,7 @@ class LakeTable:
         one bucket — enforced at write time by ``_assert_bucket_purity``).
         The scan then reports ``HashPartitioning(key, B)``, which is what
         lets the MERGE's join-shaped fold run with ZERO exchanges
-        (operators/merge.py ``fold='join'``). On a real cluster this is
+        (the join fold, operators/merge.py). On a real cluster this is
         Iceberg's storage-partitioned-join scan reporting (SPARK-37375 /
         Iceberg ``spark.sql.sources.v2.bucketing.enabled``); a file-manifest
         reader has no way to declare its partitioning to Catalyst, so we
@@ -1296,10 +1296,8 @@ class LakeTable:
                     f"bucket-impure data file {path}: pid {pid} holds "
                     f"_bucket range [{stats.min}, {stats.max}] — the write "
                     "plan's partitioning does not match the spark layout "
-                    "(common cause: a fold='join' replay whose bucketed log "
-                    "was written under a DIFFERENT bucket count than the "
-                    "table — e.g. after rebucket(); re-bucket the log or "
-                    "use fold='union')"
+                    "(bucket_aligned=True on a plan that is not "
+                    "HashPartitioning(key, B))"
                 )
 
     def commit(

@@ -61,6 +61,7 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql.types import StructType
 
 from multiversx_etl_spark.lake.table import LakeTable, repartition_for_write
+from multiversx_etl_spark.sources.changelog import fold_for_spec, scan_bucket_spec
 
 #: written-row ceiling for deriving per-bucket ledger stats on the driver
 #: with pyarrow (3 narrow columns, ~ms) instead of a Spark job (~0.3 s fixed
@@ -158,6 +159,14 @@ class MergeStats:
     #: set by replication when the round fell back to a full snapshot
     #: re-seed instead of a row delta (retention gap / non-merge commit)
     reseeded: bool = False
+    #: the physical fold that ran: "union" or "join" (merge_batch derives
+    #: it; sources/changelog.py fold_for_spec holds the rule); None when
+    #: no fold ran (an empty batch, or an epoch a rival already committed)
+    fold: str | None = None
+    #: why a layout='spark' table took the union fold (patches, patch
+    #: debt, NULL keys, or the change side's bucket-spec mismatch); None
+    #: for a join epoch and for xxhash tables, which never take the join
+    fold_reason: str | None = None
 
 
 def null_safe_on(left: DataFrame, right: DataFrame, cols) -> "F.Column":
@@ -206,6 +215,41 @@ def evolve_schema(target_schema: StructType, changes: DataFrame, key_columns: li
     return out
 
 
+def _derive_fold(
+    parent, changes: DataFrame, has_patches: bool, patch_outstanding: bool,
+    null_key_count: int | None,
+) -> tuple[str, str | None]:
+    """The fold this batch gets, with the reason for a spark-layout union
+    (``MergeStats.fold``/``fold_reason``). xxhash tables take the union
+    fold without looking at the plan. Otherwise the join fold needs
+    ``fold_for_spec`` to agree on the change side's scanned bucket spec,
+    and a batch with no patches, no patch debt and no NULL keys: per-column
+    patch generations need the union machinery, and NULL-keyed rows under
+    a plain equi-join would mis-ledger (table state would stay exact — the
+    MOR read fold resolves per key regardless — but A17 reconciliation
+    must be exact too). Everything is detected, never assumed."""
+    if parent.layout != "spark":
+        return "union", None
+    fold, reason = fold_for_spec(
+        scan_bucket_spec(changes), layout=parent.layout,
+        num_buckets=parent.num_buckets, key_columns=parent.key_columns,
+    )
+    if fold != "join":
+        return fold, reason
+    if has_patches:
+        return "union", "batch carries patch events"
+    if patch_outstanding:
+        return "union", "table carries patch debt (compact to clear it)"
+    if null_key_count is None:
+        nk = F.lit(False)
+        for k in parent.key_columns:
+            nk = nk | F.col(k).isNull()
+        null_key_count = changes.where(nk).limit(1).count()
+    if null_key_count:
+        return "union", "batch carries NULL keys"
+    return "join", None
+
+
 def merge_batch(
     table: LakeTable,
     changes: DataFrame,
@@ -219,7 +263,6 @@ def merge_batch(
     pre_commit: "Callable[[MergeStats], None] | None" = None,
     marker_mode: str = "contiguous",
     tag_suffix: str = "",
-    fold: str = "union",
     null_key_count: int | None = None,
 ) -> MergeStats:
     """Apply one micro-batch of change events and commit atomically.
@@ -233,32 +276,30 @@ def merge_batch(
     a partial-image row folded as a full image would null out the columns
     it meant to keep.
 
-    ``fold`` picks the fold's physical shape:
+    ``null_key_count`` (the batch's NULL-keyed row count) is likewise a
+    precount; left None it is counted only when the join fold is otherwise
+    possible.
 
-    - ``'union'`` (default): union target+changes, ONE shuffle, ONE hash
-      aggregate, ONE write (module docstring steps 2 and 4). Works with
-      every layout; partial-image patch generations leave
-      through the same aggregate and write as the per-key winners.
-    - ``'join'``: the ZERO-EXCHANGE fold for ``layout='spark'`` tables
-      fed from a Spark catalog BUCKETED log table: dedup the change side
-      with a partition-local aggregate, fold the (narrow, catalog-staged)
-      target side likewise, left-outer-join the winners — every stage
-      already satisfies HashPartitioning(key, B), so Catalyst inserts NO
-      Exchange anywhere and the bucket-aligned file write consumes the scan
-      partitioning directly. When the batch carries partial-image 'patch'
-      rows (per-column generations need the union machinery) the call
-      downgrades to 'union' for that batch — correctness never depends on
-      the caller picking right. The written files' purity is re-verified
-      from parquet footers (lake/table.py _assert_bucket_purity), so a
-      caller whose log was NOT actually bucket-scanned still gets a correct
-      (merely shuffled) merge or a loud error, never silent pid corruption.
+    The fold's physical shape is derived, never chosen (``_derive_fold``;
+    the rule is sources/changelog.py ``fold_for_spec``); ``stats.fold``
+    records the one that ran:
+
+    - ``'union'``: union target+changes, ONE shuffle, ONE hash aggregate,
+      ONE write (module docstring steps 2 and 4). Works with every layout
+      and every batch; partial-image patch generations leave through the
+      same aggregate and write as the per-key winners.
+    - ``'join'``: the ZERO-EXCHANGE fold: dedup the change side with a
+      partition-local aggregate, fold the (narrow, catalog-staged) target
+      side likewise, left-outer-join the winners — every stage already
+      satisfies HashPartitioning(key, B), so Catalyst inserts NO Exchange
+      anywhere and the bucket-aligned file write consumes the scan
+      partitioning directly. The written files' purity is re-verified from
+      parquet footers (lake/table.py _assert_bucket_purity): a violated
+      assumption is a loud error, never silent pid corruption.
     """
-    assert fold in ("union", "join"), fold
     parent = table.snapshot()
     key = parent.key_columns
     stats = MergeStats()
-    if fold == "join" and parent.layout != "spark":
-        raise ValueError("fold='join' requires layout='spark'")
 
     changes = changes.withColumn("_bucket", parent.bucket_expr())
 
@@ -339,24 +380,13 @@ def merge_batch(
         cols.append(F.col("_bucket"))
         return df.select(*cols)
 
-    # Per-column patch generations need the union machinery; NULL-keyed
-    # rows under a plain equi-join would mis-ledger (table state would stay
-    # exact — the MOR read fold resolves per key regardless — but A17
-    # reconciliation must be exact too). Both are detected, never assumed.
-    if fold == "join" and (has_patches or patch_outstanding):
-        fold = "union"
-    if fold == "join":
-        if null_key_count is None:
-            nk = F.lit(False)
-            for k in key:
-                nk = nk | F.col(k).isNull()
-            null_key_count = changes.where(nk).limit(1).count()
-        if null_key_count:
-            fold = "union"
+    stats.fold, stats.fold_reason = _derive_fold(
+        parent, changes, has_patches, patch_outstanding, null_key_count
+    )
 
     with contextlib.ExitStack() as stack:
-        if fold == "join":
-            # -- 3'. ZERO-EXCHANGE fold (docstring ``fold='join'``): the
+        if stats.fold == "join":
+            # -- 3'. ZERO-EXCHANGE fold (docstring, ``'join'``): the
             #    change side arrives from a catalog-bucketed log scan and
             #    the target side is the snapshot's live files catalog-staged
             #    (lake/table.py staged_bucketed_target) — both report

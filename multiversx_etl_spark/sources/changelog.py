@@ -526,8 +526,8 @@ def write_log_bucketed(
     """Materialize the log as a Spark catalog BUCKETED table (external at
     ``path``): ``bucketBy(B, key)`` files named with Spark's ``_NNNNN``
     bucket suffix. Scans of this table report ``HashPartitioning(key, B)``,
-    which is what lets the MERGE's ``fold='join'`` run with ZERO exchanges
-    into a ``layout='spark'`` LakeTable of the same B (operators/merge.py).
+    which is what lets the MERGE derive its zero-exchange join fold
+    (``fold_for_spec``) into a ``layout='spark'`` LakeTable of the same B.
     No shuffle at write time either — each writer task emits its own
     per-bucket files (standard Spark bucketing). Returns the table name.
 
@@ -577,9 +577,9 @@ def read_bucket_spec(path: str) -> dict | None:
     """Read a log directory's ``_bucket_spec.json`` sidecar (written by
     write_log_bucketed; a foreign landing zone drops its own). Returns the
     spec dict, or None when the directory is a plain (non-bucketed) log —
-    the signal the ``fold='auto'`` surfaces use to decide whether the
-    zero-exchange join fold is even on the table. A present-but-unreadable
-    sidecar raises: that is a corrupt declaration, not a plain log."""
+    the signal the log-directory surfaces hand ``fold_for_spec``. A
+    present-but-unreadable sidecar raises: that is a corrupt declaration,
+    not a plain log."""
     import json
     import os
 
@@ -598,7 +598,7 @@ def bucket_id_from_name(file_name: str) -> int | None:
     (``part-...-<uuid>_00003.c000.snappy.parquet`` → 3) — the same
     convention Spark's own BucketingUtils applies when a catalog bucketed
     table groups its files. Returns None for a non-bucketed name, the
-    signal to downgrade rather than stage."""
+    signal to merge the batch unstaged rather than stage it."""
     import re
 
     m = re.match(r".*_(\d+)(?:\..*)?$", file_name)
@@ -650,7 +650,7 @@ def staged_bucketed_files(
 
     Every file name must carry a parseable Spark bucket id < B (the
     ``_NNNNN`` suffix ``write_log_bucketed`` produces) — callers check
-    with ``bucket_id_from_name`` and downgrade to the union fold instead
+    with ``bucket_id_from_name`` and merge the batch unstaged instead
     of calling this when any file doesn't."""
     import os
     import shutil
@@ -686,8 +686,8 @@ def staged_bucketed_files(
 
 
 def _spec_mismatch(spec: dict, num_buckets: int, key_columns) -> list[str]:
-    """The one comparison between a sidecar spec and a requested bucket
-    layout (shared by loud registration and quiet auto-resolution).
+    """The one comparison between a bucket spec and a requested bucket
+    layout (shared by loud registration and ``fold_for_spec``).
     Returns human-readable mismatch descriptions, empty on a match."""
     problems = []
     if spec.get("num_buckets") != num_buckets:
@@ -703,32 +703,35 @@ def _spec_mismatch(spec: dict, num_buckets: int, key_columns) -> list[str]:
     return problems
 
 
-def resolve_fold_auto(
-    path: str,
+def fold_for_spec(
+    spec: dict | None,
     *,
     layout: str,
     num_buckets: int,
     key_columns,
-    spec: dict | None = None,
 ) -> tuple[str, str | None]:
-    """Resolve ``fold='auto'`` for a log directory against a target table:
-    the zero-exchange join fold becomes the DEFAULT whenever the engine can
-    PROVE it applies — the log carries a ``_bucket_spec.json`` sidecar that
-    matches the table's (layout='spark', num_buckets, key) —
-    and quietly stays on the always-correct union fold otherwise.
+    """THE fold rule: which physical MERGE fold a change side with bucket
+    ``spec`` (``{"num_buckets": B, "key_columns": [...]}``, or None for a
+    change side that is not a bucketed scan) gets against a table of
+    ``(layout, num_buckets, key_columns)``. Nobody chooses the fold; every
+    surface derives it here.
 
-    Returns ``(fold, downgrade_reason)``. ``downgrade_reason`` is non-None
-    only when the log IS bucketed but the join fold still can't be used —
-    that is a performance foot-gun worth surfacing (the operator paid for
-    a bucketed log and isn't getting the zero-exchange merge), while a
-    plain log downgrades silently (nothing was promised).
+    - ``'join'``, the zero-exchange fold, exactly when the change side is
+      bucketed by the table's key into the table's bucket count AND the
+      table uses ``layout='spark'`` (pid == Spark bucket id): then both
+      fold inputs already report ``HashPartitioning(key, B)`` and Catalyst
+      plans no exchange (operators/merge.py).
+    - ``'union'``, the one-shuffle fold, otherwise. It handles every
+      input, which is why ``merge_batch`` also takes it for a batch that
+      carries patches or NULL keys, or a table with patch debt.
 
-    ``spec`` lets a caller that already read the sidecar pass it in (one
-    read per decision, not one per helper)."""
+    ``spec`` comes from a log directory's ``_bucket_spec.json`` sidecar
+    (surfaces that open a log directory) or from the change DataFrame's
+    own plan (``scan_bucket_spec``, what ``merge_batch`` checks). Returns
+    ``(fold, reason)``; ``reason`` says why the fold is union, and is None
+    when it is join."""
     if spec is None:
-        spec = read_bucket_spec(path)
-    if spec is None:
-        return "union", None
+        return "union", "change side is not a bucketed scan"
     problems = []
     if layout != "spark":
         problems.append(f"table layout={layout!r} (join fold needs 'spark')")
@@ -736,6 +739,100 @@ def resolve_fold_auto(
     if problems:
         return "union", "; ".join(problems)
     return "join", None
+
+
+def scan_bucket_spec(df: DataFrame) -> dict | None:
+    """The bucket spec a DataFrame is scanned with, read from its analyzed
+    plan: every leaf must be a catalog-bucketed file relation and all must
+    agree, and ``spark.sql.sources.bucketing.enabled`` must be on (with it
+    off, bucketed scans report no partitioning). None otherwise. A plan
+    walk on the driver, about a millisecond, no job."""
+    spark = df.sparkSession
+    if spark.conf.get("spark.sql.sources.bucketing.enabled", "true") != "true":
+        return None
+    specs = []
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves().iterator()
+    while leaves.hasNext():
+        leaf = leaves.next()
+        if leaf.getClass().getSimpleName() != "LogicalRelation":
+            return None
+        rel = leaf.relation()
+        if rel.getClass().getSimpleName() != "HadoopFsRelation":
+            return None
+        bs = rel.bucketSpec()
+        if not bs.isDefined():
+            return None
+        cols = bs.get().bucketColumnNames()
+        specs.append({
+            "num_buckets": bs.get().numBuckets(),
+            "key_columns": [cols.apply(i) for i in range(cols.size())],
+        })
+    if not specs or any(s != specs[0] for s in specs):
+        return None
+    return specs[0]
+
+
+def log_dir_spec(path: str, log_format: str = "parquet") -> dict | None:
+    """A log directory's bucket spec: its sidecar for a parquet log, None
+    for every other format (bucket alignment is provable only for the
+    parquet bucketed-log writer)."""
+    return read_bucket_spec(path) if log_format == "parquet" else None
+
+
+def new_table_layout(
+    path: str, *, num_buckets: int, key_columns, log_format: str = "parquet"
+) -> str:
+    """Layout for a NEW table fed from the log directory at ``path``:
+    ``'spark'`` exactly when the log's sidecar matches ``(num_buckets,
+    key_columns)`` — so the join fold applies from the first epoch —
+    ``'xxhash'`` otherwise (its many-to-one bucket→pid map writes fewer
+    files; streaming/ingest.py ``ensure_table``)."""
+    fold, _ = fold_for_spec(
+        log_dir_spec(path, log_format), layout="spark",
+        num_buckets=num_buckets, key_columns=key_columns,
+    )
+    return "spark" if fold == "join" else "xxhash"
+
+
+def log_dir_fold(
+    path: str, m, log_format: str = "parquet", label: str = ""
+) -> tuple[dict | None, str]:
+    """``(spec, fold)`` for the log directory at ``path`` feeding the table
+    snapshot ``m``. A bucketed log the table cannot exploit prints a note:
+    the operator paid for a bucketed log and gets the shuffled merge. A
+    plain log takes the union fold silently."""
+    spec = log_dir_spec(path, log_format)
+    fold, reason = fold_for_spec(
+        spec, layout=m.layout, num_buckets=m.num_buckets,
+        key_columns=m.key_columns,
+    )
+    if spec is not None and fold == "union":
+        import sys
+
+        print(f"note: {label}bucketed log but union fold: {reason}", file=sys.stderr)
+    return spec, fold
+
+
+def open_log_for_table(
+    spark: SparkSession,
+    path: str,
+    m,
+    log_format: str = "parquet",
+    schema=None,
+    table_name: str = "mxetl_log",
+    label: str = "",
+) -> DataFrame:
+    """Open the log directory at ``path`` as the change side for the table
+    snapshot ``m``: registered as a catalog bucketed table when its sidecar
+    matches the table (the merge then derives the join fold from the scan),
+    ``read_log`` otherwise."""
+    _, fold = log_dir_fold(path, m, log_format, label)
+    if fold == "join":
+        return register_log_bucketed(
+            spark, path, m.num_buckets, table_name=table_name,
+            key_columns=tuple(m.key_columns), schema=schema,
+        )
+    return read_log(spark, path, log_format, schema=schema)
 
 
 def register_log_bucketed(

@@ -170,7 +170,6 @@ def apply_epoch(
     patch_count: int | None = None,
     conflict_retries: int = 2,
     normalizer: Callable[[DataFrame], DataFrame] | None = None,
-    fold: str = "union",
     null_key_count: int | None = None,
 ) -> MergeStats:
     """Normalize → dedup → MERGE → lineage → atomic marker+data commit.
@@ -198,7 +197,7 @@ def apply_epoch(
             return merge_batch(
                 table, batch, stream_id, epoch_id, offset_lo, offset_hi,
                 in_counts=in_counts, patch_count=patch_count,
-                fold=fold, null_key_count=null_key_count,
+                null_key_count=null_key_count,
                 pre_commit=write_ledger,
                 # each attempt writes its own tag dir: a retry must NEVER
                 # overwrite files a rival's committed manifest references
@@ -225,15 +224,14 @@ def replay(
     on_epoch: Callable[[int, MergeStats], None] | None = None,
     compact_every: int | None = None,
     normalizer: Callable[[DataFrame], DataFrame] | None = None,
-    fold: str = "union",
 ) -> ReplaySummary:
     """Replay the log in offset-range epochs, skipping committed ones.
 
-    ``fold='join'`` selects the ZERO-EXCHANGE merge fold (requires a
-    ``layout='spark'`` table and a ``log`` DataFrame scanned from a Spark
-    catalog BUCKETED table — sources/changelog.py write_log_bucketed /
-    register_log_bucketed); epochs carrying partial-image or NULL-keyed
-    rows self-downgrade to the union fold (operators/merge.py).
+    Each epoch's merge derives its fold (operators/merge.py): a ``log``
+    scanned from a Spark catalog BUCKETED table that matches a
+    ``layout='spark'`` table (sources/changelog.py write_log_bucketed /
+    register_log_bucketed / open_log_for_table) gets the zero-exchange
+    join fold; ``summary.stats[i].fold`` records what ran.
 
     Each epoch appends delta files — O(batch) write cost;
     ``compact_every=K`` folds deltas into base files after every K run
@@ -276,8 +274,8 @@ def replay(
             aggs = [F.count("*").alias("n")]
             if "op" in log.columns:  # partial-image rows (same pass)
                 aggs.append(F.count(F.when(F.col("op") == "patch", 1)).alias("p"))
-            # NULL-keyed rows per epoch (same pass): the join fold needs to
-            # know to downgrade (merge.py fold='join' docstring)
+            # NULL-keyed rows per epoch (same pass): they keep an epoch off
+            # the join fold (merge.py _derive_fold)
             nk = F.lit(False)
             for k in m.key_columns:
                 nk = nk | F.col(k).isNull()
@@ -308,7 +306,7 @@ def replay(
             table, batch, stream_id, plan.epoch_id, plan.offset_lo, plan.offset_hi,
             in_counts=counts.get(plan.epoch_id, {}) if precounted else None,
             patch_count=patch_counts.get(plan.epoch_id, 0) if precounted else None,
-            normalizer=normalizer, fold=fold,
+            normalizer=normalizer,
             null_key_count=null_key_counts.get(plan.epoch_id, 0) if precounted else None,
         )
         summary.epochs_run += 1
@@ -336,8 +334,8 @@ def stream_ingest(
     trigger_interval: str | None = None,
     normalizer: Callable[[DataFrame], DataFrame] | None = None,
     log_schema=None,
-    fold: str = "union",
     log_format: str = "parquet",
+    on_epoch: Callable[[int, MergeStats], None] | None = None,
 ):
     """Structured Streaming tail of a change-log directory (parquet by
     default; ``log_format`` accepts every ``changelog.LOG_FORMATS`` entry —
@@ -358,80 +356,34 @@ def stream_ingest(
     reference's interval_size × num_intervals_in_bulk planner parameters
     (worker_config_mainnet.json:21-22).
 
-    ``fold='join'`` brings the ZERO-EXCHANGE merge fold to streaming: the
-    file source schedules WHOLE files per micro-batch, so when the log
-    directory holds catalog-bucketed files (write_log_bucketed), the
-    batch's own files — recovered from the ``_metadata.file_path`` hidden
-    column, which resolves at the file scan and so survives into the
-    foreachBatch DataFrame (a LogicalRDD whose ``inputFiles()`` is empty) —
-    are re-staged as a temporary catalog bucketed table (hardlink farm, no
-    bytes copied; sources/changelog.py staged_bucketed_files) whose scan
-    reports HashPartitioning(key, B), and the MERGE plans no exchange,
-    exactly like the batch replay's join fold. A batch whose files carry
-    no parseable bucket id, or whose staged row count disagrees with the
-    delivered batch, downgrades to (or refuses over) the union fold —
-    correctness never depends on staging being possible. ``fold='auto'``
-    resolves per the log's ``_bucket_spec.json`` sidecar against the
-    table, like the batch surfaces."""
-    from multiversx_etl_spark.sources.changelog import LOG_FORMATS
+    The zero-exchange join fold reaches streaming through the file
+    source's WHOLE-file scheduling: when the log is parquet and its
+    ``_bucket_spec.json`` sidecar matches the table (sources/changelog.py
+    ``fold_for_spec``), each batch's own files — recovered from the
+    ``_metadata.file_path`` hidden column, which resolves at the file scan
+    and so survives into the foreachBatch DataFrame (a LogicalRDD whose
+    ``inputFiles()`` is empty) — are re-staged as a temporary catalog
+    bucketed table (hardlink farm, no bytes copied; sources/changelog.py
+    staged_bucketed_files) whose scan reports HashPartitioning(key, B), and
+    the merge derives the join fold from it, exactly like the batch
+    replay. A batch whose files carry no parseable bucket id is merged
+    unstaged (union fold); one whose staged row count disagrees with the
+    delivered batch is refused.
+
+    ``on_epoch(epoch_id, stats)`` is called after each merged micro-batch
+    (``stats.fold`` says which fold ran), like ``replay``'s."""
+    from multiversx_etl_spark.sources.changelog import (
+        LOG_FORMATS,
+        _csv_read_options,
+        fold_for_spec,
+        log_dir_fold,
+    )
 
     if log_format not in LOG_FORMATS:
         raise ValueError(
             f"unknown log format {log_format!r} (expected one of {LOG_FORMATS})"
         )
-    if fold == "join" and log_format != "parquet":
-        # bucket alignment is provable only for the parquet bucketed-log
-        # writer (sidecar + file-name bucket ids); other formats take the
-        # union fold
-        raise ValueError(
-            f"fold='join' requires a parquet bucketed log; "
-            f"log_format={log_format!r} streams with fold='union'"
-        )
-    m0 = table.snapshot()
-    if fold == "auto":
-        from multiversx_etl_spark.sources.changelog import resolve_fold_auto
-
-        fold, downgraded = resolve_fold_auto(
-            log_dir, layout=m0.layout,
-            num_buckets=m0.num_buckets, key_columns=m0.key_columns,
-        )
-        if downgraded:
-            # a bucketed log the stream can't exploit is a perf foot-gun
-            # worth surfacing (same note every batch surface prints)
-            import sys
-
-            print(
-                f"note: bucketed log but union fold: {downgraded}",
-                file=sys.stderr,
-            )
-    elif fold == "join":
-        # explicit join: validate the sidecar UPFRONT, exactly like the
-        # batch path's register_log_bucketed — without this, a mismatched
-        # bucket count sails past the per-batch id<B guard (files 0..7
-        # 'fit' under any B >= 8) and dies mid-stream in the purity check
-        # instead of refusing before the query starts
-        from multiversx_etl_spark.sources.changelog import (
-            _spec_mismatch,
-            read_bucket_spec,
-        )
-
-        if m0.layout != "spark":
-            raise ValueError("fold='join' requires layout='spark'")
-        spec = read_bucket_spec(log_dir)
-        if spec is None:
-            raise ValueError(
-                f"bucketed log at {log_dir} has no _bucket_spec.json "
-                "sidecar: cannot verify the files' true bucket layout "
-                "(write with write_log_bucketed, or drop a sidecar)"
-            )
-        mismatch = _spec_mismatch(spec, m0.num_buckets, m0.key_columns)
-        if mismatch:
-            raise ValueError(
-                f"bucketed log at {log_dir} cannot serve the join fold: "
-                + "; ".join(mismatch)
-            )
-    from multiversx_etl_spark.sources.changelog import _csv_read_options
-
+    spec, fold = log_dir_fold(log_dir, table.snapshot(), log_format)
     declared = log_schema if log_schema is not None else CHANGE_EVENTS
     reader = spark.readStream.schema(declared).option(
         "maxFilesPerTrigger", max_files_per_trigger
@@ -453,8 +405,7 @@ def stream_ingest(
         if table.is_epoch_committed(stream_id, epoch_id):
             return  # at-least-once redelivery of a committed epoch → no-op
         m = table.snapshot()
-        batch, batch_fold, staged = batch_df, "union", None
-        delivered = None
+        batch, staged, delivered = batch_df, None, None
         if fold == "join":
             from multiversx_etl_spark.sources.changelog import (
                 bucket_id_from_name,
@@ -470,13 +421,20 @@ def stream_ingest(
             ids = [
                 bucket_id_from_name(os.path.basename(f)) for f in files
             ]
-            if files and all(b is not None and b < m.num_buckets for b in ids):
+            # re-derived against THIS batch's snapshot: a table rebucketed
+            # mid-stream no longer matches the log's spec
+            still_join = fold_for_spec(
+                spec, layout=m.layout, num_buckets=m.num_buckets,
+                key_columns=m.key_columns,
+            )[0] == "join"
+            if still_join and files and all(
+                b is not None and b < m.num_buckets for b in ids
+            ):
                 staged = staged_bucketed_files(
                     spark, files, m.num_buckets, m.key_columns,
                     declared, os.path.join(table.root, "_stage"),
                 )
                 batch = staged.__enter__()
-                batch_fold = "join"
         try:
             # one aggregation supplies offset bounds AND per-bucket rows_in —
             # the (possibly re-staged) batch is scanned once here, once by
@@ -494,7 +452,7 @@ def stream_ingest(
                 .collect()
             )
             in_counts = {r["_bucket"]: r["n"] for r in rows}
-            if batch_fold == "join" and sum(in_counts.values()) != delivered:
+            if staged is not None and sum(in_counts.values()) != delivered:
                 # the staged files do not reproduce the delivered batch —
                 # a violated file-source assumption is a refusal, not a
                 # quiet downgrade (the ledger would book the wrong rows)
@@ -506,14 +464,16 @@ def stream_ingest(
             patch_count = (
                 sum(r["p"] for r in rows) if "op" in batch.columns else 0
             )
-            apply_epoch(
+            stats = apply_epoch(
                 table, batch, stream_id, epoch_id, lo, hi,
                 in_counts=in_counts, patch_count=patch_count,
-                normalizer=normalizer, fold=batch_fold,
+                normalizer=normalizer,
             )
         finally:
             if staged is not None:
                 staged.__exit__(None, None, None)
+        if on_epoch:
+            on_epoch(epoch_id, stats)
         if compact_every and (epoch_id + 1) % compact_every == 0:
             table.compact()
 

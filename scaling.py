@@ -159,12 +159,20 @@ table = LakeTable.create(spark, {table_path!r}, REPOS,
 b0 = stage_bytes()
 io0 = proc_tree_io()
 t0 = time.perf_counter()
-summary = replay(log, table, interval_size={interval}, total_offsets={total},
-                 fold=fold)
+summary = replay(log, table, interval_size={interval}, total_offsets={total})
 wall = time.perf_counter() - t0
+# the merge derives its fold: a join run whose epoch took the union fold
+# would report a union number as a join one, so it fails instead
+folds = [st.fold for st in summary.stats]
+if fold == "join" and "union" in folds:
+    raise SystemExit(
+        "join run took the union fold: "
+        + str([st.fold_reason for st in summary.stats if st.fold == "union"])
+    )
 io1 = proc_tree_io()
 b1 = stage_bytes()
 rec = {{"level": {label!r}, "master": {master!r}, "fold": fold,
+       "epoch_folds": folds,
        "wall_sec": round(wall, 3),
        "events": {total}, "events_per_sec": round({total} / wall, 1),
        "epochs": summary.epochs_run,
@@ -252,9 +260,12 @@ def main() -> None:
                     "(VERDICT r04 #4a). Reported per variant: log bytes at "
                     "rest + the usual per-level throughput/efficiency")
     ap.add_argument("--fold", choices=["union", "join"], default="union",
-                    help="'join' = the ZERO-EXCHANGE merge fold: bucketed "
-                    "catalog log + layout='spark' table (VERDICT r03 #3); "
-                    "'union' = the historical one-shuffle fold")
+                    help="'join' = the ZERO-EXCHANGE merge fold's input: "
+                    "bucketed catalog log + layout='spark' table, from "
+                    "which the merge derives the join fold on every epoch "
+                    "(a union epoch fails the run; VERDICT r03 #3); "
+                    "'union' = plain parquet log + xxhash table, the "
+                    "one-shuffle fold")
     args = ap.parse_args()
     # The codec-effort condition is owned by --zstd-levels, applied per child
     # in run_level. A user-exported knob would leak into the shared-log

@@ -171,10 +171,10 @@ def test_run_config_watch_sigint(spark, tmp_path):
 
 
 def test_replay_cli_auto_join_fold(spark, tmp_path):
-    """The zero-exchange fold is now the CLI DEFAULT: `gen-log --bucketed`
-    then a bare `replay` (no --fold) detects the sidecar, creates a
-    spark-layout table, and reports fold='join' — with the final state
-    matching the log's LWW fold."""
+    """The zero-exchange fold is derived at the CLI too: `gen-log
+    --bucketed` then a bare `replay` detects the sidecar, creates a
+    spark-layout table, and reports that every epoch ran the join fold —
+    with the final state matching the log's LWW fold."""
     from multiversx_etl_spark.oracle import expected_state
 
     out = _cli("gen-log", str(tmp_path / "log"), "--events", "600",
@@ -184,7 +184,7 @@ def test_replay_cli_auto_join_fold(spark, tmp_path):
     # default of 16 would bake in a mismatch that locks the join fold out)
     out = _cli("replay", str(tmp_path / "log"), str(tmp_path / "t"),
                "--interval-size", "200")
-    assert out["fold"] == "join"
+    assert out["folds"] == {"join": out["epochs_run"]} and out["epochs_run"] >= 3
     want = expected_state(spark.read.parquet(str(tmp_path / "log"))).count()
     assert out["final_rows"] == want
     m = LakeTable(spark, str(tmp_path / "t")).snapshot()
@@ -192,16 +192,16 @@ def test_replay_cli_auto_join_fold(spark, tmp_path):
 
 
 def test_stream_cli_auto_join_fold(spark, tmp_path):
-    """The streaming CLI defaults match replay's: a bare `stream` over a
-    bucketed log seeds a join-capable table, resolves the zero-exchange
-    fold, and drains exactly."""
+    """The streaming CLI derives the same way: a bare `stream` over a
+    bucketed log seeds a join-capable table, every micro-batch merges with
+    the zero-exchange fold, and the drain is exact."""
     from multiversx_etl_spark.oracle import expected_state
 
     _cli("gen-log", str(tmp_path / "log"), "--events", "500",
          "--repos", "5", "--bucketed", "4")
     out = _cli("stream", str(tmp_path / "log"), str(tmp_path / "t"),
                str(tmp_path / "ckpt"), "--max-files-per-trigger", "3")
-    assert out["fold"] == "join"
+    assert set(out["folds"]) == {"join"} and out["folds"]["join"] >= 1
     want = expected_state(spark.read.parquet(str(tmp_path / "log"))).count()
     assert out["rows"] == want
     m = LakeTable(spark, str(tmp_path / "t")).snapshot()

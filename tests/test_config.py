@@ -33,6 +33,11 @@ def test_rejects_unknown_keys_and_bad_values():
     for mode in ("mor", "cow"):
         with pytest.raises(ConfigError, match=r"unknown config keys: \['mode'\]"):
             worker_config_from_dict({"table_root": "/t", "log_path": "/l", "mode": mode})
+    # the merge fold and a new table's layout are derived from the log's
+    # bucket sidecar, never configured: both old keys are unknown
+    for k, v in (("fold", "join"), ("fold", "auto"), ("layout", "spark")):
+        with pytest.raises(ConfigError, match=rf"unknown config keys: \['{k}'\]"):
+            worker_config_from_dict({"table_root": "/t", "log_path": "/l", k: v})
     with pytest.raises(ConfigError, match="interval_size"):
         worker_config_from_dict(
             {"table_root": "/t", "log_path": "/l", "interval_size": 0}
@@ -232,8 +237,10 @@ def test_patching_table_through_config(spark, tmp_path):
 
 
 def test_join_fold_through_config(spark, tmp_path):
-    """fold='join' + layout='spark' end-to-end from a config dict: the
-    loader registers the bucketed log and the replay reconciles green."""
+    """The join fold end-to-end from a config dict over a bucketed log:
+    the new table comes up spark-layout, the loader registers the log,
+    every epoch merges with the join fold and the replay reconciles
+    green."""
     from multiversx_etl_spark.sources.changelog import (
         generate_change_log,
         write_log_bucketed,
@@ -250,21 +257,12 @@ def test_join_fold_through_config(spark, tmp_path):
         "log_path": log_path,
         "interval_size": 200,
         "num_buckets": 4,
-        "layout": "spark",
-        "fold": "join",
     })
     s1 = run_from_config(spark, cfg)
     assert s1["reconcile_ok"] and s1["epochs_run"] >= 2
+    assert s1["folds"] == {"join": s1["epochs_run"]}
     s2 = run_from_config(spark, cfg)
     assert s2["epochs_run"] == 0 and s2["reconcile_ok"]
-    # explicit xxhash can never serve the join fold; layout='auto' (the
-    # default) is legal with fold='join' — it resolves at run time and the
-    # bucketed-log registration stays loud if the sidecar can't prove it
-    with pytest.raises(ConfigError, match="fold='join' requires"):
-        worker_config_from_dict(
-            {"table_root": "/t", "log_path": "/l", "fold": "join",
-             "layout": "xxhash"}
-        )
 
 
 def test_hot_config_reload_mid_stream(spark, tmp_path):
@@ -338,33 +336,44 @@ def test_malformed_config_shapes_raise_config_error():
 
 
 def test_resolve_fold_auto_unit(tmp_path):
-    """fold='auto' resolution is pure sidecar-vs-table arithmetic: join only
-    when the engine can PROVE the zero-exchange plan applies; a bucketed log
-    that can't be used reports WHY (surfaced as a note by the callers)."""
-    from multiversx_etl_spark.sources.changelog import resolve_fold_auto
-
-    kw = dict(layout="spark", num_buckets=4,
-              key_columns=["repo", "path"])
-    # plain log (no sidecar): silent union
-    assert resolve_fold_auto(str(tmp_path), **kw) == ("union", None)
-    (tmp_path / "_bucket_spec.json").write_text(
-        json.dumps({"num_buckets": 4, "key_columns": ["repo", "path"]})
+    """The fold rule is pure spec-vs-table arithmetic: join only when the
+    engine can PROVE the zero-exchange plan applies; otherwise it reports
+    WHY (a note on the log surfaces, ``MergeStats.fold_reason`` in the
+    merge). A new table is spark-layout exactly when the rule says join."""
+    from multiversx_etl_spark.sources.changelog import (
+        fold_for_spec,
+        new_table_layout,
     )
-    assert resolve_fold_auto(str(tmp_path), **kw) == ("join", None)
+
+    kw = dict(layout="spark", num_buckets=4, key_columns=["repo", "path"])
+    spec = {"num_buckets": 4, "key_columns": ["repo", "path"]}
+    assert fold_for_spec(None, **kw) == (
+        "union", "change side is not a bucketed scan"
+    )
+    assert fold_for_spec(spec, **kw) == ("join", None)
     for bad, frag in (
         (dict(kw, layout="xxhash"), "layout"),
         (dict(kw, num_buckets=8), "buckets"),
         (dict(kw, key_columns=["id"]), "key"),
     ):
-        fold, why = resolve_fold_auto(str(tmp_path), **bad)
+        fold, why = fold_for_spec(spec, **bad)
         assert fold == "union" and frag in why
+    # directory surfaces: plain log -> xxhash; matching sidecar -> spark;
+    # a non-parquet log never proves alignment
+    lkw = dict(num_buckets=4, key_columns=["repo", "path"])
+    assert new_table_layout(str(tmp_path), **lkw) == "xxhash"
+    (tmp_path / "_bucket_spec.json").write_text(json.dumps(spec))
+    assert new_table_layout(str(tmp_path), **lkw) == "spark"
+    assert new_table_layout(str(tmp_path), **dict(lkw, num_buckets=8)) == "xxhash"
+    assert new_table_layout(str(tmp_path), **lkw, log_format="ndjson") == "xxhash"
 
 
 def test_auto_fold_through_config(spark, tmp_path):
-    """fold is now 'auto' by default: a spark-layout table over a bucketed
-    log gets the zero-exchange join fold WITHOUT being asked; a plain log
-    (or a layout that can't consume the buckets) falls back to union — both
-    reconcile green."""
+    """The fold is derived: a config over a bucketed log gets a
+    spark-layout table and the zero-exchange join fold WITHOUT being
+    asked; a plain log, or a sidecar whose bucket count differs from the
+    config's, gets an xxhash table and the union fold — all reconcile
+    green."""
     from multiversx_etl_spark.sources.changelog import (
         generate_change_log,
         write_log_bucketed,
@@ -381,31 +390,32 @@ def test_auto_fold_through_config(spark, tmp_path):
     from multiversx_etl_spark.lake.table import LakeTable
 
     base = {"interval_size": 200, "num_buckets": 4}
-    # an entirely-default config over a bucketed log: layout='auto' creates
-    # a spark-layout table and fold='auto' picks the join fold — the
-    # zero-exchange path with zero knobs
+    # an entirely-default config over a bucketed log: a spark-layout table
+    # and the join fold — the zero-exchange path with zero knobs
     s = run_from_config(spark, worker_config_from_dict({
         **base, "table_root": str(tmp_path / "tj"), "log_path": bl,
     }))
-    assert s["fold"] == "join" and s["reconcile_ok"]
+    assert s["folds"] == {"join": s["epochs_run"]} and s["reconcile_ok"]
     assert LakeTable(spark, str(tmp_path / "tj")).snapshot().layout == "spark"
     s = run_from_config(spark, worker_config_from_dict({
         **base, "table_root": str(tmp_path / "tu"), "log_path": pl,
     }))
-    assert s["fold"] == "union" and s["reconcile_ok"]
+    assert s["folds"] == {"union": s["epochs_run"]} and s["reconcile_ok"]
     assert LakeTable(spark, str(tmp_path / "tu")).snapshot().layout == "xxhash"
-    # bucketed log into an EXPLICIT xxhash-layout table: auto downgrades
-    # (correct, merely shuffled) instead of erroring like fold='join'
+    # a sidecar whose bucket count differs from the config's: the new
+    # table is xxhash and the replay takes the union fold (correct, merely
+    # shuffled)
     s = run_from_config(spark, worker_config_from_dict({
-        **base, "table_root": str(tmp_path / "tx"), "log_path": bl,
-        "layout": "xxhash",
+        **base, "num_buckets": 8, "table_root": str(tmp_path / "tx"),
+        "log_path": bl,
     }))
-    assert s["fold"] == "union" and s["reconcile_ok"]
+    assert s["folds"] == {"union": s["epochs_run"]} and s["reconcile_ok"]
+    assert LakeTable(spark, str(tmp_path / "tx")).snapshot().layout == "xxhash"
 
 
 def test_continuous_join_fold_through_reload_supervisor(spark, tmp_path):
-    """The full default stack at once: a zero-knob config (layout and fold
-    both 'auto') over a bucketed log, driven by the hot-reload supervisor
+    """The full default stack at once: a zero-knob config over a bucketed
+    log, driven by the hot-reload supervisor
     on a continuous trigger — the table comes up spark-layout, every
     micro-batch merges with the ZERO-EXCHANGE join fold (captured plan has
     no exchange), and the drained state is exact."""

@@ -2,9 +2,11 @@
 
 The fold's value proposition is physical (no Exchange anywhere in the merge
 plan), so these tests pin BOTH faces: value-level equivalence with the
-default union fold (same final state, same ledger stats) and plan-level
-absence of shuffle exchanges. The file-purity invariant the spark layout
-rests on (pid == bucket in every written file) gets its own negative test.
+union fold (same final state, same ledger stats) and plan-level absence of
+shuffle exchanges. Nobody asks for the join fold: every test here feeds a
+bucketed scan and checks that the merge DERIVED it (``MergeStats.fold``).
+The file-purity invariant the spark layout rests on (pid == bucket in
+every written file) gets its own negative test.
 """
 
 from __future__ import annotations
@@ -38,22 +40,24 @@ def bucketed_log(spark, tmp_path_factory):
     spark.sql("DROP TABLE IF EXISTS mxetl_test_log")
 
 
-def _replay(spark, tmp_path, log, layout, fold, tag, epochs=3):
+def _replay(spark, tmp_path, log, layout, tag, epochs=3):
     total = N + int(N * 0.01)
     table = LakeTable.create(
         spark, str(tmp_path / tag), REPOS,
         key_columns=["repo", "path"], num_buckets=B, layout=layout,
     )
     summary = replay(
-        log, table, interval_size=-(-total // epochs), total_offsets=total, fold=fold
+        log, table, interval_size=-(-total // epochs), total_offsets=total
     )
     return table, summary
 
 
 def test_join_fold_matches_union_fold(spark, tmp_path, bucketed_log):
     blog, plog = bucketed_log
-    jt, js = _replay(spark, tmp_path, blog, "spark", "join", "jt")
-    ut, us = _replay(spark, tmp_path, plog, "xxhash", "union", "ut")
+    jt, js = _replay(spark, tmp_path, blog, "spark", "jt")
+    ut, us = _replay(spark, tmp_path, plog, "xxhash", "ut")
+    assert [s.fold for s in js.stats] == ["join"] * 3
+    assert [(s.fold, s.fold_reason) for s in us.stats] == [("union", None)] * 3
     # ledger-level equality: same classification on every epoch in total
     assert (js.rows_inserted, js.rows_updated, js.rows_deleted) == (
         us.rows_inserted, us.rows_updated, us.rows_deleted,
@@ -67,9 +71,10 @@ def test_join_fold_plan_has_no_shuffle_exchange(spark, tmp_path, bucketed_log):
     blog, _ = bucketed_log
     os.environ["MXETL_CAPTURE_PLAN"] = "1"
     try:
-        _replay(spark, tmp_path, blog, "spark", "join", "jp", epochs=2)
+        _, s = _replay(spark, tmp_path, blog, "spark", "jp", epochs=2)
     finally:
         os.environ.pop("MXETL_CAPTURE_PLAN", None)
+    assert [st.fold for st in s.stats] == ["join", "join"]
     plan = merge_mod.LAST_WRITE_PLAN
     assert plan is not None
     # broadcast of the (narrow) target side is fine; a shuffle is the thing
@@ -91,10 +96,11 @@ def test_join_fold_plan_epoch1_empty_target(spark, tmp_path, bucketed_log):
             key_columns=["repo", "path"], num_buckets=B, layout="spark",
         )
         total = N + int(N * 0.01)
-        replay(blog, table, interval_size=total, total_offsets=total,
-               fold="join", max_epochs=1)
+        s = replay(blog, table, interval_size=total, total_offsets=total,
+                   max_epochs=1)
     finally:
         os.environ.pop("MXETL_CAPTURE_PLAN", None)
+    assert s.stats[0].fold == "join"
     plan = merge_mod.LAST_WRITE_PLAN
     assert "Exchange hashpartitioning" not in plan, plan
     assert "Exchange rangepartitioning" not in plan, plan
@@ -110,16 +116,18 @@ def test_join_fold_resumes_exactly_once(spark, tmp_path, bucketed_log):
         key_columns=["repo", "path"], num_buckets=B, layout="spark",
     )
     replay(blog, table, interval_size=interval, total_offsets=total,
-           fold="join", max_epochs=1)
-    s2 = replay(blog, table, interval_size=interval, total_offsets=total, fold="join")
+           max_epochs=1)
+    s2 = replay(blog, table, interval_size=interval, total_offsets=total)
     assert s2.epochs_skipped == 1 and s2.epochs_run == 2
-    s3 = replay(blog, table, interval_size=interval, total_offsets=total, fold="join")
+    assert [st.fold for st in s2.stats] == ["join", "join"]
+    s3 = replay(blog, table, interval_size=interval, total_offsets=total)
     assert s3.epochs_run == 0 and s3.epochs_skipped == 3
 
 
 def test_spark_layout_union_fold_and_patches(spark, tmp_path):
-    """Patch batches self-downgrade to the union fold and stay exact on a
-    spark-layout table (repartition_for_write keeps pid == bucket)."""
+    """A spark-layout table fed from a plain (non-bucketed) patch-mix log
+    takes the union fold and stays exact (repartition_for_write keeps
+    pid == bucket)."""
     n = 20_000
     log = generate_change_log(
         spark, n, num_repos=40, paths_per_repo=40, partitions=8, patch_fraction=0.3
@@ -133,9 +141,12 @@ def test_spark_layout_union_fold_and_patches(spark, tmp_path):
         spark, str(tmp_path / "xp"), REPOS,
         key_columns=["repo", "path"], num_buckets=B,
     )
+    reasons = {}
     for t in (st, xt):
-        replay(log, t, interval_size=-(-total // 2), total_offsets=total,
-               fold="join" if t is st else "union")
+        s = replay(log, t, interval_size=-(-total // 2), total_offsets=total)
+        reasons[t.root] = {(e.fold, e.fold_reason) for e in s.stats}
+    assert reasons[st.root] == {("union", "change side is not a bucketed scan")}
+    assert reasons[xt.root] == {("union", None)}  # xxhash: no plan walk
     a, b = st.read(), xt.read()
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
     # and compaction under the spark layout preserves pid == bucket
@@ -146,7 +157,7 @@ def test_spark_layout_union_fold_and_patches(spark, tmp_path):
 
 def test_spark_layout_lookup_prunes_correctly(spark, tmp_path, bucketed_log):
     blog, _ = bucketed_log
-    jt, _ = _replay(spark, tmp_path, blog, "spark", "join", "lk", epochs=1)
+    jt, _ = _replay(spark, tmp_path, blog, "spark", "lk", epochs=1)
     row = jt.read().limit(1).collect()[0]
     hit = jt.lookup(repo=row["repo"], path=row["path"]).collect()
     assert len(hit) == 1 and hit[0]["content"] == row["content"]
@@ -214,8 +225,9 @@ def test_join_fold_generalizes_to_other_keys(spark, tmp_path):
         spark, str(tmp_path / "cu"), target_schema, key_columns=key, num_buckets=4,
     )
     for t, fold, src in ((jt, "join", blog), (ut, "union", log)):
-        replay(src, t, interval_size=-(-total // 2), total_offsets=total,
-               fold=fold, normalizer=normalize_commit_events)
+        s = replay(src, t, interval_size=-(-total // 2), total_offsets=total,
+                   normalizer=normalize_commit_events)
+        assert {st.fold for st in s.stats} == {fold}
     a, b = jt.read(), ut.read()
     assert a.count() == b.count() > 0
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
@@ -223,11 +235,14 @@ def test_join_fold_generalizes_to_other_keys(spark, tmp_path):
 
 
 def test_join_fold_after_rebucket_fails_loudly_not_silently(spark, tmp_path, bucketed_log):
-    """rebucket() changes the table's B; a join-fold replay fed the OLD-B
-    bucketed log can no longer write pid==bucket files. The purity guard
-    must turn that into a loud error — silent pid corruption would poison
-    every later bucket-pruned read."""
-    blog, _ = bucketed_log
+    """rebucket() changes the table's B; the OLD-B bucketed log can no
+    longer serve pid == bucket writes. The merge reads the scan's bucket
+    spec, sees the mismatch and finishes the replay exactly on the union
+    fold, saying why in ``fold_reason`` — never an impure write (the purity
+    guard itself is covered by the next test)."""
+    from multiversx_etl_spark.oracle import expected_state
+
+    blog, plog = bucketed_log
     total = N + int(N * 0.01)
     interval = -(-total // 2)
     table = LakeTable.create(
@@ -235,20 +250,19 @@ def test_join_fold_after_rebucket_fails_loudly_not_silently(spark, tmp_path, buc
         key_columns=["repo", "path"], num_buckets=B, layout="spark",
     )
     # ingest the first half, evolve the layout, then bring FRESH data (the
-    # second half) through the stale-B log — the impure write must abort
-    # BEFORE commit (an all-carry epoch writes nothing and proves nothing)
-    replay(blog, table, interval_size=interval, total_offsets=total,
-           fold="join", max_epochs=1)
+    # second half) through the stale-B log
+    s1 = replay(blog, table, interval_size=interval, total_offsets=total,
+                max_epochs=1)
+    assert s1.stats[0].fold == "join"
     table.rebucket(B * 2)
-    v = table.current_version()
-    with pytest.raises(RuntimeError, match="bucket-impure"):
-        replay(blog, table, interval_size=interval, total_offsets=total,
-               fold="join")
-    assert table.current_version() == v  # aborted pre-commit: state intact
-    # the union fold finishes the replay under the new layout
-    s = replay(blog, table, interval_size=interval, total_offsets=total,
-               fold="union")
+    s = replay(blog, table, interval_size=interval, total_offsets=total)
     assert s.epochs_run == 1 and s.epochs_skipped == 1
+    assert s.stats[0].fold == "union"
+    assert f"log bucketed into {B} buckets, table has {B * 2}" in s.stats[0].fold_reason
+    want = expected_state(plog)
+    got = table.read().select(*want.columns)
+    assert got.count() == want.count() > 0
+    assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
 
 
 def test_bucket_purity_guard_rejects_misaligned_write(spark, tmp_path):
@@ -297,12 +311,15 @@ def test_stream_join_fold_exact_zero_exchange_and_resume(spark, tmp_path):
         spark, str(tmp_path / "jt"), REPOS,
         key_columns=["repo", "path"], num_buckets=4, layout="spark",
     )
+    folds = []
     os.environ["MXETL_CAPTURE_PLAN"] = "1"
     try:
         stream_ingest(spark, blog, jt, str(tmp_path / "jckpt"),
-                      max_files_per_trigger=3, fold="auto")
+                      max_files_per_trigger=3,
+                      on_epoch=lambda e, st: folds.append(st.fold))
     finally:
         os.environ.pop("MXETL_CAPTURE_PLAN", None)
+    assert folds and set(folds) == {"join"}
     plan = merge_mod.LAST_WRITE_PLAN
     assert plan is not None
     assert "Exchange hashpartitioning" not in plan, plan
@@ -321,15 +338,15 @@ def test_stream_join_fold_exact_zero_exchange_and_resume(spark, tmp_path):
 
     v = jt.current_version()
     stream_ingest(spark, blog, jt, str(tmp_path / "jckpt"),
-                  max_files_per_trigger=3, fold="auto")
+                  max_files_per_trigger=3)
     assert jt.current_version() == v
 
 
 def test_stream_join_fold_patch_batches_downgrade(spark, tmp_path):
-    """Patch-bearing micro-batches self-downgrade to the union fold inside
-    the merge (per-column LWW needs the union machinery) while clean
-    batches keep the join shape — the streamed final state must equal a
-    batch union replay of the same patch-mix log."""
+    """Patch-bearing micro-batches take the union fold inside the merge
+    (per-column LWW needs the union machinery), and ``fold_reason`` says
+    so — the streamed final state must equal a batch union replay of the
+    same patch-mix log."""
     from multiversx_etl_spark.streaming.ingest import stream_ingest
 
     log = generate_change_log(spark, 3000, num_repos=10, paths_per_repo=30,
@@ -344,8 +361,15 @@ def test_stream_join_fold_patch_batches_downgrade(spark, tmp_path):
         spark, str(tmp_path / "jt"), REPOS,
         key_columns=["repo", "path"], num_buckets=4, layout="spark",
     )
+    stats = []
     stream_ingest(spark, blog, jt, str(tmp_path / "jckpt"),
-                  max_files_per_trigger=2, fold="auto")
+                  max_files_per_trigger=2,
+                  on_epoch=lambda e, st: stats.append(st))
+    assert stats and stats[0].rows_patched > 0
+    assert (stats[0].fold, stats[0].fold_reason) == (
+        "union", "batch carries patch events"
+    )
+    assert {st.fold for st in stats} == {"union"}
     ut = LakeTable.create(
         spark, str(tmp_path / "ut"), REPOS,
         key_columns=["repo", "path"], num_buckets=4,
@@ -358,45 +382,56 @@ def test_stream_join_fold_patch_batches_downgrade(spark, tmp_path):
 
 
 def test_stream_fold_auto_downgrades_on_plain_log(spark, tmp_path):
-    """A plain (non-bucketed) log directory under fold='auto' resolves to
-    the union fold and stays exact — auto never requires the fast path."""
+    """A log directory that cannot prove bucket alignment with a
+    spark-layout table takes the union fold on every epoch and stays exact
+    — the fast path is never required. Three such logs: a plain one; one
+    bucketed into 4 while the table has 8 (its files 0..3 would "fit" under
+    the table's B, so the stream must check the sidecar's B, not the file
+    names); and a matching one whose table is rebucketed after the first
+    epoch (the stream re-checks the sidecar against each batch's
+    snapshot)."""
     from multiversx_etl_spark.oracle import expected_state
     from multiversx_etl_spark.streaming.ingest import stream_ingest
 
     log = generate_change_log(spark, 1000, num_repos=8, paths_per_repo=20)
     plog = str(tmp_path / "plog")
     write_log_parquet(log, plog, files=3)
-    t = LakeTable.create(
-        spark, str(tmp_path / "t"), REPOS,
-        key_columns=["repo", "path"], num_buckets=4, layout="spark",
-    )
-    stream_ingest(spark, plog, t, str(tmp_path / "ckpt"),
-                  max_files_per_trigger=2, fold="auto")
-    assert t.read().count() == expected_state(spark.read.parquet(plog)).count()
-
-
-def test_stream_explicit_join_validates_sidecar_upfront(spark, tmp_path):
-    """Explicit fold='join' streaming must refuse BEFORE the query starts
-    when the sidecar mismatches the table (files 0..7 'fit' under any
-    B >= 8, so the per-batch id<B guard alone would let a wrong-modulus
-    merge run until the purity check killed it mid-stream)."""
-    from multiversx_etl_spark.streaming.ingest import stream_ingest
-
-    log = generate_change_log(spark, 500, num_repos=5, paths_per_repo=10,
-                              partitions=2)
+    want = expected_state(spark.read.parquet(plog))
     blog = str(tmp_path / "blog")
-    write_log_bucketed(log, blog, 4, table_name="mxetl_sjv_gen")
-    spark.sql("DROP TABLE IF EXISTS mxetl_sjv_gen")
-    t = LakeTable.create(
-        spark, str(tmp_path / "t"), REPOS,
-        key_columns=["repo", "path"], num_buckets=8, layout="spark",
-    )
-    with pytest.raises(ValueError, match="cannot serve the join fold"):
-        stream_ingest(spark, blog, t, str(tmp_path / "ckpt"), fold="join")
-    plain = str(tmp_path / "plain")
-    write_log_parquet(log, plain, files=2)
-    with pytest.raises(ValueError, match="no _bucket_spec.json"):
-        stream_ingest(spark, plain, t, str(tmp_path / "ckpt2"), fold="join")
+    write_log_bucketed(log, blog, 4, table_name="mxetl_sfd_gen")
+    spark.sql("DROP TABLE IF EXISTS mxetl_sfd_gen")
+
+    def run(name, log_dir, num_buckets, on_epoch):
+        t = LakeTable.create(
+            spark, str(tmp_path / name), REPOS,
+            key_columns=["repo", "path"], num_buckets=num_buckets,
+            layout="spark",
+        )
+        stream_ingest(spark, log_dir, t, str(tmp_path / f"{name}-ckpt"),
+                      max_files_per_trigger=2,
+                      on_epoch=lambda e, st: on_epoch(t, e, st))
+        got = t.read().select(*want.columns)
+        assert got.count() == want.count() > 0
+        assert got.exceptAll(want).count() == 0
+        assert want.exceptAll(got).count() == 0
+
+    plain = "change side is not a bucketed scan"
+    for name, log_dir, num_buckets in (("t", plog, 4), ("t8", blog, 8)):
+        folds = []
+        run(name, log_dir, num_buckets,
+            lambda t, e, st: folds.append((st.fold, st.fold_reason)))
+        assert len(folds) > 1 and set(folds) == {("union", plain)}, name
+
+    folds = []
+
+    def rebucket_after_first(t, e, st):
+        folds.append((st.fold, st.fold_reason))
+        if len(folds) == 1:
+            t.rebucket(8)
+
+    run("rb", blog, 4, rebucket_after_first)
+    assert folds[0] == ("join", None)
+    assert len(folds) > 1 and set(folds[1:]) == {("union", plain)}
 
 
 def test_join_fold_over_colseq_rows_zero_exchange(spark, tmp_path):
@@ -420,7 +455,8 @@ def test_join_fold_over_colseq_rows_zero_exchange(spark, tmp_path):
         ],
         CHANGE_EVENTS,
     )
-    merge_batch(table, e0, "main", 0)  # patches take the union machinery
+    s0 = merge_batch(table, e0, "main", 0)  # patches take the union machinery
+    assert s0.fold == "union"
     table.compact()
     m = table.snapshot()
     assert int(m.properties["colseq"]) == 1
@@ -436,10 +472,11 @@ def test_join_fold_over_colseq_rows_zero_exchange(spark, tmp_path):
     )
     os.environ["MXETL_CAPTURE_PLAN"] = "1"
     try:
-        merge_batch(table, spark.table(name), "main", 1, fold="join")
+        stats = merge_batch(table, spark.table(name), "main", 1)
     finally:
         os.environ.pop("MXETL_CAPTURE_PLAN", None)
         spark.sql("DROP TABLE IF EXISTS mxetl_colseq_log")
+    assert (stats.fold, stats.fold_reason) == ("join", None)
     plan = merge_mod.LAST_WRITE_PLAN
     assert plan is not None
     assert "Exchange hashpartitioning" not in plan, plan

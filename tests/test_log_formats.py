@@ -135,21 +135,6 @@ def test_stream_ingest_ndjson_landing_zone(spark, tmp_path):
     assert table.current_version() == v
 
 
-def test_join_fold_refuses_non_parquet(spark, tmp_path):
-    log = generate_change_log(spark, 100, num_repos=5, paths_per_repo=5)
-    zone = str(tmp_path / "zone")
-    write_log(log, zone, log_format="ndjson")
-    table = LakeTable.create(
-        spark, str(tmp_path / "t"), REPOS, key_columns=["repo", "path"],
-        num_buckets=4, layout="spark",
-    )
-    with pytest.raises(ValueError, match="parquet bucketed log"):
-        stream_ingest(
-            spark, zone, table, str(tmp_path / "ckpt"),
-            log_format="ndjson", fold="join",
-        )
-
-
 def test_config_log_format_e2e(spark, tmp_path):
     """The worker-config surface reaches the format knob: a single-table
     config over an NDJSON log replays and reconciles green."""
@@ -185,16 +170,6 @@ def test_config_log_format_e2e(spark, tmp_path):
             "log_format": "avro",
         }, fh)
     with pytest.raises(ConfigError, match="log_format"):
-        load_worker_config(cfg_path)
-    with open(cfg_path, "w") as fh:
-        json.dump({
-            "table_root": str(tmp_path / "t3"),
-            "log_path": zone,
-            "log_format": "csv",
-            "fold": "join",
-            "layout": "spark",
-        }, fh)
-    with pytest.raises(ConfigError, match="parquet bucketed log"):
         load_worker_config(cfg_path)
 
 
