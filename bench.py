@@ -190,6 +190,9 @@ def run_cdc_replay(
         "rows_deleted": summary.rows_deleted,
         "rows_patched": sum(st.rows_patched for st in summary.stats),
         "folds": dict(Counter(st.fold for st in summary.stats if st.fold)),
+        # per-epoch delta write paths (MergeStats.write): replay measures
+        # no payload bytes, so every epoch writes through Spark
+        "writes": dict(Counter(st.write for st in summary.stats if st.write)),
     }
 
 
@@ -236,12 +239,13 @@ def run_cdc_stream(spark, workdir: str, tag: str = "", bucketed: bool = False) -
         )
         wall = time.perf_counter() - t0
         folds = dict(Counter(st.fold for st in stats if st.fold))
+        writes = dict(Counter(st.write for st in stats if st.write))
         if bucketed:
             _require_join(f"cdc_join_stream rep {rep}", stats)
         samples.append(round(wall, 3))
         if best is None or wall < best[0]:
-            best = (wall, table, folds)
-    wall, table, folds = best
+            best = (wall, table, folds, writes)
+    wall, table, folds, writes = best
     return {
         "events": n,
         "stream_sec": round(wall, 3),
@@ -249,6 +253,7 @@ def run_cdc_stream(spark, workdir: str, tag: str = "", bucketed: bool = False) -
         "events_per_sec": round(n / wall, 1),
         "final_rows": table.read().count(),
         "folds": folds,
+        "writes": writes,
     }
 
 
@@ -361,27 +366,32 @@ def main() -> None:
             "cdc_replay_sec": cdc["replay_sec"],
             "cdc_replay_samples": cdc["replay_samples"],
             "cdc_final_rows": cdc["final_rows"],
+            "cdc_writes": cdc["writes"],
             "cdc_stream_events_per_sec": stream["events_per_sec"],
             "cdc_stream_sec": stream["stream_sec"],
             "cdc_stream_samples": stream["stream_samples"],
             "cdc_stream_final_rows": stream["final_rows"],
+            "cdc_stream_writes": stream["writes"],
             "cdc_patch_events": patch["events"],
             "cdc_patch_events_per_sec": patch["events_per_sec"],
             "cdc_patch_replay_sec": patch["replay_sec"],
             "cdc_patch_replay_samples": patch["replay_samples"],
             "cdc_patch_rows_patched": patch["rows_patched"],
             "cdc_patch_final_rows": patch["final_rows"],
+            "cdc_patch_writes": patch["writes"],
             "cdc_join_events": join["events"],
             "cdc_join_events_per_sec": join["events_per_sec"],
             "cdc_join_replay_sec": join["replay_sec"],
             "cdc_join_replay_samples": join["replay_samples"],
             "cdc_join_final_rows": join["final_rows"],
             "cdc_join_folds": join["folds"],
+            "cdc_join_writes": join["writes"],
             "cdc_join_stream_events_per_sec": jstream["events_per_sec"],
             "cdc_join_stream_sec": jstream["stream_sec"],
             "cdc_join_stream_samples": jstream["stream_samples"],
             "cdc_join_stream_final_rows": jstream["final_rows"],
             "cdc_join_stream_folds": jstream["folds"],
+            "cdc_join_stream_writes": jstream["writes"],
         }
         line = json.dumps(out)
         # Sidecar copy survives even if something else pollutes stdout.

@@ -155,6 +155,34 @@ def repartition_for_write(
     return df.repartition(num_buckets, F.col("_bucket"))
 
 
+def _dictionary_columns(t) -> list[str]:
+    """The columns of ``t`` parquet-mr would keep dictionary-encoded: those
+    whose dictionary plus bit-packed ids take fewer bytes than the plain
+    values (its fallback rule). pyarrow alone dictionary-encodes every
+    column, and unique-valued ones (content, commit, seq) then store
+    ~15% more. Nested columns stay plain."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    def plain_bytes(v) -> int:
+        if pa.types.is_primitive(v.type) or pa.types.is_decimal(v.type):
+            return len(v) * v.type.bit_width // 8
+        # strings and binaries: a 4-byte length before each value
+        return (pc.sum(pc.binary_length(v)).as_py() or 0) + 4 * len(v)
+
+    keep = []
+    for name, col in zip(t.column_names, t.columns):
+        typ = col.type
+        if pa.types.is_boolean(typ) or pa.types.is_nested(typ) or pa.types.is_null(typ):
+            continue
+        vals = col.drop_null()
+        uniq = pc.unique(vals)
+        ids = len(vals) * max(1, (len(uniq) - 1).bit_length()) / 8
+        if ids + plain_bytes(uniq) < plain_bytes(vals):
+            keep.append(name)
+    return keep
+
+
 def bucket_to_pid(
     spark: SparkSession, num_buckets: int, layout: str = "xxhash"
 ) -> list[int]:
@@ -1184,11 +1212,31 @@ class LakeTable:
         sort_columns: list[str] | None = None,
         max_records_per_file: int | None = None,
         stat_columns: list[str] | None = None,
+        on_driver: bool = False,
     ) -> list[dict[str, Any]]:
         """Write ``df`` (which must carry a ``_bucket`` column) under
         ``data/<commit_tag>/`` as ONE plain parquet file per shuffle
         partition of ``repartition(B, _bucket)`` and return manifest entries
         labeled with the partition id parsed from the task's file name.
+
+        Two write paths, one contract (same file names, same per-pid
+        grouping, same footer-derived entries below):
+
+        - Spark's file writer (default): one task per partition, each
+          writing its own file, then the job and task commit renames.
+        - ``on_driver=True``: ``df`` is collected as one Arrow table
+          (``toArrow``) and the driver writes one zstd parquet file per pid
+          (pid = ``bucket_to_pid[_bucket]``) with pyarrow. The MERGE takes
+          it for a batch it knows to be small (operators/merge.py
+          ``_DRIVER_WRITE_MAX_BYTES``): a Spark write of ~1k rows costs
+          one task per partition, and each task deserializes the write
+          job's description, Hadoop conf included, before it writes a
+          byte. Partition-local sorts and file splits are not supported
+          there (``sort_columns``/``max_records_per_file``).
+
+        Either way the tag directory is cleared first (Spark's overwrite),
+        and nothing written here is visible until a manifest commit
+        references it.
 
         ``bucket_aligned=True`` promises the caller's plan already carries
         exactly that partitioning (e.g. the merge aggregate), skipping the
@@ -1225,16 +1273,23 @@ class LakeTable:
         m = self.snapshot()
         stat_cols = self._resolved_stat_columns(m, stat_columns)
         out_dir = os.path.join(self.root, "data", commit_tag)
-        if not bucket_aligned:
-            df = repartition_for_write(df, m.num_buckets, m.key_columns, m.layout)
-        if not keep_bucket:
-            df = df.drop("_bucket")
-        if sort_columns:
-            df = df.sortWithinPartitions(*sort_columns)
-        writer = df.write.mode("overwrite")
-        if max_records_per_file is not None:
-            writer = writer.option("maxRecordsPerFile", int(max_records_per_file))
-        writer.parquet(out_dir)
+        if on_driver:
+            if sort_columns or max_records_per_file is not None:
+                raise ValueError(
+                    "on_driver writes neither sort_columns nor max_records_per_file"
+                )
+            self._write_pid_files_on_driver(df, out_dir, m, keep_bucket, stat_cols)
+        else:
+            if not bucket_aligned:
+                df = repartition_for_write(df, m.num_buckets, m.key_columns, m.layout)
+            if not keep_bucket:
+                df = df.drop("_bucket")
+            if sort_columns:
+                df = df.sortWithinPartitions(*sort_columns)
+            writer = df.write.mode("overwrite")
+            if max_records_per_file is not None:
+                writer = writer.option("maxRecordsPerFile", int(max_records_per_file))
+            writer.parquet(out_dir)
         entries: list[dict[str, Any]] = []
         for fname in sorted(os.listdir(out_dir)):
             if not fname.endswith(".parquet"):
@@ -1267,6 +1322,50 @@ class LakeTable:
                 entry["stats"] = stats
             entries.append(entry)
         return entries
+
+    def _write_pid_files_on_driver(
+        self, df: DataFrame, out_dir: str, m: Manifest, keep_bucket: bool,
+        stat_cols: list[str],
+    ) -> None:
+        """``write_data_files(on_driver=True)``: one Arrow collect, then one
+        pyarrow file per pid, named like a Spark task's output
+        (``part-<pid>-<uuid>-c000.zstd.parquet``). zstd at
+        ``PARQUET_ZSTD_LEVEL``, parquet-mr's dictionary rule
+        (``_dictionary_columns``) and no Arrow schema blob in the footer
+        keep the stored bytes at the Spark writer's. Column statistics are
+        written only for what reads them (the zone-map ``stat_cols`` and
+        the ``_bucket`` purity guard): pyarrow repeats them in every page
+        header, which parquet-mr does not, and on long strings such as
+        ``content`` that costs ~3% more bytes. Dates and timestamps
+        are written proleptic Gregorian, which Spark's default
+        (``datetimeRebaseModeInRead=CORRECTED``) reads as written."""
+        import numpy as np
+        import pyarrow.parquet as pq
+
+        from multiversx_etl_spark.session import PARQUET_ZSTD_LEVEL
+
+        t = df.toArrow()
+        pid_of = np.asarray(bucket_to_pid(self.spark, m.num_buckets, m.layout))
+        pids = pid_of[t["_bucket"].to_numpy()]
+        if not keep_bucket:
+            t = t.drop_columns(["_bucket"])
+        order = np.argsort(pids, kind="stable")
+        t, pids = t.take(order), pids[order]
+        shutil.rmtree(out_dir, ignore_errors=True)
+        os.makedirs(out_dir)
+        starts = np.flatnonzero(np.diff(pids, prepend=-1))
+        job = uuid.uuid4()
+        for lo, hi in zip(starts, [*starts[1:], len(pids)]):
+            part = t.slice(lo, hi - lo)
+            pq.write_table(
+                part,
+                os.path.join(out_dir, f"part-{pids[lo]:05d}-{job}-c000.zstd.parquet"),
+                compression="zstd",
+                compression_level=PARQUET_ZSTD_LEVEL,
+                use_dictionary=_dictionary_columns(part),
+                write_statistics=[c for c in (*stat_cols, "_bucket") if c in t.column_names],
+                store_schema=False,
+            )
 
     @staticmethod
     def _assert_bucket_purity(pf, path: str, pid: int) -> None:

@@ -52,6 +52,11 @@ DEFAULT_CONF: dict[str, str] = {
 #: 3× CPU-per-byte manipulation, i.e. no compute/data mix reachable by this
 #: knob escapes the single-VM fabric band (0.70-0.75).
 _zstd_level = os.environ.get("SPARK_GRAFT_ZSTD_LEVEL")
+#: the zstd level parquet files get: parquet-mr's default 3 unless the knob
+#: above raises it. The driver-side delta write (lake/table.py
+#: ``write_data_files(on_driver=True)``) uses it too, so both write paths
+#: store the same bytes.
+PARQUET_ZSTD_LEVEL = int(_zstd_level or 3)
 if _zstd_level:
     DEFAULT_CONF.update(
         {

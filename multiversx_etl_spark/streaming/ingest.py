@@ -38,7 +38,8 @@ from datetime import datetime, timezone
 from typing import Callable
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+import pyspark.sql.types as T
+from pyspark.sql import Column, DataFrame, SparkSession
 
 from multiversx_etl_spark.lake.table import LakeTable
 from multiversx_etl_spark.operators.merge import MergeStats, _phase, merge_batch
@@ -139,6 +140,31 @@ def _write_lineage(
     os.replace(tmp, os.path.join(path, "part-0.parquet"))
 
 
+#: bytes per value of the fixed-width column types (``_row_bytes``)
+_FIXED_WIDTH = {
+    T.BooleanType: 1, T.ByteType: 1, T.ShortType: 2, T.IntegerType: 4,
+    T.LongType: 8, T.FloatType: 4, T.DoubleType: 8, T.DateType: 4,
+    T.TimestampType: 8, T.TimestampNTZType: 8, T.DecimalType: 16,
+}
+
+
+def _row_bytes(schema: T.StructType) -> Column | None:
+    """Payload bytes of one change row: the ``octet_length`` of each string
+    and binary value plus the width of each fixed-width column. None when
+    a column is an array, map, struct or any other type without a cheap
+    width: such a batch reports no total, and its MERGE writes through
+    Spark (operators/merge.py ``_DRIVER_WRITE_MAX_BYTES``)."""
+    fixed, var = 0, []
+    for f in schema.fields:
+        if isinstance(f.dataType, (T.StringType, T.BinaryType)):
+            var.append(F.coalesce(F.octet_length(F.col(f.name)), F.lit(0)))
+        elif type(f.dataType) in _FIXED_WIDTH:
+            fixed += _FIXED_WIDTH[type(f.dataType)]
+        else:
+            return None
+    return sum(var, F.lit(fixed))
+
+
 def read_lineage(table: LakeTable, stream_id: str | None = None) -> DataFrame:
     """The ledger, deduped by (stream_id, epoch_id, bucket) — duplicate rows
     from crash-replays collapse here (max committed_at wins). Streams are
@@ -171,6 +197,7 @@ def apply_epoch(
     conflict_retries: int = 2,
     normalizer: Callable[[DataFrame], DataFrame] | None = None,
     null_key_count: int | None = None,
+    payload_bytes: int | None = None,
 ) -> MergeStats:
     """Normalize → dedup → MERGE → lineage → atomic marker+data commit.
 
@@ -184,7 +211,10 @@ def apply_epoch(
     from the NEW snapshot: the whole merge recomputes, the same-tag data
     files are overwritten, the ledger rewrite is idempotent. This is the
     Iceberg commit-retry loop; the per-stream epoch marker stays correct
-    because a replayed epoch collapses to seq-tie carries."""
+    because a replayed epoch collapses to seq-tie carries.
+
+    ``payload_bytes`` (the batch's measured payload byte total) lets a
+    small batch write its delta from the driver (merge_batch)."""
     if normalize:
         batch = (normalizer or normalize_change_events)(batch)
 
@@ -197,7 +227,7 @@ def apply_epoch(
             return merge_batch(
                 table, batch, stream_id, epoch_id, offset_lo, offset_hi,
                 in_counts=in_counts, patch_count=patch_count,
-                null_key_count=null_key_count,
+                null_key_count=null_key_count, payload_bytes=payload_bytes,
                 pre_commit=write_ledger,
                 # each attempt writes its own tag dir: a retry must NEVER
                 # overwrite files a rival's committed manifest references
@@ -436,7 +466,8 @@ def stream_ingest(
                 )
                 batch = staged.__enter__()
         try:
-            # one aggregation supplies offset bounds AND per-bucket rows_in —
+            # one aggregation supplies offset bounds, per-bucket rows_in and
+            # the payload byte total that picks the merge's write path —
             # the (possibly re-staged) batch is scanned once here, once by
             # the merge itself
             aggs = [
@@ -446,6 +477,9 @@ def stream_ingest(
             ]
             if "op" in batch.columns:  # partial-image rows (same pass)
                 aggs.append(F.count(F.when(F.col("op") == "patch", 1)).alias("p"))
+            row_bytes = _row_bytes(batch.schema)
+            if row_bytes is not None:
+                aggs.append(F.sum(row_bytes).alias("b"))
             rows = (
                 batch.groupBy(m.bucket_expr().alias("_bucket"))
                 .agg(*aggs)
@@ -464,10 +498,13 @@ def stream_ingest(
             patch_count = (
                 sum(r["p"] for r in rows) if "op" in batch.columns else 0
             )
+            payload_bytes = (
+                sum(r["b"] for r in rows) if row_bytes is not None else None
+            )
             stats = apply_epoch(
                 table, batch, stream_id, epoch_id, lo, hi,
                 in_counts=in_counts, patch_count=patch_count,
-                normalizer=normalizer,
+                normalizer=normalizer, payload_bytes=payload_bytes,
             )
         finally:
             if staged is not None:
