@@ -5,11 +5,11 @@ rest — each epoch constructs only its own slice, the 10^10-scale driver
 shape) replayed epoch by epoch into a layout='spark' LakeTable with the
 ONLINE maintenance profile running in-band: compaction every K epochs and
 `expire_snapshots(older_than)` retention behind it, exactly the long-
-running-ingest steady state. Per-epoch samples: wall, events/s, commit
-wall, root-manifest bytes, live files/groups, table bytes on disk — the
+running-ingest steady state. Per-epoch samples: wall, events/s,
+root-manifest bytes, live files/groups, table bytes on disk — the
 evidence that (a) throughput is flat across the run, (b) the sharded
-manifest keeps commit cost and root-doc size bounded as epochs accumulate,
-(c) retention bounds disk.
+manifest keeps the root-doc size bounded as epochs accumulate, (c)
+retention bounds disk.
 
 Usage: python BENCH/soak_r05.py [events_total] [interval] [out.jsonl]
 Defaults: 10^8 events, 2M per epoch (50 epochs), compact every 5,
@@ -76,14 +76,13 @@ def main() -> None:
         lo, hi = e * interval, (e + 1) * interval
         t0 = time.perf_counter()
         batch = slice_change_log(spark, events_total, lo, hi, num_repos=repos)
-        stats = apply_epoch(table, batch, "soak", e, lo, hi, mode="mor")
+        stats = apply_epoch(table, batch, "soak", e, lo, hi)
         wall = time.perf_counter() - t0
         rec = {
             "epoch": e,
             "wall_sec": round(wall, 3),
             "events_per_sec": round(interval / wall, 1),
             "rows_in": stats.rows_in,
-            "commit_sec": round(getattr(stats, "commit_sec", 0) or 0, 4),
         }
         maint = None
         if (e + 1) % compact_every == 0:

@@ -41,14 +41,16 @@ Physical plan:
    patch generations leave through one ``inline`` into the same
    bucket-aligned write, so an epoch — patches or not — costs one
    Exchange, one scan of the batch and one ``write_data_files`` job.
-   That job takes one of two paths, derived, never chosen: a batch whose
-   caller measured its payload bytes (the stream handler does, in the
-   aggregate it runs anyway) at or under ``_DRIVER_WRITE_MAX_BYTES`` is
-   collected as one Arrow table and written by the driver, one pyarrow
-   file per pid; every other batch (replay, direct calls, nested payload
-   columns, large batches) goes through Spark's file writer, whose
-   per-task fixed cost only pays off on big batches. Files, manifest
-   entries and the commit are the same either way.
+   That job takes one of two paths, derived, never chosen: a batch
+   counted on its own is measured (``profile_batch``: its payload bytes
+   ride the same aggregate as its per-bucket counts), and a measured
+   batch at or under ``_DRIVER_WRITE_MAX_BYTES`` is collected as one
+   Arrow table and written by the driver, one pyarrow file per pid.
+   Every other batch goes through Spark's file writer, whose per-task
+   fixed cost only pays off on big batches: large ones, ones with a
+   nested payload column (no cheap width), and replay's epochs, whose
+   one span precount reads no content. Files, manifest entries and the
+   commit are the same either way.
 
 Idempotence: re-applying the same batch yields seq ties, resolved as 'carry'
 (no-op) — a replayed MERGE changes nothing (the epoch marker normally
@@ -59,13 +61,13 @@ from __future__ import annotations
 
 import contextlib
 import os
-import sys
 import time
 from collections.abc import Callable
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Observation
+import pyspark.sql.types as T
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql.types import StructType
 
 from multiversx_etl_spark.lake.table import LakeTable, repartition_for_write
@@ -76,11 +78,11 @@ from multiversx_etl_spark.sources.changelog import fold_for_spec, scan_bucket_sp
 #: scheduling overhead per epoch — the round-1 per-epoch serial floor).
 _DRIVER_STATS_MAX_ROWS = 4_000_000
 
-#: payload-byte ceiling (the caller's measured batch total, see
-#: ``merge_batch``) for writing the MERGE delta from the driver: one Arrow
-#: collect and one pyarrow file per pid instead of Spark's file-writer job,
-#: whose tasks each deserialize the job description (Hadoop conf
-#: included) — ~0.2 s of CPU per epoch however few rows it writes.
+#: payload-byte ceiling (``BatchProfile.payload_bytes``) for writing the
+#: MERGE delta from the driver: one Arrow collect and one pyarrow file per
+#: pid instead of Spark's file-writer job, whose tasks each deserialize
+#: the job description (Hadoop conf included) — ~0.2 s of CPU per epoch
+#: however few rows it writes.
 #: Measured crossover (one stream_ingest batch, local[4], 30% patches,
 #: median of 5 or 3 interleaved warm runs, driver/spark wall): 1k events
 #: (0.23 MB) 0.88, 20k (4.6 MB) 0.92, 100k (23 MB) 0.93, 300k (69 MB)
@@ -156,15 +158,6 @@ _LOG_ONLY = ("offset", "op")
 LAST_WRITE_PLAN: str | None = None
 
 
-@contextlib.contextmanager
-def _phase(name: str):
-    """Wall-clock a merge phase to stderr when MXETL_TIMING=1 (perf triage)."""
-    t0 = time.perf_counter()
-    yield
-    if os.environ.get("MXETL_TIMING"):
-        print(f"[merge] {name}: {time.perf_counter() - t0:.2f}s", file=sys.stderr)
-
-
 @dataclass
 class MergeStats:
     rows_in: int = 0
@@ -190,6 +183,102 @@ class MergeStats:
     #: the delta write that ran: "driver" (one Arrow collect, pyarrow
     #: files) or "spark" (Spark's file-writer job); None when no write ran
     write: str | None = None
+
+
+@dataclass
+class BatchProfile:
+    """What the MERGE knows about a batch before it folds it, all from one
+    aggregate (``batch_profiles``). ``rows_per_bucket`` is the touched set
+    that prunes the target read and the ledger's per-bucket ``rows_in``;
+    ``patch_rows`` (op='patch' partial images) arms the patch machinery and,
+    with ``null_key_rows``, keeps a spark-layout batch off the join fold;
+    ``payload_bytes`` picks the write path; the offsets span the rows
+    (``offset_hi`` exclusive; 0 and 0 without rows or an ``offset``
+    column). ``payload_bytes`` is None for a batch that was not measured
+    or has a column without a cheap width: it writes through Spark."""
+
+    rows_per_bucket: dict[int, int] = field(default_factory=dict)
+    patch_rows: int = 0
+    null_key_rows: int = 0
+    payload_bytes: int | None = None
+    offset_lo: int = 0
+    offset_hi: int = 0
+
+    @property
+    def rows(self) -> int:
+        return sum(self.rows_per_bucket.values())
+
+
+#: bytes per value of the fixed-width column types (``_row_bytes``)
+_FIXED_WIDTH = {
+    T.BooleanType: 1, T.ByteType: 1, T.ShortType: 2, T.IntegerType: 4,
+    T.LongType: 8, T.FloatType: 4, T.DoubleType: 8, T.DateType: 4,
+    T.TimestampType: 8, T.TimestampNTZType: 8, T.DecimalType: 16,
+}
+
+
+def _row_bytes(schema: StructType) -> Column | None:
+    """Payload bytes of one change row: the ``octet_length`` of each string
+    and binary value plus the width of each fixed-width column. None when
+    a column is an array, map, struct or any other type without a cheap
+    width: such a batch reports no total, and its MERGE writes through
+    Spark (``_DRIVER_WRITE_MAX_BYTES``)."""
+    fixed, var = 0, []
+    for f in schema.fields:
+        if isinstance(f.dataType, (T.StringType, T.BinaryType)):
+            var.append(F.coalesce(F.octet_length(F.col(f.name)), F.lit(0)))
+        elif type(f.dataType) in _FIXED_WIDTH:
+            fixed += _FIXED_WIDTH[type(f.dataType)]
+        else:
+            return None
+    return sum(var, F.lit(fixed))
+
+
+def batch_profiles(
+    df: DataFrame, manifest, group: Column | None = None, measure: bool = True
+) -> dict:
+    """The one aggregate behind every ``BatchProfile``: one Spark job
+    grouped by ``manifest``'s bucket and, when given, by ``group`` (replay
+    profiles every pending epoch of its span at once, grouped by each
+    offset's epoch). Returns ``{group value: profile}`` (``{None: profile}``
+    ungrouped); a group without rows has no entry. ``measure=False`` leaves
+    ``payload_bytes`` None and the aggregate reads no payload column."""
+    null_key = F.lit(False)
+    for k in manifest.key_columns:
+        null_key = null_key | F.col(k).isNull()
+    aggs = [F.count("*").alias("n"), F.count(F.when(null_key, 1)).alias("nk")]
+    if "op" in df.columns:
+        aggs.append(F.count(F.when(F.col("op") == "patch", 1)).alias("p"))
+    if "offset" in df.columns:
+        aggs += [F.min("offset").alias("lo"), F.max("offset").alias("hi")]
+    row_bytes = _row_bytes(df.schema) if measure else None
+    if row_bytes is not None:
+        aggs.append(F.sum(row_bytes).alias("b"))
+    keys = [manifest.bucket_expr().alias("_bucket")]
+    if group is not None:
+        keys.append(group.alias("_group"))
+    groups: dict = {}
+    for r in df.groupBy(*keys).agg(*aggs).collect():
+        d = r.asDict()
+        groups.setdefault(d.get("_group"), []).append(d)
+    out = {}
+    for g, ds in groups.items():
+        lo = [d["lo"] for d in ds if d.get("lo") is not None]
+        hi = [d["hi"] + 1 for d in ds if d.get("hi") is not None]
+        out[g] = BatchProfile(
+            {d["_bucket"]: d["n"] for d in ds},
+            sum(d.get("p", 0) for d in ds),
+            sum(d["nk"] for d in ds),
+            None if row_bytes is None else sum(d["b"] for d in ds),
+            min(lo, default=0),
+            max(hi, default=0),
+        )
+    return out
+
+
+def profile_batch(df: DataFrame, manifest) -> BatchProfile:
+    """The measured profile of one batch counted on its own (one job)."""
+    return batch_profiles(df, manifest).get(None) or BatchProfile()
 
 
 def null_safe_on(left: DataFrame, right: DataFrame, cols) -> "F.Column":
@@ -239,18 +328,18 @@ def evolve_schema(target_schema: StructType, changes: DataFrame, key_columns: li
 
 
 def _derive_fold(
-    parent, changes: DataFrame, has_patches: bool, patch_outstanding: bool,
-    null_key_count: int | None,
+    parent, changes: DataFrame, profile: BatchProfile, patch_outstanding: bool
 ) -> tuple[str, str | None]:
     """The fold this batch gets, with the reason for a spark-layout union
     (``MergeStats.fold``/``fold_reason``). xxhash tables take the union
     fold without looking at the plan. Otherwise the join fold needs
     ``fold_for_spec`` to agree on the change side's scanned bucket spec,
-    and a batch with no patches, no patch debt and no NULL keys: per-column
-    patch generations need the union machinery, and NULL-keyed rows under
-    a plain equi-join would mis-ledger (table state would stay exact — the
-    MOR read fold resolves per key regardless — but A17 reconciliation
-    must be exact too). Everything is detected, never assumed."""
+    and a batch with no patches, no patch debt and no NULL keys (all three
+    counted in the batch's profile): per-column patch generations need the
+    union machinery, and NULL-keyed rows under a plain equi-join would
+    mis-ledger (table state would stay exact — the MOR read fold resolves
+    per key regardless — but A17 reconciliation must be exact too).
+    Everything is detected, never assumed."""
     if parent.layout != "spark":
         return "union", None
     fold, reason = fold_for_spec(
@@ -259,16 +348,11 @@ def _derive_fold(
     )
     if fold != "join":
         return fold, reason
-    if has_patches:
+    if profile.patch_rows:
         return "union", "batch carries patch events"
     if patch_outstanding:
         return "union", "table carries patch debt (compact to clear it)"
-    if null_key_count is None:
-        nk = F.lit(False)
-        for k in parent.key_columns:
-            nk = nk | F.col(k).isNull()
-        null_key_count = changes.where(nk).limit(1).count()
-    if null_key_count:
+    if profile.null_key_rows:
         return "union", "batch carries NULL keys"
     return "join", None
 
@@ -281,33 +365,25 @@ def merge_batch(
     offset_lo: int = 0,
     offset_hi: int = 0,
     collect_per_bucket_stats: bool = True,
-    in_counts: dict[int, int] | None = None,
-    patch_count: int | None = None,
+    profile: BatchProfile | None = None,
     pre_commit: "Callable[[MergeStats], None] | None" = None,
     marker_mode: str = "contiguous",
     tag_suffix: str = "",
-    null_key_count: int | None = None,
-    payload_bytes: int | None = None,
 ) -> MergeStats:
     """Apply one micro-batch of change events and commit atomically.
 
-    ``in_counts`` (bucket -> raw change-row count for THIS batch) can be
-    precomputed by the caller — replay() computes every epoch's counts in a
-    single pass over the log instead of one job per epoch. A caller that
-    precomputes ``in_counts`` should pass ``patch_count`` (the batch's
-    op='patch' row count, usually from the same aggregate) too; left None
-    it is detected with one extra tiny count job — never guessed, because
-    a partial-image row folded as a full image would null out the columns
-    it meant to keep.
+    ``profile`` is the batch's ``BatchProfile``, from the caller's own
+    aggregate: the stream handler profiles its batch once, and replay
+    profiles every pending epoch in one pass over the log. Left None, the
+    batch is counted on its own here (``profile_batch``, one tiny job). A
+    partial-image row folded as a full image would null out the columns it
+    meant to keep, so patch rows are always counted, never guessed.
 
-    ``null_key_count`` (the batch's NULL-keyed row count) is likewise a
-    precount; left None it is counted only when the join fold is otherwise
-    possible.
-
-    ``payload_bytes`` (the batch's payload byte total, measured by the
-    caller) picks the write path: at most ``_DRIVER_WRITE_MAX_BYTES`` writes
-    the delta from the driver; None (unmeasured) or more uses Spark's
-    writer. ``stats.write`` records which ran.
+    The write path follows the profile: a batch counted on its own is
+    measured, and a measured payload of at most ``_DRIVER_WRITE_MAX_BYTES``
+    writes the delta from the driver. A batch with a nested payload column,
+    a larger one, or one profiled without its payload (replay's precount)
+    uses Spark's writer. ``stats.write`` records which ran.
 
     The fold's physical shape is derived, never chosen (``_derive_fold``;
     the rule is sources/changelog.py ``fold_for_spec``); ``stats.fold``
@@ -330,26 +406,12 @@ def merge_batch(
     key = parent.key_columns
     stats = MergeStats()
 
-    changes = changes.withColumn("_bucket", parent.bucket_expr())
-
-    # -- 1. rows_in per bucket + touched-bucket set (one tiny agg job,
-    #    unless the caller precounted; the same agg counts partial-image
-    #    'patch' rows, which the fold below writes as generations).
-    may_patch = "op" in changes.columns
-    if in_counts is None:
-        with _phase("in_counts"):
-            aggs = [F.count("*").alias("n")]
-            if may_patch:
-                aggs.append(F.count(F.when(F.col("op") == "patch", 1)).alias("p"))
-            rows = changes.groupBy("_bucket").agg(*aggs).collect()
-            in_counts = {r["_bucket"]: r["n"] for r in rows}
-            patch_count = sum(r["p"] for r in rows) if may_patch else 0
-    elif patch_count is None:
-        patch_count = (
-            changes.where(F.col("op") == "patch").count() if may_patch else 0
-        )
-    touched = set(in_counts)
-    stats.rows_in = sum(in_counts.values())
+    # -- 1. rows_in per bucket + touched-bucket set, patch and NULL-key
+    #    rows (one tiny agg job, unless the caller profiled the batch).
+    if profile is None:
+        profile = profile_batch(changes, parent)
+    touched = set(profile.rows_per_bucket)
+    stats.rows_in = profile.rows
     stats.touched_buckets = len(touched)
     if not touched:
         # Empty batch: still record the epoch marker (exactly-once bookkeeping).
@@ -362,6 +424,7 @@ def merge_batch(
         return stats
 
     # -- 2. schema evolution + align both sides to the evolved payload.
+    changes = changes.withColumn("_bucket", parent.bucket_expr())
     evolved = evolve_schema(parent.schema, changes, key)
     payload = [
         f.name for f in evolved.fields if f.name not in key and f.name not in ("seq", "deleted")
@@ -380,7 +443,7 @@ def merge_batch(
     # is NOT patch debt: row-level decisions still compare full-image seqs
     # and the read fold resolves the appended generations per column.
     patch_outstanding = int(parent.properties.get("patch_deltas", 0)) > 0
-    has_patches = bool(patch_count)
+    has_patches = bool(profile.patch_rows)
 
     def aligned(df: DataFrame, is_change: bool) -> DataFrame:
         cols = [F.col(c) for c in key]
@@ -410,7 +473,7 @@ def merge_batch(
         return df.select(*cols)
 
     stats.fold, stats.fold_reason = _derive_fold(
-        parent, changes, has_patches, patch_outstanding, null_key_count
+        parent, changes, profile, patch_outstanding
     )
 
     with contextlib.ExitStack() as stack:
@@ -583,13 +646,13 @@ def merge_batch(
             LAST_WRITE_PLAN = to_write._jdf.queryExecution().executedPlan().toString()
 
         tag = f"{stream_id}-e{epoch_id:08d}{tag_suffix}"
-        on_driver = payload_bytes is not None and payload_bytes <= _DRIVER_WRITE_MAX_BYTES
+        nbytes = profile.payload_bytes
+        on_driver = nbytes is not None and nbytes <= _DRIVER_WRITE_MAX_BYTES
         stats.write = "driver" if on_driver else "spark"
-        with _phase("merge_write"):
-            new_files = table.write_data_files(
-                to_write, tag, bucket_aligned=True, keep_bucket=True,
-                on_driver=on_driver,
-            )
+        new_files = table.write_data_files(
+            to_write, tag, bucket_aligned=True, keep_bucket=True,
+            on_driver=on_driver,
+        )
         # merges append deltas, which incremental compact() finds via this
         # flag
         for f in new_files:
@@ -612,8 +675,7 @@ def merge_batch(
     # above are exact (carries observed pre-filter).
     per_bucket = []
     if collect_per_bucket_stats:
-        with _phase("bucket_stats"):
-            by_bucket = _per_bucket_counts(table, new_files, changes.sparkSession)
+        by_bucket = _per_bucket_counts(table, new_files, changes.sparkSession)
         now = time.time()
         for k in sorted(touched | set(by_bucket)):
             ins, upd, dele, dedup = by_bucket.get(k, (0, 0, 0, 0))
@@ -623,7 +685,7 @@ def merge_batch(
                     "bucket": int(k),
                     "offset_lo": offset_lo,
                     "offset_hi": offset_hi,
-                    "rows_in": int(in_counts.get(k, 0)),
+                    "rows_in": int(profile.rows_per_bucket.get(k, 0)),
                     "rows_deduped": dedup,
                     "rows_inserted": ins,
                     "rows_updated": upd,

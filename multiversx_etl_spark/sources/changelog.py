@@ -936,12 +936,6 @@ def write_log_orc(log: DataFrame, path: str, files: int | None = None) -> None:
     out.write.mode("overwrite").orc(path)
 
 
-def read_log_orc(spark: SparkSession, path: str, schema=None) -> DataFrame:
-    from multiversx_etl_spark.schemas import CHANGE_EVENTS
-
-    return spark.read.schema(schema or CHANGE_EVENTS).orc(path)
-
-
 def write_log_csv(log: DataFrame, path: str, files: int | None = None) -> None:
     """CSV form of the log (interop with CSV-only producers). NULLs are
     written as the ``\\N`` sentinel so patch semantics survive the round
@@ -959,12 +953,6 @@ def write_log_csv(log: DataFrame, path: str, files: int | None = None) -> None:
         .option("header", False)
         .csv(path)
     )
-
-
-def read_log_csv(spark: SparkSession, path: str, schema=None) -> DataFrame:
-    from multiversx_etl_spark.schemas import CHANGE_EVENTS
-
-    return _csv_read_options(spark.read.schema(schema or CHANGE_EVENTS)).csv(path)
 
 
 def write_log(
@@ -986,6 +974,24 @@ def write_log(
         )
 
 
+def load_log(reader, path: str, log_format: str = "parquet"):
+    """The log at ``path`` through ``reader``: a ``DataFrameReader`` for a
+    batch read or a ``DataStreamReader`` for a stream, already carrying
+    the declared schema. The one per-format reader choice (see
+    ``LOG_FORMATS``)."""
+    if log_format == "parquet":
+        return reader.parquet(path)
+    if log_format == "ndjson":
+        return reader.json(path)
+    if log_format == "orc":
+        return reader.orc(path)
+    if log_format == "csv":
+        return _csv_read_options(reader).csv(path)
+    raise ValueError(
+        f"unknown log format {log_format!r} (expected one of {LOG_FORMATS})"
+    )
+
+
 def read_log(
     spark: SparkSession, path: str, log_format: str = "parquet", schema=None
 ) -> DataFrame:
@@ -993,15 +999,4 @@ def read_log(
     never inferred from data files, the same stance on every format."""
     from multiversx_etl_spark.schemas import CHANGE_EVENTS
 
-    declared = schema or CHANGE_EVENTS
-    if log_format == "parquet":
-        return spark.read.schema(declared).parquet(path)
-    if log_format == "ndjson":
-        return spark.read.schema(declared).json(path)
-    if log_format == "orc":
-        return read_log_orc(spark, path, declared)
-    if log_format == "csv":
-        return read_log_csv(spark, path, declared)
-    raise ValueError(
-        f"unknown log format {log_format!r} (expected one of {LOG_FORMATS})"
-    )
+    return load_log(spark.read.schema(schema or CHANGE_EVENTS), path, log_format)

@@ -38,11 +38,16 @@ from datetime import datetime, timezone
 from typing import Callable
 
 import pyspark.sql.functions as F
-import pyspark.sql.types as T
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from multiversx_etl_spark.lake.table import LakeTable
-from multiversx_etl_spark.operators.merge import MergeStats, _phase, merge_batch
+from multiversx_etl_spark.operators.merge import (
+    BatchProfile,
+    MergeStats,
+    batch_profiles,
+    merge_batch,
+    profile_batch,
+)
 from multiversx_etl_spark.operators.normalize import normalize_change_events
 from multiversx_etl_spark.plans.planner import plan_offset_ranges
 from multiversx_etl_spark.schemas import CHANGE_EVENTS, LINEAGE, REPOS
@@ -82,7 +87,10 @@ def ensure_table(
     bucket) writes 16, and write cost grows with file count. Measured on
     the perfbench ``tail`` workload (6 interleaved pairs, 4 vCPU), the
     spark layout lost every pair: median CPU per epoch 2.07 s → 2.54 s
-    (+23%). ``'spark'`` stays for the zero-exchange join fold.
+    (+23%). Re-measured once small stream epochs wrote their delta from
+    the driver (5 interleaved pairs, 4 vCPU): median ``cpu_s_per_op``
+    1.055 s spark vs 0.899 s xxhash (+17%), xxhash winning 5 of 5.
+    ``'spark'`` stays for the zero-exchange join fold.
 
     Concurrent-safe: two workers racing the FIRST creation both succeed —
     the loser of the v0 commit CAS (exists() probe raced create()) opens
@@ -140,31 +148,6 @@ def _write_lineage(
     os.replace(tmp, os.path.join(path, "part-0.parquet"))
 
 
-#: bytes per value of the fixed-width column types (``_row_bytes``)
-_FIXED_WIDTH = {
-    T.BooleanType: 1, T.ByteType: 1, T.ShortType: 2, T.IntegerType: 4,
-    T.LongType: 8, T.FloatType: 4, T.DoubleType: 8, T.DateType: 4,
-    T.TimestampType: 8, T.TimestampNTZType: 8, T.DecimalType: 16,
-}
-
-
-def _row_bytes(schema: T.StructType) -> Column | None:
-    """Payload bytes of one change row: the ``octet_length`` of each string
-    and binary value plus the width of each fixed-width column. None when
-    a column is an array, map, struct or any other type without a cheap
-    width: such a batch reports no total, and its MERGE writes through
-    Spark (operators/merge.py ``_DRIVER_WRITE_MAX_BYTES``)."""
-    fixed, var = 0, []
-    for f in schema.fields:
-        if isinstance(f.dataType, (T.StringType, T.BinaryType)):
-            var.append(F.coalesce(F.octet_length(F.col(f.name)), F.lit(0)))
-        elif type(f.dataType) in _FIXED_WIDTH:
-            fixed += _FIXED_WIDTH[type(f.dataType)]
-        else:
-            return None
-    return sum(var, F.lit(fixed))
-
-
 def read_lineage(table: LakeTable, stream_id: str | None = None) -> DataFrame:
     """The ledger, deduped by (stream_id, epoch_id, bucket) — duplicate rows
     from crash-replays collapse here (max committed_at wins). Streams are
@@ -192,12 +175,9 @@ def apply_epoch(
     offset_lo: int,
     offset_hi: int,
     normalize: bool = True,
-    in_counts: dict[int, int] | None = None,
-    patch_count: int | None = None,
     conflict_retries: int = 2,
     normalizer: Callable[[DataFrame], DataFrame] | None = None,
-    null_key_count: int | None = None,
-    payload_bytes: int | None = None,
+    profile: BatchProfile | None = None,
 ) -> MergeStats:
     """Normalize → dedup → MERGE → lineage → atomic marker+data commit.
 
@@ -213,22 +193,19 @@ def apply_epoch(
     Iceberg commit-retry loop; the per-stream epoch marker stays correct
     because a replayed epoch collapses to seq-tie carries.
 
-    ``payload_bytes`` (the batch's measured payload byte total) lets a
-    small batch write its delta from the driver (merge_batch)."""
+    ``profile`` is the batch's ``BatchProfile`` when the caller already
+    counted it; None lets merge_batch count (and measure) it."""
     if normalize:
         batch = (normalizer or normalize_change_events)(batch)
 
     def write_ledger(stats: MergeStats) -> None:
-        with _phase("lineage_write"):
-            _write_lineage(table, epoch_id, stats.per_bucket or [], stream_id)
+        _write_lineage(table, epoch_id, stats.per_bucket or [], stream_id)
 
     for attempt in range(conflict_retries + 1):
         try:
             return merge_batch(
                 table, batch, stream_id, epoch_id, offset_lo, offset_hi,
-                in_counts=in_counts, patch_count=patch_count,
-                null_key_count=null_key_count, payload_bytes=payload_bytes,
-                pre_commit=write_ledger,
+                profile=profile, pre_commit=write_ledger,
                 # each attempt writes its own tag dir: a retry must NEVER
                 # overwrite files a rival's committed manifest references
                 # (the rival may have committed this very (stream, epoch))
@@ -287,43 +264,23 @@ def replay(
         return committed_view.epoch_info(stream_id, epoch_id) is not None
 
     pending = [p for p in plans if not is_committed(p.epoch_id)]
-    # One pass over the UNCOMMITTED offset span counts every pending epoch's
-    # per-bucket rows_in (instead of one counting job per epoch). Skipped
-    # entirely on a fully-committed re-replay (zero Spark jobs), and when
-    # the (epochs x buckets) result would be driver-heavy — merge_batch then
-    # counts per epoch as before (bounded at num_buckets rows per collect).
+    # One pass over the UNCOMMITTED offset span profiles every pending
+    # epoch (instead of one counting job per epoch); it reads no payload
+    # column, so the profiles carry no byte total and the epochs write
+    # through Spark. Skipped entirely on a fully-committed re-replay (zero
+    # Spark jobs), and when the (epochs x buckets) result would be
+    # driver-heavy — merge_batch then profiles each epoch on its own
+    # (bounded at num_buckets rows per collect).
     m = table.snapshot()
-    counts: dict[int, dict[int, int]] = {}
-    patch_counts: dict[int, int] = {}
-    null_key_counts: dict[int, int] = {}
-    precounted = bool(pending) and len(pending) * m.num_buckets <= 500_000
-    if precounted:
-        with _phase("precount"):
-            lo = min(p.offset_lo for p in pending)
-            hi = min(max(p.offset_hi for p in pending), total_offsets)
-            aggs = [F.count("*").alias("n")]
-            if "op" in log.columns:  # partial-image rows (same pass)
-                aggs.append(F.count(F.when(F.col("op") == "patch", 1)).alias("p"))
-            # NULL-keyed rows per epoch (same pass): they keep an epoch off
-            # the join fold (merge.py _derive_fold)
-            nk = F.lit(False)
-            for k in m.key_columns:
-                nk = nk | F.col(k).isNull()
-            aggs.append(F.count(F.when(nk, 1)).alias("nk"))
-            rows = (
-                log.where((F.col("offset") >= lo) & (F.col("offset") < hi))
-                .groupBy(
-                    F.floor(F.col("offset") / interval_size).cast("int").alias("_epoch"),
-                    m.bucket_expr().alias("_bucket"),
-                )
-                .agg(*aggs)
-                .collect()
-            )
-            for r in rows:
-                counts.setdefault(r["_epoch"], {})[r["_bucket"]] = r["n"]
-                if "op" in log.columns:
-                    patch_counts[r["_epoch"]] = patch_counts.get(r["_epoch"], 0) + r["p"]
-                null_key_counts[r["_epoch"]] = null_key_counts.get(r["_epoch"], 0) + r["nk"]
+    profiles: dict[int, BatchProfile] | None = None
+    if pending and len(pending) * m.num_buckets <= 500_000:
+        lo = min(p.offset_lo for p in pending)
+        hi = min(max(p.offset_hi for p in pending), total_offsets)
+        profiles = batch_profiles(
+            read_offset_range(log, lo, hi), m,
+            group=F.floor(F.col("offset") / interval_size).cast("int"),
+            measure=False,
+        )
     summary = ReplaySummary()
     for plan in plans:
         if max_epochs is not None and summary.epochs_run >= max_epochs:
@@ -334,15 +291,12 @@ def replay(
         batch = read_offset_range(log, plan.offset_lo, plan.offset_hi)
         stats = apply_epoch(
             table, batch, stream_id, plan.epoch_id, plan.offset_lo, plan.offset_hi,
-            in_counts=counts.get(plan.epoch_id, {}) if precounted else None,
-            patch_count=patch_counts.get(plan.epoch_id, 0) if precounted else None,
             normalizer=normalizer,
-            null_key_count=null_key_counts.get(plan.epoch_id, 0) if precounted else None,
+            profile=None if profiles is None else profiles.get(plan.epoch_id, BatchProfile()),
         )
         summary.epochs_run += 1
         if compact_every and summary.epochs_run % compact_every == 0:
-            with _phase("compact"):
-                table.compact()
+            table.compact()
         summary.rows_in += stats.rows_in
         summary.rows_inserted += stats.rows_inserted
         summary.rows_updated += stats.rows_updated
@@ -403,29 +357,17 @@ def stream_ingest(
     ``on_epoch(epoch_id, stats)`` is called after each merged micro-batch
     (``stats.fold`` says which fold ran), like ``replay``'s."""
     from multiversx_etl_spark.sources.changelog import (
-        LOG_FORMATS,
-        _csv_read_options,
         fold_for_spec,
+        load_log,
         log_dir_fold,
     )
 
-    if log_format not in LOG_FORMATS:
-        raise ValueError(
-            f"unknown log format {log_format!r} (expected one of {LOG_FORMATS})"
-        )
-    spec, fold = log_dir_fold(log_dir, table.snapshot(), log_format)
     declared = log_schema if log_schema is not None else CHANGE_EVENTS
     reader = spark.readStream.schema(declared).option(
         "maxFilesPerTrigger", max_files_per_trigger
     )
-    if log_format == "parquet":
-        src = reader.parquet(log_dir)
-    elif log_format == "ndjson":
-        src = reader.json(log_dir)
-    elif log_format == "orc":
-        src = reader.orc(log_dir)
-    else:
-        src = _csv_read_options(reader).csv(log_dir)
+    src = load_log(reader, log_dir, log_format)
+    spec, fold = log_dir_fold(log_dir, table.snapshot(), log_format)
     if fold == "join":
         # the file lineage must be captured AT THE SCAN: foreachBatch hands
         # over a LogicalRDD whose inputFiles() is empty
@@ -466,45 +408,21 @@ def stream_ingest(
                 )
                 batch = staged.__enter__()
         try:
-            # one aggregation supplies offset bounds, per-bucket rows_in and
-            # the payload byte total that picks the merge's write path —
-            # the (possibly re-staged) batch is scanned once here, once by
-            # the merge itself
-            aggs = [
-                F.count("*").alias("n"),
-                F.min("offset").alias("lo"),
-                F.max("offset").alias("hi"),
-            ]
-            if "op" in batch.columns:  # partial-image rows (same pass)
-                aggs.append(F.count(F.when(F.col("op") == "patch", 1)).alias("p"))
-            row_bytes = _row_bytes(batch.schema)
-            if row_bytes is not None:
-                aggs.append(F.sum(row_bytes).alias("b"))
-            rows = (
-                batch.groupBy(m.bucket_expr().alias("_bucket"))
-                .agg(*aggs)
-                .collect()
-            )
-            in_counts = {r["_bucket"]: r["n"] for r in rows}
-            if staged is not None and sum(in_counts.values()) != delivered:
+            # one aggregation profiles the batch: offset bounds, per-bucket
+            # rows_in, patch and NULL-key rows and the payload byte total
+            # that picks the merge's write path — the (possibly re-staged)
+            # batch is scanned once here, once by the merge itself
+            profile = profile_batch(batch, m)
+            if staged is not None and profile.rows != delivered:
                 # the staged files do not reproduce the delivered batch —
                 # a violated file-source assumption is a refusal, not a
                 # quiet downgrade (the ledger would book the wrong rows)
                 raise RuntimeError(
                     "staged bucketed batch row count != delivered batch"
                 )
-            lo = min((r["lo"] for r in rows), default=0)
-            hi = max((r["hi"] + 1 for r in rows), default=0)
-            patch_count = (
-                sum(r["p"] for r in rows) if "op" in batch.columns else 0
-            )
-            payload_bytes = (
-                sum(r["b"] for r in rows) if row_bytes is not None else None
-            )
             stats = apply_epoch(
-                table, batch, stream_id, epoch_id, lo, hi,
-                in_counts=in_counts, patch_count=patch_count,
-                normalizer=normalizer, payload_bytes=payload_bytes,
+                table, batch, stream_id, epoch_id, profile.offset_lo,
+                profile.offset_hi, normalizer=normalizer, profile=profile,
             )
         finally:
             if staged is not None:

@@ -1,7 +1,9 @@
 """The MERGE's two delta-write paths: a small measured batch is collected as
 one Arrow table and written by the driver (one pyarrow file per pid); every
 other batch goes through Spark's file writer. Both must leave the same
-table: state, merge stats, per-bucket ledger and manifest entries."""
+table: state, merge stats, per-bucket ledger and manifest entries. The
+batch profile that picks the path is one aggregate, whether a batch is
+counted on its own or replay counts its whole span at once."""
 
 from __future__ import annotations
 
@@ -9,14 +11,17 @@ import datetime as dt
 import os
 
 import pyarrow.parquet as pq
+import pyspark.sql.functions as F
 import pyspark.sql.types as T
 import pytest
 
 from multiversx_etl_spark.lake.table import bucket_to_pid
 from multiversx_etl_spark.operators import merge as merge_mod
+from multiversx_etl_spark.operators.merge import _row_bytes, merge_batch, profile_batch
 from multiversx_etl_spark.schemas import CHANGE_EVENTS
+from multiversx_etl_spark.sources.changelog import read_offset_range
+from multiversx_etl_spark.streaming import ingest as ingest_mod
 from multiversx_etl_spark.streaming.ingest import (
-    _row_bytes,
     apply_epoch,
     ensure_table,
     replay,
@@ -73,8 +78,7 @@ def _run(spark, root, layout, on_driver, monkeypatch):
     for epoch, rows in enumerate(_epochs()):
         before = table.snapshot()
         batch = spark.createDataFrame(rows, CHANGE_EVENTS)
-        stats = apply_epoch(table, batch, "s", epoch, rows[0][0], rows[-1][0] + 1,
-                            payload_bytes=1)
+        stats = apply_epoch(table, batch, "s", epoch, rows[0][0], rows[-1][0] + 1)
         assert stats.write == ("driver" if on_driver else "spark")
         stats.write = None
         for b in stats.per_bucket:
@@ -116,10 +120,8 @@ def test_crash_after_first_driver_file_reruns_exactly(spark, tmp_path, monkeypat
     ref = ensure_table(spark, str(tmp_path / "ref"), num_buckets=8)
     table = ensure_table(spark, str(tmp_path / "t"), num_buckets=8)
     for t in (ref, table):
-        apply_epoch(t, spark.createDataFrame(e0, CHANGE_EVENTS), "s", 0, 0, 40,
-                    payload_bytes=1)
-    apply_epoch(ref, spark.createDataFrame(e1, CHANGE_EVENTS), "s", 1, 40, 64,
-                payload_bytes=1)
+        apply_epoch(t, spark.createDataFrame(e0, CHANGE_EVENTS), "s", 0, 0, 40)
+    apply_epoch(ref, spark.createDataFrame(e1, CHANGE_EVENTS), "s", 1, 40, 64)
 
     write = pq.write_table
     calls = []
@@ -132,14 +134,12 @@ def test_crash_after_first_driver_file_reruns_exactly(spark, tmp_path, monkeypat
     monkeypatch.setattr(pq, "write_table", crash_after_first)
     v = table.current_version()
     with pytest.raises(RuntimeError, match="crash after the first"):
-        apply_epoch(table, spark.createDataFrame(e1, CHANGE_EVENTS), "s", 1, 40, 64,
-                    payload_bytes=1)
+        apply_epoch(table, spark.createDataFrame(e1, CHANGE_EVENTS), "s", 1, 40, 64)
     monkeypatch.undo()
     assert len(calls) == 1 and os.path.exists(calls[0])
     assert table.current_version() == v and not table.is_epoch_committed("s", 1)
 
-    stats = apply_epoch(table, spark.createDataFrame(e1, CHANGE_EVENTS), "s", 1, 40, 64,
-                        payload_bytes=1)
+    stats = apply_epoch(table, spark.createDataFrame(e1, CHANGE_EVENTS), "s", 1, 40, 64)
     assert stats.write == "driver" and not os.path.exists(calls[0])
     assert _rows(table.read()) == _rows(ref.read())
     tag_dir = os.path.dirname(calls[0])
@@ -147,16 +147,30 @@ def test_crash_after_first_driver_file_reruns_exactly(spark, tmp_path, monkeypat
     assert {os.path.join(tag_dir, n) for n in os.listdir(tag_dir)} <= live
 
 
-def test_write_path_follows_the_measured_bound(spark, tmp_path):
+def _total(rows):
+    """Exact payload bytes of CHANGE_EVENTS rows: string octets plus the
+    fixed widths of offset, seq and event_ts."""
+    return sum(8 * 3 + sum(len(v.encode()) for v in r[2:8] if v) for r in rows)
+
+
+def test_write_path_follows_the_measured_bound(spark, tmp_path, monkeypatch):
+    """A direct call is measured: a bound equal to the batch's exact total
+    writes from the driver, one byte less through Spark, and a nested
+    payload column (no cheap width) through Spark whatever the bound."""
     table = ensure_table(spark, str(tmp_path / "t"), num_buckets=4)
     rows = _epochs()[0]
-    bound = merge_mod._DRIVER_WRITE_MAX_BYTES
-    for epoch, (nbytes, want) in enumerate(
-        [(bound, "driver"), (bound + 1, "spark"), (None, "spark")]
-    ):
+    exact = _total(rows)
+    for epoch, (bound, want) in enumerate([(exact, "driver"), (exact - 1, "spark")]):
+        monkeypatch.setattr(merge_mod, "_DRIVER_WRITE_MAX_BYTES", bound)
         batch = spark.createDataFrame(rows, CHANGE_EVENTS)
-        stats = apply_epoch(table, batch, "s", epoch, 0, 40, payload_bytes=nbytes)
+        stats = merge_batch(table, batch, "s", epoch, 0, 40)
         assert stats.write == want
+    monkeypatch.setattr(merge_mod, "_DRIVER_WRITE_MAX_BYTES", 1 << 40)
+    nested = spark.createDataFrame(rows, CHANGE_EVENTS).withColumn(
+        "tags", F.array(F.col("lang"))
+    )
+    stats = merge_batch(table, nested, "s", 2, 0, 40)
+    assert stats.write == "spark" and stats.rows_in == len(rows)
 
 
 def test_row_bytes_refuses_nested_payloads():
@@ -180,12 +194,7 @@ def test_stream_handler_measures_batches_and_replay_stays_on_spark(
         spark.createDataFrame(rows, CHANGE_EVENTS).coalesce(1).write.parquet(out)
         (part,) = [n for n in os.listdir(out) if n.endswith(".parquet")]
         os.rename(os.path.join(out, part), os.path.join(log, f"f{i}.parquet"))
-    fixed = 8 * 3  # offset, seq, event_ts
-
-    def total(rows):
-        return sum(fixed + sum(len(v.encode()) for v in r[2:8] if v) for r in rows)
-
-    small, large = sorted([(total(e0), len(e0)), (total(e1), len(e1))])
+    small, large = sorted([(_total(e0), len(e0)), (_total(e1), len(e1))])
     assert small[0] < large[0]
     monkeypatch.setattr(merge_mod, "_DRIVER_WRITE_MAX_BYTES", small[0])
     table = ensure_table(spark, str(tmp_path / "t"), num_buckets=8)
@@ -200,3 +209,41 @@ def test_stream_handler_measures_batches_and_replay_stays_on_spark(
     state = _rows(table.read())
     assert state == _rows(rtable.read())
     assert state
+
+
+@pytest.mark.parametrize("layout", ["xxhash", "spark"])
+def test_replay_span_profile_equals_each_epochs_own(spark, tmp_path, monkeypatch, layout):
+    """Replay profiles every pending epoch in one pass over its span; each
+    epoch's profile must equal the one its batch gets counted on its own:
+    rows per bucket, patch rows, NULL-key rows and offsets (replay reads no
+    content, so it carries no byte total)."""
+    nullable = T.StructType([T.StructField(f.name, f.dataType, True) for f in CHANGE_EVENTS])
+    rows = [r for ep in _epochs() for r in ep]
+    off = len(rows)
+    rows += [
+        (off, 60, "insert", None, "n0", "c", "py", "x", TS),
+        (off + 1, 61, "patch", "r3", None, None, "go", None, None),
+        (off + 2, 62, "update", None, None, "c", "py", "y", TS),
+    ]
+    log = spark.createDataFrame(rows, nullable)
+    table = ensure_table(spark, str(tmp_path / "t"), num_buckets=8, layout=layout)
+    seen = []
+    real = ingest_mod.apply_epoch
+
+    def recording(tbl, batch, stream_id, epoch_id, lo, hi, **kw):
+        seen.append((lo, hi, kw["profile"]))
+        return real(tbl, batch, stream_id, epoch_id, lo, hi, **kw)
+
+    monkeypatch.setattr(ingest_mod, "apply_epoch", recording)
+    replay(log, table, interval_size=30)
+    assert len(seen) == 3
+    m = table.snapshot()
+    for lo, hi, span in seen:
+        own = profile_batch(read_offset_range(log, lo, hi), m)
+        assert span.payload_bytes is None and own.payload_bytes is not None
+        assert (span.rows_per_bucket, span.patch_rows, span.null_key_rows,
+                span.offset_lo, span.offset_hi) == (
+                own.rows_per_bucket, own.patch_rows, own.null_key_rows,
+                own.offset_lo, own.offset_hi)
+    assert sum(p.null_key_rows for _, _, p in seen) == 3
+    assert sum(p.patch_rows for _, _, p in seen) == sum(r[2] == "patch" for r in rows)

@@ -119,6 +119,17 @@ def test_patch_replay_epochs_at_offset_5e9(spark, tmp_path):
 
     con = duckdb.connect()
     files = ", ".join(f"'{p}/*.parquet'" for p in slice_paths)
+    # the per-column fold below takes one row per (key, seq): two events
+    # with the same key and seq but different payloads would leave the
+    # winner to arg_max's tie-break, so the oracle refuses them outright
+    (ties,) = con.execute(
+        f"""
+        SELECT count(*) FROM (
+          SELECT repo, path, seq FROM read_parquet([{files}]) GROUP BY 1, 2, 3
+          HAVING count(DISTINCT {{'op': op, 'lang': lang, 'content': content}}) > 1)
+        """
+    ).fetchone()
+    assert ties == 0
     want = {
         (r[0], r[1]): r[2:]
         for r in con.execute(
@@ -126,16 +137,15 @@ def test_patch_replay_epochs_at_offset_5e9(spark, tmp_path):
             WITH ev AS (SELECT * FROM read_parquet([{files}])),
             agg AS (
               SELECT repo, path,
-                max(CASE WHEN op <> 'patch'
-                    THEN {{'seq': seq, 'op': op}} END) AS b,
-                max(CASE WHEN op <> 'patch' OR lang IS NOT NULL
-                    THEN {{'seq': seq, 'v': lang}} END) AS c_lang,
-                max(CASE WHEN op <> 'patch' OR content IS NOT NULL
-                    THEN {{'seq': seq, 'v': content}} END) AS c_content
+                arg_max(op, seq) FILTER (WHERE op <> 'patch') AS op,
+                arg_max_null(lang, seq)
+                  FILTER (WHERE op <> 'patch' OR lang IS NOT NULL) AS lang,
+                arg_max_null(content, seq)
+                  FILTER (WHERE op <> 'patch' OR content IS NOT NULL) AS content
               FROM ev GROUP BY 1, 2
             )
-            SELECT repo, path, c_lang.v, sha256(coalesce(c_content.v, ''))
-            FROM agg WHERE b IS NOT NULL AND b.op <> 'delete'
+            SELECT repo, path, lang, sha256(coalesce(content, ''))
+            FROM agg WHERE op IS NOT NULL AND op <> 'delete'
             """
         ).fetchall()
     }
