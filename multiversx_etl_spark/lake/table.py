@@ -103,9 +103,19 @@ def bucket_expr(
       This is the manifest-reader emulation of Iceberg's storage-partitioned
       join reporting (SPARK-37375).
     """
-    if layout == "spark":
-        return F.pmod(F.hash(*key_columns), F.lit(num_buckets)).cast("int")
-    return F.pmod(F.xxhash64(*key_columns), F.lit(num_buckets)).cast("int")
+    return F.expr(bucket_sql(key_columns, num_buckets, layout))
+
+
+def quote_ident(name: str) -> str:
+    """``name`` as a backtick-quoted SQL identifier (a backtick doubled)."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def bucket_sql(key_columns: list[str], num_buckets: int, layout: str = "xxhash") -> str:
+    """``bucket_expr`` as SQL text (for steps built as one SQL expression list)."""
+    fn = "hash" if layout == "spark" else "xxhash64"
+    keys = ", ".join(quote_ident(k) for k in key_columns)
+    return f"CAST(pmod({fn}({keys}), {int(num_buckets)}) AS INT)"
 
 
 def per_column_writer_seq(p: str, *, is_patch: Column, has_colseq: bool) -> Column:
@@ -756,7 +766,9 @@ class LakeTable:
             # bucket->pid is Murmur3 mod B (not injective): the pid file
             # groups may contain sibling buckets — post-filter for an exact
             # bucket-scoped result.
-            df = df.where(m.bucket_expr().isin(*[int(b) for b in buckets]))
+            ids = ", ".join(str(int(b)) for b in buckets)
+            bucket = bucket_sql(m.key_columns, m.num_buckets, m.layout)
+            df = df.where(f"{bucket} IN ({ids})" if ids else "false")
         mor_outstanding = int(m.properties.get("mor_appends", 0)) > 0
         if patch_outstanding or (colseq_out and mor_outstanding):
             # Per-COLUMN fold (partial-image patch generations outstanding,

@@ -52,6 +52,10 @@ Physical plan:
    one span precount reads no content. Files, manifest entries and the
    commit are the same either way.
 
+Driver cost: each per-epoch step is built as SQL text (one ``selectExpr``
+or ``F.expr``, one JVM call) — a Column tree costs a py4j round trip per
+node: ~2,600 round trips per tail epoch's plan build before, under 200 now.
+
 Idempotence: re-applying the same batch yields seq ties, resolved as 'carry'
 (no-op) — a replayed MERGE changes nothing (the epoch marker normally
 short-circuits it earlier; this is defense in depth).
@@ -70,7 +74,8 @@ import pyspark.sql.types as T
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql.types import StructType
 
-from multiversx_etl_spark.lake.table import LakeTable, repartition_for_write
+from multiversx_etl_spark.lake.table import LakeTable, bucket_sql, repartition_for_write
+from multiversx_etl_spark.lake.table import quote_ident as q
 from multiversx_etl_spark.sources.changelog import fold_for_spec, scan_bucket_spec
 
 #: written-row ceiling for deriving per-bucket ledger stats on the driver
@@ -89,6 +94,16 @@ _DRIVER_STATS_MAX_ROWS = 4_000_000
 #: 1.05, 600k (138 MB) 1.12. 32 MiB sits below the crossover and far
 #: below spark.driver.maxResultSize (1 GiB by default).
 _DRIVER_WRITE_MAX_BYTES = 32 << 20
+
+
+#: merge stats over ``_action``/``_cn`` rows (``dedup``: change-side distinct
+#: keys), counted by the write's Observation and per bucket after the write
+_COUNTS = [
+    "sum(CASE WHEN _action = 'insert' THEN 1 ELSE 0 END) AS ins",
+    "sum(CASE WHEN _action = 'update' THEN 1 ELSE 0 END) AS upd",
+    "sum(CASE WHEN _action = 'delete' THEN 1 ELSE 0 END) AS del",
+    "sum(CASE WHEN _cn >= 1 THEN 1 ELSE 0 END) AS dedup",
+]
 
 
 def _per_bucket_counts(
@@ -115,36 +130,15 @@ def _per_bucket_counts(
         )
         bucket = t["_bucket"].combine_chunks().to_numpy(zero_copy_only=False)
         nb = int(bucket.max()) + 1 if len(bucket) else 0
-        counts = {}
-        for name, mask in (
-            ("ins", pc.equal(t["_action"], "insert")),
-            ("upd", pc.equal(t["_action"], "update")),
-            ("del", pc.equal(t["_action"], "delete")),
-            ("dedup", pc.greater_equal(t["_cn"], 1)),
-        ):
-            m = mask.combine_chunks().to_numpy(zero_copy_only=False)
-            counts[name] = np.bincount(bucket[m], minlength=nb)
-        return {
-            int(b): (
-                int(counts["ins"][b]),
-                int(counts["upd"][b]),
-                int(counts["del"][b]),
-                int(counts["dedup"][b]),
-            )
-            for b in np.nonzero(
-                counts["ins"] + counts["upd"] + counts["del"] + counts["dedup"]
-            )[0]
-        }
+        masks = [pc.equal(t["_action"], a) for a in ("insert", "update", "delete")]
+        masks.append(pc.greater_equal(t["_cn"], 1))
+        counts = [
+            np.bincount(bucket[m.combine_chunks().to_numpy(zero_copy_only=False)], minlength=nb)
+            for m in masks
+        ]
+        return {int(b): tuple(int(c[b]) for c in counts) for b in np.nonzero(sum(counts))[0]}
     rows = (
-        spark.read.parquet(*paths)
-        .groupBy("_bucket")
-        .agg(
-            F.sum(F.when(F.col("_action") == "insert", 1).otherwise(0)).alias("ins"),
-            F.sum(F.when(F.col("_action") == "update", 1).otherwise(0)).alias("upd"),
-            F.sum(F.when(F.col("_action") == "delete", 1).otherwise(0)).alias("del"),
-            F.sum(F.when(F.col("_cn") >= 1, 1).otherwise(0)).alias("dedup"),
-        )
-        .collect()
+        spark.read.parquet(*paths).groupBy("_bucket").agg(*map(F.expr, _COUNTS)).collect()
     )
     return {
         int(r["_bucket"]): (int(r["ins"]), int(r["upd"]), int(r["del"]), int(r["dedup"]))
@@ -217,21 +211,33 @@ _FIXED_WIDTH = {
 }
 
 
-def _row_bytes(schema: StructType) -> Column | None:
-    """Payload bytes of one change row: the ``octet_length`` of each string
-    and binary value plus the width of each fixed-width column. None when
-    a column is an array, map, struct or any other type without a cheap
-    width: such a batch reports no total, and its MERGE writes through
-    Spark (``_DRIVER_WRITE_MAX_BYTES``)."""
+def _row_bytes(schema: StructType) -> str | None:
+    """Payload bytes of one change row, as SQL text: the ``octet_length``
+    of each string and binary value plus the width of each fixed-width
+    column. None when a column is an array, map, struct or any other type
+    without a cheap width: such a batch reports no total, and its MERGE
+    writes through Spark (``_DRIVER_WRITE_MAX_BYTES``)."""
     fixed, var = 0, []
     for f in schema.fields:
         if isinstance(f.dataType, (T.StringType, T.BinaryType)):
-            var.append(F.coalesce(F.octet_length(F.col(f.name)), F.lit(0)))
+            var.append(f"coalesce(octet_length({q(f.name)}), 0)")
         elif type(f.dataType) in _FIXED_WIDTH:
             fixed += _FIXED_WIDTH[type(f.dataType)]
         else:
             return None
-    return sum(var, F.lit(fixed))
+    return " + ".join([str(fixed), *var])
+
+
+def _sql_type(dt) -> str:
+    """``dt`` as SQL type text for a ``CAST`` (nested field names quoted)."""
+    if isinstance(dt, StructType):
+        fields = ", ".join(f"{q(f.name)}: {_sql_type(f.dataType)}" for f in dt.fields)
+        return f"struct<{fields}>"
+    if isinstance(dt, T.ArrayType):
+        return f"array<{_sql_type(dt.elementType)}>"
+    if isinstance(dt, T.MapType):
+        return f"map<{_sql_type(dt.keyType)}, {_sql_type(dt.valueType)}>"
+    return dt.simpleString()
 
 
 def batch_profiles(
@@ -243,22 +249,21 @@ def batch_profiles(
     offset's epoch). Returns ``{group value: profile}`` (``{None: profile}``
     ungrouped); a group without rows has no entry. ``measure=False`` leaves
     ``payload_bytes`` None and the aggregate reads no payload column."""
-    null_key = F.lit(False)
-    for k in manifest.key_columns:
-        null_key = null_key | F.col(k).isNull()
-    aggs = [F.count("*").alias("n"), F.count(F.when(null_key, 1)).alias("nk")]
-    if "op" in df.columns:
-        aggs.append(F.count(F.when(F.col("op") == "patch", 1)).alias("p"))
-    if "offset" in df.columns:
-        aggs += [F.min("offset").alias("lo"), F.max("offset").alias("hi")]
-    row_bytes = _row_bytes(df.schema) if measure else None
+    schema = df.schema
+    null_key = " OR ".join(f"{q(k)} IS NULL" for k in manifest.key_columns)
+    aggs = ["count(*) AS n", f"count(CASE WHEN {null_key or 'false'} THEN 1 END) AS nk"]
+    if "op" in schema.fieldNames():
+        aggs.append("count(CASE WHEN op = 'patch' THEN 1 END) AS p")
+    if "offset" in schema.fieldNames():
+        aggs += ["min(`offset`) AS lo", "max(`offset`) AS hi"]
+    row_bytes = _row_bytes(schema) if measure else None
     if row_bytes is not None:
-        aggs.append(F.sum(row_bytes).alias("b"))
+        aggs.append(f"sum({row_bytes}) AS b")
     keys = [manifest.bucket_expr().alias("_bucket")]
     if group is not None:
         keys.append(group.alias("_group"))
     groups: dict = {}
-    for r in df.groupBy(*keys).agg(*aggs).collect():
+    for r in df.groupBy(*keys).agg(*map(F.expr, aggs)).collect():
         d = r.asDict()
         groups.setdefault(d.get("_group"), []).append(d)
     out = {}
@@ -299,20 +304,20 @@ def _fully_nullable(dt):
     happens to prove non-null (e.g. coalesce-scrubbed array elements) must
     not bake containsNull=false into the table schema — later batches with
     nullable elements could never cast to it."""
-    from pyspark.sql.types import ArrayType, MapType, StructField
-
     if isinstance(dt, StructType):
         return StructType(
-            [StructField(f.name, _fully_nullable(f.dataType), True) for f in dt.fields]
+            [T.StructField(f.name, _fully_nullable(f.dataType), True) for f in dt.fields]
         )
-    if isinstance(dt, ArrayType):
-        return ArrayType(_fully_nullable(dt.elementType), True)
-    if isinstance(dt, MapType):
-        return MapType(_fully_nullable(dt.keyType), _fully_nullable(dt.valueType), True)
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_fully_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_fully_nullable(dt.keyType), _fully_nullable(dt.valueType), True)
     return dt
 
 
-def evolve_schema(target_schema: StructType, changes: DataFrame, key_columns: list[str]) -> StructType:
+def evolve_schema(
+    target_schema: StructType, changes_schema: StructType, key_columns: list[str]
+) -> StructType:
     """Union of the target schema and the change-set's payload columns —
     new columns append (old files read them as NULL), dropped columns stay
     (new rows carry NULL). The reference's analog is out-of-band ``bq
@@ -320,7 +325,7 @@ def evolve_schema(target_schema: StructType, changes: DataFrame, key_columns: li
     the same atomic commit."""
     existing = {f.name for f in target_schema.fields}
     out = StructType(list(target_schema.fields))
-    for f in changes.schema.fields:
+    for f in changes_schema.fields:
         if f.name in existing or f.name in _LOG_ONLY or f.name.startswith("_"):
             continue  # engine-internal (_bucket etc.) and log bookkeeping stay out
         out.add(f.name, _fully_nullable(f.dataType), True)
@@ -424,11 +429,15 @@ def merge_batch(
         return stats
 
     # -- 2. schema evolution + align both sides to the evolved payload.
-    changes = changes.withColumn("_bucket", parent.bucket_expr())
-    evolved = evolve_schema(parent.schema, changes, key)
+    #    Every step below is built as SQL text: one selectExpr/F.expr per
+    #    step is one JVM call, where a Column tree costs one per node.
+    change_schema = changes.schema
+    evolved = evolve_schema(parent.schema, change_schema, key)
     payload = [
         f.name for f in evolved.fields if f.name not in key and f.name not in ("seq", "deleted")
     ]
+    bucket = bucket_sql(key, parent.num_buckets, parent.layout)
+    qkey = [q(k) for k in key]
 
     # Partial-image events (op='patch', Debezium-style: NULL payload =
     # keep the stored value) are appended as their own generations —
@@ -446,31 +455,23 @@ def merge_batch(
     has_patches = bool(profile.patch_rows)
 
     def aligned(df: DataFrame, is_change: bool) -> DataFrame:
-        cols = [F.col(c) for c in key]
-        cols.append(F.col("seq").cast("long").alias("seq"))
-        if is_change:
-            cols.append((F.col("op") == "delete").alias("deleted"))
-        else:
-            cols.append(F.col("deleted"))
+        # the target side reads only (key, seq, deleted[, _action]): NULL payload
+        have = change_schema.fieldNames() if is_change else ()
+        cols = [*qkey, "CAST(seq AS BIGINT) AS seq"]
+        cols.append("op = 'delete' AS deleted" if is_change else "deleted")
         for p in payload:
-            typ = evolved[p].dataType
-            if p in df.columns:
-                cols.append(F.col(p).cast(typ).alias(p))
-            else:
-                cols.append(F.lit(None).cast(typ).alias(p))
+            src = q(p) if p in have else "NULL"
+            cols.append(f"CAST({src} AS {_sql_type(evolved[p].dataType)}) AS {q(p)}")
         # patches (target generations and change-side events alike) must
         # not win the full-image fold: they are partial
         if is_change and has_patches:
-            cols.append((F.col("op") == "patch").alias("_is_patch"))
-        elif not is_change and "_action" in df.columns:
-            cols.append(
-                F.coalesce(F.col("_action") == "patch", F.lit(False)).alias("_is_patch")
-            )
+            cols.append("op = 'patch' AS _is_patch")
+        elif not is_change and patch_outstanding:
+            cols.append("coalesce(_action = 'patch', false) AS _is_patch")
         else:
-            cols.append(F.lit(False).alias("_is_patch"))
-        cols.append(F.lit(is_change).alias("_is_change"))
-        cols.append(F.col("_bucket"))
-        return df.select(*cols)
+            cols.append("false AS _is_patch")
+        cols += [f"{str(is_change).lower()} AS _is_change", f"{bucket} AS _bucket"]
+        return df.selectExpr(*cols)
 
     stats.fold, stats.fold_reason = _derive_fold(
         parent, changes, profile, patch_outstanding
@@ -488,19 +489,16 @@ def merge_batch(
             #    (partition index == bucket == pid). Only change-touched
             #    keys can produce output (carries are never written), hence
             #    LEFT outer with the deduped change side driving.
-            cha = aligned(changes, True)
-            ch_w = cha.groupBy(*key).agg(
-                F.max(F.struct("seq", "deleted", *payload)).alias("_w"),
-                F.count("*").alias("_cn"),
+            qpay = ", ".join(q(p) for p in ["seq", "deleted", *payload])
+            ch_w = aligned(changes, True).groupBy(*key).agg(
+                F.expr(f"max(struct({qpay})) AS _w"), F.expr("count(*) AS _cn")
             )
             tgt = stack.enter_context(
                 table.staged_bucketed_target(parent, touched, [*key, "seq", "deleted"])
             )
-            tg_w = tgt.groupBy(*key).agg(F.max(F.struct("seq", "deleted")).alias("_tw"))
-            merged = ch_w.join(tg_w, on=list(key), how="left").select(
-                *key, "_w", "_tw", "_cn"
-            ).withColumn("_bucket", parent.bucket_expr())
-            won_change = F.col("_tw").isNull() | (F.col("_w.seq") > F.col("_tw.seq"))
+            tg_w = tgt.groupBy(*key).agg(F.expr("max(struct(seq, deleted)) AS _tw"))
+            merged = ch_w.join(tg_w, on=list(key), how="left")
+            won_change = "_tw IS NULL OR _w.seq > _tw.seq"
         else:
             # Only the target's narrow (key, seq, deleted) projection is
             # consulted — target content never moves. raw=True returns
@@ -508,8 +506,6 @@ def merge_batch(
             # patch generations outstanding the projection also carries
             # _action, so the fold can exclude them (still narrow).
             target = table.read(buckets=touched, raw=True, with_action=patch_outstanding)
-            narrow = [*key, "seq", "deleted"] + (["_action"] if patch_outstanding else [])
-            target = target.select(*narrow).withColumn("_bucket", parent.bucket_expr())
             both = aligned(target, False).unionByName(aligned(changes, True))
 
             # -- 3. ONE shuffle, ONE aggregate (module docstring step
@@ -524,76 +520,65 @@ def merge_batch(
             #    key's ``_pl`` list: one partial generation per
             #    distinct (key, seq), so each keeps its own per-column
             #    writer seq for the read fold (lake/table.py).
-            wstruct = F.struct("seq", "_is_change", "deleted", *payload, "_bucket")
-            is_change, is_patch = F.col("_is_change"), F.col("_is_patch")
+            wpay = ", ".join(q(p) for p in payload)
             aggs = [
-                F.max(F.when(~is_patch, wstruct)).alias("_w"),
-                F.max(
-                    F.when(~is_change & ~is_patch, F.struct("seq", "deleted"))
-                ).alias("_tw"),
-                F.count(F.when(is_change & ~is_patch, 1)).alias("_cn"),
+                "max(CASE WHEN NOT _is_patch THEN struct(seq, _is_change, deleted, "
+                f"{wpay + ', ' if payload else ''}_bucket) END) AS _w",
+                "max(CASE WHEN NOT _is_change AND NOT _is_patch"
+                " THEN struct(seq, deleted) END) AS _tw",
+                "count(CASE WHEN _is_change AND NOT _is_patch THEN 1 END) AS _cn",
             ]
             # a key whose only generations are (orphan) patch partials
             # has no full-image winner: nothing to classify — the read
             # fold likewise hides such keys — but its new patches are
             # still written
-            keep = F.col("_w").isNotNull()
+            keep = "_w IS NOT NULL"
             if has_patches:
                 # an all-NULL patch is a no-op: drop it (and with NO
                 # payload columns at all, every patch is one)
-                some_payload = F.lit(False)
-                for p in payload:
-                    some_payload = some_payload | F.col(p).isNotNull()
+                some_payload = " OR ".join(f"{q(p)} IS NOT NULL" for p in payload)
                 aggs.append(
-                    F.array_sort(
-                        F.collect_list(
-                            F.when(
-                                is_change & is_patch & some_payload,
-                                F.struct("seq", *payload),
-                            )
-                        )
-                    ).alias("_pl")
+                    "array_sort(collect_list(CASE WHEN _is_change AND _is_patch"
+                    f" AND ({some_payload or 'false'})"
+                    f" THEN struct(seq{', ' + wpay if payload else ''}) END)) AS _pl"
                 )
-                keep = keep | (F.size("_pl") > 0)
+                keep += " OR size(_pl) > 0"
             merged = (
                 repartition_for_write(both, parent.num_buckets, key, parent.layout)
                 .groupBy(*key, "_bucket")
-                .agg(*aggs)
+                .agg(*map(F.expr, aggs))
                 .where(keep)
             )
-            if has_patches:
-                # exact redeliveries collapse per (key, seq): the list is
-                # sorted, so the LAST entry of each seq run is its max
-                # struct
-                pl = F.col("_pl")
-
-                def last_of_seq(e, i):
-                    nxt = F.when(i + 1 < F.size(pl), F.element_at(pl, i + 2)["seq"])
-                    return F.coalesce(e["seq"] != nxt, F.lit(True))
-
-                merged = merged.withColumn("_pl", F.filter(pl, last_of_seq))
             # NULL winner = patch-only key: classified 'carry' (not written)
-            won_change = F.coalesce(F.col("_w._is_change"), F.lit(False))
-        was_live = F.col("_tw").isNotNull() & ~F.col("_tw.deleted")
+            won_change = "coalesce(_w._is_change, false)"
+        was_live = "_tw IS NOT NULL AND NOT _tw.deleted"
         action = (
-            F.when(~won_change, F.lit("carry"))
+            f"CASE WHEN NOT ({won_change}) THEN 'carry'"
             # seq tie = the same event re-applied (at-least-once replay): no-op
-            .when(F.col("_tw").isNotNull() & (F.col("_w.seq") == F.col("_tw.seq")), F.lit("carry"))
-            .when(F.col("_w.deleted") & was_live, F.lit("delete"))
-            .when(F.col("_w.deleted"), F.lit("tombstone"))  # delete of an absent/dead key
-            .when(was_live, F.lit("update"))
-            .otherwise(F.lit("insert"))  # new key, or resurrection of a tombstone
+            " WHEN _tw IS NOT NULL AND _w.seq = _tw.seq THEN 'carry'"
+            f" WHEN _w.deleted AND {was_live} THEN 'delete'"
+            " WHEN _w.deleted THEN 'tombstone'"  # delete of an absent/dead key
+            f" WHEN {was_live} THEN 'update'"
+            " ELSE 'insert' END"  # new key, or resurrection of a tombstone
         )
-        merged = merged.select(
-            *key,
-            F.col("_w.seq").alias("seq"),
-            F.col("_w.deleted").alias("deleted"),
-            *[F.col(f"_w.{p}").alias(p) for p in payload],
-            F.col("_bucket"),
-            action.alias("_action"),
-            F.col("_cn"),
-            *([F.col("_pl")] if has_patches else []),
-        )
+        # classify, projecting the written columns in file order
+        out_cols = [*key, *payload, "seq", "deleted", "_action", "_cn", "_bucket"]
+        classify = [
+            *qkey,
+            *[f"_w.{q(p)} AS {q(p)}" for p in payload],
+            "_w.seq AS seq", "_w.deleted AS deleted",
+            f"{action} AS _action", "_cn",
+            "_bucket" if stats.fold == "union" else f"{bucket} AS _bucket",
+        ]
+        if has_patches:
+            # exact redeliveries collapse per (key, seq): the list is
+            # sorted, so the LAST entry of each seq run is its max struct
+            classify.append(
+                "filter(_pl, (_e, _i) -> coalesce(_e.seq != CASE WHEN"
+                " _i + 1 < size(_pl) THEN element_at(_pl, _i + 2).seq END,"
+                " true)) AS _pl"
+            )
+        merged = merged.selectExpr(*classify)
 
         # -- 4. write. ``_action``/``_cn``/``_bucket`` are written INTO the
         #    data files (readers never see them: reads apply the manifest
@@ -606,38 +591,30 @@ def merge_batch(
         #    and the ledger is derived from the durable output itself
         #    (self-auditing). Patch generations are written in the same
         #    files as the winners (module docstring step 4).
-        out_cols = [*key, *payload, "seq", "deleted", "_action", "_cn", "_bucket"]
+        #    The Observation sees every merged row, carries included
+        #    (change-side distinct keys are exact: no MOR undercount).
         obs = Observation(f"merge-{stream_id}-{epoch_id}")
-        merged = merged.observe(
-            obs,
-            F.sum(F.when(F.col("_action") == "insert", 1).otherwise(0)).alias("ins"),
-            F.sum(F.when(F.col("_action") == "update", 1).otherwise(0)).alias("upd"),
-            F.sum(F.when(F.col("_action") == "delete", 1).otherwise(0)).alias("del"),
-            # change-side distinct keys (carries included — the pre-filter
-            # node sees every merged row, fixing the MOR undercount)
-            F.sum(F.when(F.col("_cn") >= 1, 1).otherwise(0)).alias("dedup"),
-            *([F.sum(F.size("_pl")).alias("pat")] if has_patches else []),
-        )
+        metrics = _COUNTS + (["sum(size(_pl)) AS pat"] if has_patches else [])
+        merged = merged.observe(obs, *map(F.expr, metrics))
         if has_patches:
             # one row per key (its winner) plus one PARTIAL generation
             # per deduplicated patch; Generate is a narrow operator, so
             # the rows stay in the aggregate's bucket partition. Patch
             # rows carry _cn = 0: the ledger's per-bucket deduped count
             # is of full-image keys.
-            def patch_row(e):
-                val = {c: F.col(c) for c in (*key, "_bucket")}
-                val.update({c: e[c] for c in (*payload, "seq")})
-                val.update(deleted=F.lit(False), _action=F.lit("patch"),
-                           _cn=F.lit(0).cast("long"))
-                return F.struct(*[val[c].alias(c) for c in out_cols])
-
-            merged = merged.select(F.inline(F.concat(
-                F.array(F.struct(*out_cols)), F.transform("_pl", patch_row)
-            )))
+            patch = {c: q(c) for c in (*key, "_bucket")}
+            patch.update({c: f"_e.{q(c)}" for c in (*payload, "seq")})
+            patch.update(deleted="false", _action="'patch'", _cn="CAST(0 AS BIGINT)")
+            patch_row = ", ".join(f"{patch[c]} AS {q(c)}" for c in out_cols)
+            winner_row = ", ".join(q(c) for c in out_cols)
+            merged = merged.selectExpr(
+                f"inline(concat(array(struct({winner_row})),"
+                f" transform(_pl, _e -> struct({patch_row}))))"
+            )
         # Only the delta rows are written; 'carry' (target won / seq
         # tie) rewrites nothing. Appended files join the fold at read
         # time.
-        to_write = merged.where(F.col("_action") != "carry").select(*out_cols)
+        to_write = merged.where("_action != 'carry'")
 
         if os.environ.get("MXETL_CAPTURE_PLAN"):
             # test/triage hook: stash the write plan so plan-shape tests can

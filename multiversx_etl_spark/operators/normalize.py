@@ -25,6 +25,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql.types import ArrayType, StringType, StructType
 
+from multiversx_etl_spark.lake.table import quote_ident
+
 
 def drop_volatile_columns(df: DataFrame, prefixes: tuple[str, ...] = ("api_", "nft_")) -> DataFrame:
     """Drop columns whose name starts with a volatile prefix
@@ -80,12 +82,14 @@ def canonicalize_content(content: pd.Series) -> pd.Series:
     return s.str.replace(r"[ \t]+(?=\n|\Z)", "", regex=True)
 
 
-def canonicalize_content_expr(col) -> "F.Column":
-    """JVM-side canonicalization, byte-equal to ``canonicalize_content``
-    (Java ``$`` in (?=\\n|$) ≡ Python ``\\Z`` here since ``\\n`` is the
-    alternative): whole-stage-codegen, no Arrow round trip."""
-    return F.regexp_replace(
-        F.regexp_replace(col, "\r\n|\r", "\n"), "[ \t]+(?=\n|$)", ""
+def canonicalize_content_expr(name: str = "content") -> "F.Column":
+    """JVM-side canonicalization of column ``name``, byte-equal to
+    ``canonicalize_content`` (Java ``$`` in (?=\\n|$) ≡ Python ``\\Z`` here
+    since ``\\n`` is the alternative): whole-stage-codegen, no Arrow round
+    trip, one SQL expression (one JVM call)."""
+    return F.expr(
+        rf"regexp_replace(regexp_replace({quote_ident(name)}, '\r\n|\r', '\n'),"
+        r" '[ \t]+(?=\n|$)', '')"
     )
 
 
@@ -102,7 +106,7 @@ def normalize_change_events(df: DataFrame) -> DataFrame:
     if array_str_cols:
         df = scrub_null_array_elements(df, array_str_cols)
     if "content" in df.columns:
-        df = df.withColumn("content", canonicalize_content_expr(F.col("content")))
+        df = df.withColumn("content", canonicalize_content_expr())
     return df
 
 

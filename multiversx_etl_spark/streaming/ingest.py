@@ -473,7 +473,7 @@ def bootstrap_snapshot(
     # same schema-evolution rule as merge_batch: snapshot columns absent
     # from the table schema APPEND (a truncate-reload over an evolved
     # declared schema must not silently drop the new columns' values)
-    evolved = evolve_schema(m.schema, snapshot, m.key_columns)
+    evolved = evolve_schema(m.schema, snapshot.schema, m.key_columns)
     cols = [F.col(c) for c in m.key_columns]
     seq = (F.col(seq_column) if seq_column and seq_column in snapshot.columns else F.lit(0))
     cols.append(seq.cast("long").alias("seq"))

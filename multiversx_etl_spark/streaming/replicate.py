@@ -60,7 +60,7 @@ def reseed_replica(src: LakeTable, dst: LakeTable, stream_id: str = "replica") -
         )
     key = list(dm.key_columns)
     folded, orphans = src._finalize_fold(sm, None, dm.num_buckets)
-    evolved = evolve_schema(dm.schema, folded.drop("_colseq", "_bucket"), key)
+    evolved = evolve_schema(dm.schema, folded.schema, key)
 
     def _conform(df):
         cols = [

@@ -401,7 +401,7 @@ def test_canonicalize_expr_matches_arrow_udf(spark):
     df = spark.createDataFrame([(c,) for c in cases], "content string")
     rows = df.select(
         canonicalize_content("content").alias("udf"),
-        canonicalize_content_expr(F.col("content")).alias("expr"),
+        canonicalize_content_expr("content").alias("expr"),
     ).collect()
     for r in rows:
         assert r["udf"] == r["expr"], (repr(r["udf"]), repr(r["expr"]))
